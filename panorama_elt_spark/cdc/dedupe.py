@@ -1,27 +1,15 @@
-"""Last-writer-wins dedup: N change events per key → the max-LSN event.
+"""Last-writer-wins dedup spelled out as a window: N change events per
+key → the max-LSN event.
 
-This is the engine's core operator (SURVEY.md §2.8): it generalizes the
-reference's "re-extract the whole partition and overwrite it" change unit
-(``mysql_datasource.py:270-301``, README.md:287) to row-grain LWW.
-
-Three physical strategies, all semantically identical:
-
-* ``lww_dedupe_agg`` — ``groupBy(keys).agg(max_by(struct(payload), lsn))``.
-  **The default.** Unlike a window, a hash aggregate gets *map-side
-  partial aggregation*: each input partition collapses its local rows per
-  key before the shuffle, so a key with 10^6 updates ships ≤ one row per
-  map partition — the shuffle is bounded by (#keys × #map partitions),
-  not by event count, and hot keys are largely pre-collapsed. This is the
-  plan you want at 10^10 events.
-* ``lww_dedupe_window`` — ``row_number() over (partition by keys order by
-  lsn desc) = 1``. Shuffles *every* event to its key's reducer; kept as
-  the reference semantics spelled out (BASELINE.json north_star) and for
-  oracle cross-checks.
-* ``lww_dedupe_salted`` — two-stage windowed dedup with a salt term in
-  the first-stage partition key (SURVEY.md §7.4(2)): stage 1 dedups per
-  (key, salt) spreading a hot key over ``n_salt`` reducers, stage 2
-  dedups the ≤ n_salt survivors per key. Use when window semantics are
-  required *and* keys are skewed.
+This generalizes the reference's "re-extract the whole partition and
+overwrite it" change unit (``mysql_datasource.py:270-301``, README.md:287)
+to row-grain LWW (SURVEY.md §2.8). The engine itself never runs it: every
+read, merge and change feed folds through ``lakehouse/fold.py``
+(``lww_fold``, a partially aggregated ``max_by``, and its Arrow twin).
+``lww_dedupe_window`` — ``row_number() over (partition by keys order by
+lsn desc) = 1`` — is the independent reference semantics
+(BASELINE.json north_star) that ``expected_final_state`` and the tests
+check the fold against.
 
 Ties: LSN is a unique total order by contract; duplicates (at-least-once
 delivery) share both LSN and payload, so any winner is identical.
@@ -30,15 +18,6 @@ delivery) share both LSN and payload, so any winner is identical.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-
-
-def lww_dedupe_agg(
-    df: DataFrame, key_cols: list[str], lsn_col: str = "lsn"
-) -> DataFrame:
-    payload = [c for c in df.columns if c not in key_cols]
-    packed = F.max_by(F.struct(*[F.col(c) for c in payload]), F.col(lsn_col)).alias("__w")
-    out = df.groupBy(*key_cols).agg(packed)
-    return out.select(*key_cols, *[F.col(f"__w.{c}").alias(c) for c in payload])
 
 
 def lww_dedupe_window(
@@ -50,26 +29,3 @@ def lww_dedupe_window(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def lww_dedupe_salted(
-    df: DataFrame,
-    key_cols: list[str],
-    lsn_col: str = "lsn",
-    n_salt: int = 16,
-) -> DataFrame:
-    """Two-stage salted dedup for skewed keys.
-
-    Stage 1 partitions by (key, salt) where salt = hash(lsn) % n_salt —
-    deterministic, uniform, and independent of the key — so a hot key's
-    events split across n_salt reducers. Stage 2 runs the plain window on
-    the ≤ n_salt survivors per key (tiny input, skew gone).
-    """
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(n_salt)))
-    w1 = Window.partitionBy(*key_cols, "__salt").orderBy(F.col(lsn_col).desc())
-    stage1 = (
-        salted.withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__salt")
-    )
-    return lww_dedupe_window(stage1, key_cols, lsn_col)

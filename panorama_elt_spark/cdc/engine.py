@@ -86,16 +86,12 @@ class CdcEngine:
         self,
         table: LakeTable,
         schema_registry: dict[int, TableSchema] | None = None,
-        pre_dedupe=None,
         strategy: str = "auto",
         compact_every: int | None = None,
         compact_async: bool = False,
     ):
         self.table = table
         self.registry = schema_registry or {}
-        # None → the merge's fused dedup+merge aggregate (the fast path);
-        # a dedupe fn (e.g. lww_dedupe_salted) forces a standalone pass.
-        self.pre_dedupe = pre_dedupe
         # "auto" | "fused" | "bucket_local" | "append_delta" — merge.py doc
         self.strategy = strategy
         # merge-on-read housekeeping: fold deltas into base files after
@@ -218,7 +214,6 @@ class CdcEngine:
             self.table,
             batch_df,
             batch_id,
-            pre_dedupe=self.pre_dedupe,
             strategy=self.strategy,
             stats=stats,
         )
@@ -242,8 +237,7 @@ class CdcEngine:
         writes; the serial path per batch is one merge job + one
         commit. Concurrent Spark jobs from two threads share the
         context safely (separate job groups in the FIFO scheduler).
-        Disabled when a standalone ``pre_dedupe`` is forced, or via
-        ``PANORAMA_PREFETCH_STATS=0``. Produces byte-identical state
+        Disabled via ``PANORAMA_PREFETCH_STATS=0``. Produces byte-identical state
         either way — the prefetched aggregate is the exact same plan
         over the exact same rows.
 
@@ -260,10 +254,7 @@ class CdcEngine:
         """
         t0 = time.monotonic()
         report = ReplayReport()
-        prefetch = (
-            self.pre_dedupe is None
-            and os.environ.get("PANORAMA_PREFETCH_STATS", "1") != "0"
-        )
+        prefetch = os.environ.get("PANORAMA_PREFETCH_STATS", "1") != "0"
         # without evolution the schema/keys/buckets are constant across
         # the replay — capture once so the prefetch thread never races a
         # snapshot commit; key column NAMES are stable across epochs

@@ -10,11 +10,13 @@ Semantics (the reference's upsert primitive generalized to row grain,
 Physical plan — ONE shuffle per batch, tuned for 10^10-event scale:
 
 1. **Fused dedup+merge aggregate.** Existing target rows (only the
-   affected buckets, tagged ``lsn = -1``) are unioned with the raw batch
-   events, then a single ``groupBy(keys).agg(max_by(payload, lsn))``
+   affected buckets, at their stored ``__op``/``__lsn``) are unioned
+   with the raw batch events, then one ``lww_fold``
+   (``lakehouse/fold.py``: ``groupBy(keys).agg(max_by(payload, lsn))``)
    resolves duplicates, update chains, AND the merge match in one
-   operator: the max-LSN row per key wins; if it is a delete the key is
-   dropped; if it is the tag row the target row survives unchanged.
+   operator: the max-LSN row per key wins; a delete winner stays as a
+   hidden tombstone row; a resident row no event outranks survives
+   unchanged.
    The hash aggregate gets *map-side partial aggregation*, so a hot key
    collapses to ≤ one row per map partition before the exchange — the
    built-in answer to key skew (no join ever sees the raw event stream).
@@ -62,14 +64,12 @@ batch): only the *events* go through the dedup exchange; resident rows
 never enter a shuffle. Because the dedup exchange is pinned to the
 bucket layout, task i holds exactly the deduped events of bucket i, so
 a vectorized ``mapInArrow`` stage reads bucket i's parquet file(s)
-directly inside the task and applies the merge with Arrow/pandas
-kernels (anti-join on keys + concat — zero per-row Python). At steady
-state a CDC table is orders of magnitude larger than a batch, so not
-shuffling the resident side is the dominant saving; with 1000
-executors it also removes the all-to-all resident exchange entirely.
-Falls back to the fused-aggregate strategy when affected buckets hold
-files written under older schema versions (the JVM path maps them by
-field id on read).
+directly inside the task — projected by field id, deltas included —
+and folds them with the events through ``lww_winners``, the Arrow form
+of the same fold (zero per-row Python). At steady state a CDC table is
+orders of magnitude larger than a batch, so not shuffling the resident
+side is the dominant saving; with 1000 executors it also removes the
+all-to-all resident exchange entirely.
 
 Third strategy — **merge-on-read** (``strategy="append_delta"``): the
 deduped batch is appended as *delta* files (schema + ``__op``/``__lsn``)
@@ -82,15 +82,14 @@ files. Copy-on-write (fused/bucket_local) stays the read-optimized
 default.
 
 Ordering note: every strategy resolves cross-batch collisions by TRUE
-global LSN order. The state files persist each row's winner LSN
-(``__lsn``); resident rows enter the CoW fold at that stored LSN (-1
-for files written before it existed — those keep the legacy
-arrival-order semantics until rewritten), and merge-on-read keeps real
-LSNs in the delta files and folds base rows in at their stored LSN at
-read time. Batches may therefore arrive with overlapping LSN ranges —
-the streaming tail's multi-epoch file splits do — and the final state
-is the same LWW answer the aligned ``CdcEngine.replay`` contract
-produces.
+global LSN order. Every data file persists each row's ``__op`` and
+``__lsn`` (the winner's for merge output, -1 for plain appends, which
+every event outranks); resident rows enter the CoW fold at that stored
+LSN, and merge-on-read keeps real LSNs in the delta files and folds
+base rows in at their stored LSN at read time. Batches may therefore
+arrive with overlapping LSN ranges — the streaming tail's multi-epoch
+file splits do — and the final state is the same LWW answer the aligned
+``CdcEngine.replay`` contract produces.
 """
 
 from __future__ import annotations
@@ -102,6 +101,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..lakehouse.fold import lww_fold
 from ..lakehouse.snapshot import CommitConflict
 from ..lakehouse.table import LakeTable, bucket_expr, root_is_shared_posix
 
@@ -258,100 +258,51 @@ def _pinned_shuffle(spark, n_partitions: int):
 
 
 def _bucket_local_map_fn(
-    bucket_paths: dict[int, list[str]],
+    root: str,
+    bucket_files: dict[int, list[tuple[str, int, str]]],
     key_cols: list[str],
-    out_names: list[str],
-    op_col: str,
+    target_fields: list[tuple[int, str, str, object]],
+    histories: dict[int, list[tuple[int, str, str]]],
     arrow_schema,
     max_batch_rows: int = 1 << 16,
 ):
     """Build the mapInArrow kernel for the bucket-local merge.
 
     Each input partition carries the LWW-deduped events of exactly one
-    bucket (the dedup exchange is pinned to the bucket layout). The
-    kernel reads that bucket's resident parquet file(s) locally, drops
-    resident rows *genuinely overwritten* by the batch — the event's
-    LSN must be ≥ the resident row's stored winner LSN (``__lsn``,
-    -1 for files predating it), so out-of-order batches resolve by true
-    LSN, matching the fused path — appends the applied events (delete
-    winners become tombstone rows, ``__op='D'``), and streams Arrow
-    batches back out. ``out_names`` includes ``__op``/``__lsn``;
-    resident rows keep their stored values, applied events carry their
-    own. Everything is Arrow/pandas kernels — no per-row Python.
+    bucket (the dedup exchange is pinned to the bucket layout), in
+    ``arrow_schema`` plus the bucket id ``__b``. The kernel folds them
+    into that bucket in four Arrow steps: load the bucket's files
+    projected onto the current schema by field id (merge-on-read deltas
+    included), concat the events, keep the LWW winner per key
+    (``lww_winners`` — the fused path's ``lww_fold`` in Arrow form, so
+    out-of-order batches resolve by true LSN and delete winners stay as
+    tombstone rows), and stream the winners back out.
     """
 
     def fn(batches):
-        import pandas as pd
         import pyarrow as pa
-        import pyarrow.parquet as pq
+        import pyarrow.compute as pc
 
-        # ArrowDtype end-to-end: exact types, null-safe (an int32 column
-        # with nulls never decays to float64 on the pandas hop)
-        dfs = [b.to_pandas(types_mapper=pd.ArrowDtype) for b in batches]
-        if not dfs:
+        from panorama_elt_spark.lakehouse.fold import load_projected, lww_winners
+
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
             return
-        ev = pd.concat(dfs, ignore_index=True) if len(dfs) > 1 else dfs[0]
-        if ev.empty:
-            return
-        bucket = int(ev["__b"].iloc[0])
+        ev = pa.Table.from_batches(batches)
         # partition-layout invariant: one bucket per task (violated only
         # if an exchange re-planned under us — fail loudly, not silently)
-        if not (ev["__b"] == bucket).all():
+        buckets = pc.unique(ev["__b"]).to_pylist()
+        if len(buckets) != 1:
             raise RuntimeError("bucket-local merge: mixed buckets in one partition")
-        parts = []
-        paths = bucket_paths.get(bucket, [])
-        ev_keep = pd.Series(True, index=ev.index)
-        if paths:
-            res_parts = []
-            for p in paths:
-                pf = pq.ParquetFile(p)
-                have = set(pf.schema_arrow.names)
-                cols = [c for c in out_names if c in have]
-                t = pf.read(columns=cols)
-                if "__op" not in t.column_names:
-                    # file predates stored system columns: legacy tags
-                    t = t.append_column("__op", pa.array(["E"] * len(t), pa.string()))
-                if "__lsn" not in t.column_names:
-                    t = t.append_column("__lsn", pa.array([-1] * len(t), pa.int64()))
-                res_parts.append(t.select(out_names))
-            res_tbl = pa.concat_tables(res_parts)
-            res = res_tbl.to_pandas(types_mapper=pd.ArrowDtype)
-            res["__op"] = res["__op"].fillna("E")
-            res["__lsn"] = res["__lsn"].fillna(-1)
-            # pandas merges (not MultiIndex.isin) so NULL keys match
-            # like Spark's groupBy; per-key LSN comparison both ways:
-            # the resident (incl. tombstones) survives iff strictly
-            # newer than the batch's winner for its key, the event
-            # applies iff ≥ the resident.
-            evk = ev[key_cols + ["__evl"]].drop_duplicates(subset=key_cols)
-            m = res[key_cols].merge(evk, on=key_cols, how="left")
-            m_evl = m["__evl"].astype("float64").to_numpy()  # NaN = no event
-            res_lsn = res["__lsn"].astype("float64").to_numpy()
-            import numpy as np
-
-            res_keep = np.isnan(m_evl) | (res_lsn > m_evl)
-            parts.append(res[res_keep])
-            resk = res[key_cols + ["__lsn"]].rename(columns={"__lsn": "__rl"})
-            m2 = ev[key_cols].merge(resk, on=key_cols, how="left")
-            m2_rl = m2["__rl"].astype("float64").to_numpy()
-            ev_lsn = ev["__evl"].astype("float64").to_numpy()
-            ev_keep = pd.Series(
-                np.isnan(m2_rl) | (ev_lsn >= m2_rl), index=ev.index
-            )
-        # applied delete winners become tombstone rows (kept, hidden
-        # from user reads) so a later out-of-order update cannot
-        # resurrect them
-        live = ev[ev_keep.to_numpy()]
-        if not live.empty:
-            live = live.rename(columns={op_col: "__op", "__evl": "__lsn"})
-            parts.append(live[out_names])
-        parts = [p for p in parts if not p.empty]
-        if not parts:
-            return
-        out = pd.concat(parts, ignore_index=True)[out_names] if len(parts) > 1 else parts[0][out_names]
-        tbl = pa.Table.from_pandas(out, schema=arrow_schema, preserve_index=False)
-        for rb in tbl.to_batches(max_chunksize=max_batch_rows):
-            yield rb
+        resident = load_projected(
+            root, bucket_files.get(buckets[0], []), histories, target_fields
+        )
+        names = arrow_schema.names
+        both = pa.concat_tables(
+            [ev.select(names).cast(arrow_schema), resident.select(names).cast(arrow_schema)]
+        )
+        out = lww_winners(both, key_cols).select(names).cast(arrow_schema)
+        yield from out.to_batches(max_chunksize=max_batch_rows)
 
     return fn
 
@@ -393,7 +344,6 @@ def merge_batch(
     *,
     op_col: str = "op",
     lsn_col: str = "lsn",
-    pre_dedupe=None,
     strategy: str = "auto",
     stats: BatchStats | None = None,
 ) -> MergeStats:
@@ -404,20 +354,11 @@ def merge_batch(
         if stats is not None:
             stats.per_key.unpersist()
         return MergeStats(batch_id=batch_id, skipped=True, snapshot_version=snap.version)
-    if stats is not None and pre_dedupe is not None:
-        # invalid call, but the caller handed us a cached aggregate —
-        # release it before raising (every exit path must unpersist)
-        stats.per_key.unpersist()
-        raise ValueError("precomputed stats cannot be combined with pre_dedupe")
 
     keys = snap.key_cols
-    data_cols = snap.schema.names
-    payload_cols = [c for c in data_cols if c not in keys]
+    payload_cols = [c for c in snap.schema.names if c not in keys]
 
     events = batch_events(batch_df, snap, op_col, lsn_col)
-    if pre_dedupe is not None:
-        # compat/bench path: explicit standalone dedupe before the merge
-        events = pre_dedupe(events, keys, lsn_col)
 
     if stats is None:
         stats = compute_batch_stats(events, snap, op_col, lsn_col)
@@ -436,21 +377,15 @@ def merge_batch(
     # everything below may raise (bad strategy, failed write/commit);
     # the finally guarantees the cached per-key stats never leak
     try:
-        # strategy resolution: the bucket-local path needs every affected
-        # bucket's files at the current schema version (it reads them with
-        # pyarrow, bypassing the JVM field-id mapping) and only pays off
-        # when the resident side outweighs the batch.
         strategy = _resolve_requested_strategy(strategy)
         # O(touched) metadata: loads only the manifests covering the
         # affected buckets, never the whole table's file inventory
         affected_files = snap.files_in_buckets(affected)
+        rows_in_total = sum(int(r["rows_in"]) for r in per_bucket.values())
+        # size hint for the write path choice: small outputs skip the
+        # Arrow task-writer (worker-spawn overhead dominates there)
+        resident_rows_total = sum(f.rows for f in affected_files)
         if strategy == "auto":
-            uniform_schema = all(
-                f.schema_version == snap.schema.schema_version and f.kind == "base"
-                for f in affected_files
-            )
-            resident_rows = sum(f.rows for f in affected_files)
-            rows_in_total = sum(int(r["rows_in"]) for r in per_bucket.values())
             # bucket_local removes the resident-side exchange — a win only
             # where the exchange crosses executor JVMs. Under plain local[N]
             # the shuffle is an in-memory copy and the Arrow hop costs more
@@ -462,19 +397,11 @@ def merge_batch(
             single_jvm = master == "local" or master.startswith("local[")
             strategy = (
                 "bucket_local"
-                if uniform_schema
-                and not single_jvm
-                and resident_rows > rows_in_total
+                if not single_jvm
+                and resident_rows_total > rows_in_total
                 and root_is_shared_posix(table.root)
                 else "fused"
             )
-        elif strategy == "bucket_local" and any(
-            f.schema_version != snap.schema.schema_version or f.kind != "base"
-            for f in affected_files
-        ):
-            # correctness guard: old-version files need JVM field-id mapping,
-            # and delta files need the read path's LWW fold
-            strategy = "fused"
 
         # Late materialization (all strategies): when the batch has
         # significant key duplication (CDC update chains — the common case),
@@ -488,11 +415,7 @@ def merge_batch(
         # fingerprints (xxhash64), so its size is n_keys × ~32 B
         # regardless of key width; PANORAMA_PREFILTER_MAX_KEYS stays as
         # a secondary row guard.
-        rows_in_total = sum(int(r["rows_in"]) for r in per_bucket.values())
         n_keys = int(sum(int(r["keys"]) for r in per_bucket.values()))
-        # size hint for the write path choice: small outputs skip the
-        # Arrow task-writer (worker-spawn overhead dominates there)
-        resident_rows_total = sum(f.rows for f in affected_files)
         prefilter_max = int(os.environ.get("PANORAMA_PREFILTER_MAX_KEYS", "4000000"))
         prefilter_max_bytes = int(
             os.environ.get("PANORAMA_PREFILTER_MAX_BYTES", str(256 << 20))
@@ -539,9 +462,7 @@ def merge_batch(
             )
             timer.lap("winner_prefilter_plan")
 
-        winner = F.max_by(
-            F.struct(*[F.col(c) for c in payload_cols], F.col(op_col)), F.col(lsn_col)
-        ).alias("__w")
+        events = events.withColumnsRenamed({op_col: "__op", lsn_col: "__lsn"})
         new_version = snap.version + 1
         replaced_buckets = affected
         if strategy == "append_delta":
@@ -552,18 +473,8 @@ def merge_batch(
             # O(touched buckets). Readers fold deltas (LakeTable.read);
             # LakeTable.compact() folds them into base files.
             with _pinned_shuffle(table.spark, snap.n_buckets):
-                deduped = (
-                    events.groupBy(*keys)
-                    .agg(winner, F.max(lsn_col).alias("__lsn"))
-                    .select(
-                        *keys,
-                        *[F.col(f"__w.{c}").alias(c) for c in payload_cols],
-                        F.col(f"__w.{op_col}").alias("__op"),
-                        F.col("__lsn"),
-                    )
-                )
                 new_files = table.write_bucket_files(
-                    deduped,
+                    lww_fold(events, keys, payload_cols),
                     new_version,
                     pre_partitioned=True,
                     kind="delta",
@@ -571,43 +482,29 @@ def merge_batch(
                 )
             replaced_buckets = set()  # pure append: nothing replaced
         elif strategy == "bucket_local":
-            from pyspark.sql import types as T
             from pyspark.sql.pandas.types import to_arrow_schema
 
-            bucket_paths: dict[int, list[str]] = {}
+            from ..lakehouse.fold import history_fields, target_fields
+
+            bucket_files: dict[int, list[tuple[str, int, str]]] = {}
             for f in affected_files:
-                bucket_paths.setdefault(int(f.bucket), []).append(
-                    os.path.join(table.root, f.path)
+                bucket_files.setdefault(int(f.bucket), []).append(
+                    (f.path, f.schema_version, f.kind)
                 )
-            out_struct = T.StructType(
-                list(snap.schema.to_struct().fields)
-                + [
-                    T.StructField("__op", T.StringType()),
-                    T.StructField("__lsn", T.LongType()),
-                ]
-            )
-            out_names = list(data_cols) + ["__op", "__lsn"]
             with _pinned_shuffle(table.spark, snap.n_buckets):
-                deduped = (
-                    events.groupBy(*keys)
-                    .agg(winner, F.max(lsn_col).alias("__evl"))
-                    .select(
-                        *keys,
-                        *[F.col(f"__w.{c}").alias(c) for c in payload_cols],
-                        F.col(f"__w.{op_col}").alias(op_col),
-                        F.col("__evl"),
-                    )
-                    .withColumn("__b", bucket_expr(keys, snap.n_buckets))
-                )
-                merged = deduped.mapInArrow(
+                deduped = lww_fold(events, keys, payload_cols)
+                merged = deduped.withColumn(
+                    "__b", bucket_expr(keys, snap.n_buckets)
+                ).mapInArrow(
                     _bucket_local_map_fn(
-                        bucket_paths,
+                        table.root,
+                        bucket_files,
                         list(keys),
-                        out_names,
-                        op_col,
-                        to_arrow_schema(out_struct),
+                        target_fields(snap.schema),
+                        history_fields(snap.schema_history),
+                        to_arrow_schema(deduped.schema),
                     ),
-                    out_struct,
+                    deduped.schema,
                 )
                 new_files = table.write_bucket_files(
                     merged,
@@ -617,34 +514,17 @@ def merge_batch(
                 )
         else:
             # existing rows of the affected buckets at their *stored*
-            # system columns (op 'E'/-1 for rows written before they
-            # were persisted): a batch event beats the resident row only
+            # system columns: a batch event beats the resident row only
             # when genuinely newer, so out-of-order batches — the
             # streaming tail's multi-epoch file splits — resolve by true
             # LSN instead of arrival order. Delete winners are KEPT as
             # hidden tombstone rows (user reads drop them) so a late
             # update cannot resurrect a newer delete; the winner's
             # (__op, __lsn) are written back for the next merge/read.
-            resident = table.read(buckets=affected, with_lsn=True).select(
-                *keys,
-                *payload_cols,
-                F.col("__op").alias(op_col),
-                F.col("__lsn").alias(lsn_col),
-            )
-            unioned = resident.unionByName(events)
+            resident = table.read(buckets=affected, with_lsn=True)
             with _pinned_shuffle(table.spark, snap.n_buckets):
-                merged = (
-                    unioned.groupBy(*keys)
-                    .agg(winner, F.max(lsn_col).alias("__lsn"))
-                    .select(
-                        *keys,
-                        *[F.col(f"__w.{c}").alias(c) for c in payload_cols],
-                        F.col(f"__w.{op_col}").alias("__op"),
-                        F.col("__lsn"),
-                    )
-                )
                 new_files = table.write_bucket_files(
-                    merged,
+                    lww_fold(resident.unionByName(events), keys, payload_cols),
                     new_version,
                     pre_partitioned=True,
                     size_hint_rows=resident_rows_total + n_keys,

@@ -1,6 +1,6 @@
 from .fileio import FileIO, InMemoryFileIO, LocalFileIO
 from .schema import Field, TableSchema, AddColumn, WidenColumn, RenameColumn, diff_schemas
-from .snapshot import Snapshot, CommitConflict
+from .snapshot import Snapshot, CommitConflict, UnsupportedFormatVersion
 from .table import LakeTable
 
 __all__ = [
@@ -12,6 +12,7 @@ __all__ = [
     "diff_schemas",
     "Snapshot",
     "CommitConflict",
+    "UnsupportedFormatVersion",
     "LakeTable",
     "FileIO",
     "LocalFileIO",

@@ -46,20 +46,26 @@ from .fileio import FileIO, LocalFileIO
 from .schema import TableSchema
 
 
+# format 3: every data file carries the ``__op``/``__lsn`` system columns
+# (lakehouse/fold.py), so no reader has to invent them for old files
+FORMAT_VERSION = 3
+
+
 class CommitConflict(RuntimeError):
     """Another writer committed the same version first."""
 
 
-def diff_candidate_buckets(snap_from: "Snapshot", snap_to: "Snapshot") -> set[int] | None:
+class UnsupportedFormatVersion(ValueError):
+    """A snapshot document older than ``FORMAT_VERSION``."""
+
+
+def diff_candidate_buckets(snap_from: "Snapshot", snap_to: "Snapshot") -> set[int]:
     """Manifest-level pruning for snapshot diffs: manifests are
     immutable, so a bucket can only differ if some manifest covering it
     appears on one side and not the other. Returns the candidate bucket
-    set — O(manifest-list compare), no manifest reads — or ``None`` when
-    a legacy inline snapshot forces a full compare. Pure metadata: used
-    by ``LakeTable`` and by the ``panorama`` data source's change-feed
-    planner (which runs without a SparkSession)."""
-    if snap_from.inline_files is not None or snap_to.inline_files is not None:
-        return None
+    set — O(manifest-list compare), no manifest reads. Pure metadata:
+    used by ``LakeTable`` and by the ``panorama`` data source's
+    change-feed planner (which runs without a SparkSession)."""
     paths_from = {m.path for m in snap_from.manifests}
     paths_to = {m.path for m in snap_to.manifests}
     candidates: set[int] = set()
@@ -78,20 +84,10 @@ def snapshot_file_delta(
     """(removed, added) data files between two snapshots, computed over
     the manifest-pruned candidate buckets only."""
     candidates = diff_candidate_buckets(snap_from, snap_to)
-    if candidates is not None and not candidates:
+    if not candidates:
         return [], []
-    f_from = {
-        f.path: f
-        for f in (
-            snap_from.files if candidates is None else snap_from.files_in_buckets(candidates)
-        )
-    }
-    f_to = {
-        f.path: f
-        for f in (
-            snap_to.files if candidates is None else snap_to.files_in_buckets(candidates)
-        )
-    }
+    f_from = {f.path: f for f in snap_from.files_in_buckets(candidates)}
+    f_to = {f.path: f for f in snap_to.files_in_buckets(candidates)}
     removed = [f for p, f in f_from.items() if p not in f_to]
     added = [f for p, f in f_to.items() if p not in f_from]
     return removed, added
@@ -102,13 +98,12 @@ def snapshot_changed_buckets(snap_from: "Snapshot", snap_to: "Snapshot") -> set[
     are immutable, so an identical file set ⇒ identical rows — the exact
     pruning set for a change-feed scan."""
     candidates = diff_candidate_buckets(snap_from, snap_to)
-    if candidates is not None and not candidates:
+    if not candidates:
         return set()
 
     def by_bucket(snap) -> dict[int, tuple[str, ...]]:
-        files = snap.files if candidates is None else snap.files_in_buckets(candidates)
         d: dict[int, list[str]] = {}
-        for f in files:
+        for f in snap.files_in_buckets(candidates):
             d.setdefault(f.bucket, []).append(f.path)
         return {b: tuple(sorted(ps)) for b, ps in d.items()}
 
@@ -123,7 +118,7 @@ class DataFile:
     rows: int
     schema_version: int
     # "base" = compacted row state; "delta" = merge-on-read change file
-    # (schema columns + __op/__lsn, folded into reads until compaction)
+    # (folded into reads until compaction); both carry __op/__lsn
     kind: str = "base"
     # zone map: stats_key -> [lower, upper, null_count] (see
     # lakehouse/filestats.py; keys are str(field_id) or "__lsn"; absent
@@ -215,9 +210,6 @@ class Snapshot:
     committed_at: float | None = None
     # set by SnapshotLog.commit when it writes the manifest-list file
     manifest_list_path: str | None = None
-    # legacy format_version-1 documents inline their file list; the
-    # first post-upgrade commit migrates them into manifests
-    inline_files: list[DataFile] | None = None
     # lazy-load context, bound by SnapshotLog (never serialized)
     _io: object = dc_field(default=None, repr=False, compare=False)
     _root: str | None = dc_field(default=None, repr=False, compare=False)
@@ -248,15 +240,11 @@ class Snapshot:
         """EVERY live data file — loads all manifests (full-scan /
         maintenance path). Incremental paths should use
         ``files_in_buckets`` so a batch only reads O(touched) metadata."""
-        if self.inline_files is not None:
-            return self.inline_files
         return [f for m in self.manifests for f in self.load_manifest(m)]
 
     def files_in_buckets(self, buckets: set[int]) -> list[DataFile]:
         """Files of the named buckets, reading only the manifests whose
         bucket group intersects them — the merge's metadata pruning."""
-        if self.inline_files is not None:
-            return [f for f in self.inline_files if f.bucket in buckets]
         out: list[DataFile] = []
         for m in self.manifests:
             if any(b in buckets for b in m.buckets):
@@ -265,20 +253,14 @@ class Snapshot:
 
     def total_rows(self) -> int:
         """Row total from manifest summaries alone (no manifest reads)."""
-        if self.inline_files is not None:
-            return sum(f.rows for f in self.inline_files)
         return sum(m.n_rows for m in self.manifests)
 
     def total_files(self) -> int:
-        if self.inline_files is not None:
-            return len(self.inline_files)
         return sum(m.n_files for m in self.manifests)
 
     def delta_buckets(self) -> set[int]:
         """Buckets holding merge-on-read delta files; reads only the
         manifests whose summary says they hold deltas."""
-        if self.inline_files is not None:
-            return {f.bucket for f in self.inline_files if f.kind == "delta"}
         out: set[int] = set()
         for m in self.manifests:
             if "delta" in m.kinds:
@@ -289,7 +271,7 @@ class Snapshot:
 
     def to_json(self) -> str:
         doc = {
-            "format_version": 2,
+            "format_version": FORMAT_VERSION,
             "version": self.version,
             "schema": self.schema.to_dict(),
             "n_buckets": self.n_buckets,
@@ -316,7 +298,14 @@ class Snapshot:
     @staticmethod
     def from_json(text: str) -> "Snapshot":
         d = json.loads(text)
-        snap = Snapshot(
+        fmt = d.get("format_version", 1)
+        if fmt < FORMAT_VERSION:
+            raise UnsupportedFormatVersion(
+                f"snapshot v{d.get('version')} has format_version {fmt}; this "
+                f"engine reads only format {FORMAT_VERSION}, where every data "
+                "file carries __op/__lsn"
+            )
+        return Snapshot(
             version=d["version"],
             schema=TableSchema.from_dict(d["schema"]),
             n_buckets=d["n_buckets"],
@@ -331,12 +320,8 @@ class Snapshot:
             lineage_files=d.get("lineage_files", []),
             batchid_files=d.get("batchid_files", []),
             committed_at=d.get("committed_at_unix"),
+            manifest_list_path=d.get("manifest_list"),
         )
-        if d.get("format_version", 1) >= 2:
-            snap.manifest_list_path = d.get("manifest_list")
-        else:  # legacy inline-file document
-            snap.inline_files = [DataFile.from_dict(f) for f in d.get("files", [])]
-        return snap
 
 
 class SnapshotLog:
@@ -404,10 +389,6 @@ class SnapshotLog:
                 f"expected parent version {expected_parent}, found {cur}"
             )
         snapshot.bind(self.io, self.root)
-        assert snapshot.inline_files is None, (
-            "legacy inline-file snapshots are read-only; build commits from "
-            "manifests (LakeTable migrates v1 parents on their next commit)"
-        )
         if snapshot.manifest_list_path is None:
             rel = os.path.join(
                 self.manifest_dir,

@@ -35,6 +35,7 @@ import threading as _threading
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .fileio import FileIO, LocalFileIO
+from .fold import lww_fold
 from .schema import TableSchema, spark_type
 from .snapshot import (
     CommitConflict,
@@ -42,7 +43,6 @@ from .snapshot import (
     ManifestEntry,
     Snapshot,
     SnapshotLog,
-    diff_candidate_buckets,
     snapshot_changed_buckets,
     snapshot_file_delta,
 )
@@ -75,11 +75,22 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
     return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
+def _appended_rows(df: DataFrame, snap: "Snapshot") -> DataFrame:
+    """``df`` as plain-append rows: the schema columns plus the system
+    columns every data file carries, at ``'E'``/-1 — older than any
+    change event, so a later merge or delta always outranks them."""
+    return df.select(
+        *snap.schema.names,
+        F.lit("E").alias("__op"),
+        F.lit(-1).cast("long").alias("__lsn"),
+    )
+
+
 def _stat_columns(snap: "Snapshot", df_columns: list[str]) -> list[tuple[str, str, str]]:
     """(column, ddl_type, stats_key) rows for the zone-map collectors:
     every orderable schema column present in the write, keyed by field
-    id (rename-safe), plus the merge-on-read ``__lsn`` bookkeeping
-    column keyed by its literal name.
+    id (rename-safe), plus the ``__lsn`` system column every file
+    carries, keyed by its literal name.
 
     Per-column opt-out (the Iceberg ``write.metadata.metrics.column.*``
     knob): table property or env ``PANORAMA_STATS_SKIP_COLS`` (comma
@@ -98,14 +109,11 @@ def _stat_columns(snap: "Snapshot", df_columns: list[str]) -> list[tuple[str, st
         ).split(",")
         if c.strip()
     }
-    out = [
+    return [
         (f.name, f.type, str(f.id))
         for f in snap.schema.fields
         if f.name in df_columns and f.type in ORDERABLE_TYPES and f.name not in skip
-    ]
-    if "__lsn" in df_columns:
-        out.append(("__lsn", "bigint", "__lsn"))
-    return out
+    ] + [("__lsn", "bigint", "__lsn")]
 
 
 def _prune_files_for_state(
@@ -117,13 +125,13 @@ def _prune_files_for_state(
     and file that holds the key, so a file whose key window excludes the
     predicate holds no contributing row. Payload predicates prune BASE
     files only, and only base files that cannot outrank a delta: a base
-    row folds in at its stored ``__lsn`` (-1 for files written before
-    LSNs were persisted), so in a bucket that holds deltas a base file
-    whose ``__lsn`` window reaches ≥ 0 may carry the true winner of a
-    key a *late* delta also names — pruning it would resurrect the
-    stale delta row. Legacy (-1) base files always lose ties to deltas,
-    and base files in delta-free buckets face no competition, so both
-    keep the old payload-pruning rule. Pruning a delta file is never
+    row folds in at its stored ``__lsn`` (-1 for plain appends), so in
+    a bucket that holds deltas a base file whose ``__lsn`` window
+    reaches ≥ 0 may carry the true winner of a key a *late* delta also
+    names — pruning it would resurrect the stale delta row. Appended
+    (-1) base files always lose ties to deltas, and base files in
+    delta-free buckets face no competition, so both keep the plain
+    payload-pruning rule. Pruning a delta file is never
     allowed on payload predicates (it could resurrect a superseded or
     deleted base row whose stale payload happens to match). Callers
     re-apply the full predicate on the DataFrame; pruning is
@@ -164,14 +172,15 @@ def _prune_files_for_state(
         if getattr(f, "bucket", None) not in delta_buckets:
             return False
         if not f.stats or "__lsn" not in f.stats:
-            # no __lsn window ⇒ the file predates stored LSNs: its rows
-            # fold at -1 and lose every tie to a delta — prunable
+            # every writer records an __lsn window, so only a file
+            # written without stats lacks one — and file_may_match
+            # keeps stats-less files whatever the predicates
             return False
         hi = decode_bound(f.stats["__lsn"][1], "bigint")
         if hi is None:
             return True  # undecodable window: conservative
         if hi < 0:
-            return False  # all rows tagged -1
+            return False  # only appended rows (-1): they lose every tie
         lo = delta_lo.get(getattr(f, "bucket", None))
         return lo is None or hi >= lo
 
@@ -650,11 +659,7 @@ class LakeTable:
         """Parent manifests minus ``replaced_buckets``: untouched
         manifests carry over as references (zero IO); manifests whose
         bucket group intersects the replacement are loaded, filtered
-        and re-chunked. A legacy inline-file parent migrates wholesale
-        here (its one post-upgrade O(table) commit)."""
-        if parent.inline_files is not None:
-            kept = [f for f in parent.inline_files if f.bucket not in replaced_buckets]
-            return self._write_manifests(kept)
+        and re-chunked."""
         out: list[ManifestEntry] = []
         for m in parent.manifests:
             if not (set(m.buckets) & replaced_buckets):
@@ -669,8 +674,10 @@ class LakeTable:
 
     @classmethod
     def load(cls, spark: SparkSession, root: str, io: FileIO | None = None) -> "LakeTable":
+        """Open an existing table; raises ``UnsupportedFormatVersion`` if
+        its current snapshot predates format 3."""
         table = cls(spark, root, io)
-        if not table.log.exists():
+        if table.log.read_current() is None:
             raise FileNotFoundError(f"no lake table at {root}")
         return table
 
@@ -701,9 +708,9 @@ class LakeTable:
 
         Merge-on-read: if the snapshot holds delta files (written by the
         ``append_delta`` strategy), they are folded in here — base rows
-        tagged ``__lsn = -1`` union the delta rows, one LWW aggregate
-        resolves the winner per key, delete markers drop. A compacted
-        table (no deltas) reads with zero shuffle, exactly as before.
+        at their stored ``__op``/``__lsn`` union the delta rows, one
+        ``lww_fold`` resolves the winner per key, tombstones drop. A
+        compacted table (no deltas) reads with zero shuffle.
         ``ref`` names a tag (``refs()``) instead of a numeric version."""
         if ref is not None:
             if version is not None:
@@ -831,10 +838,10 @@ class LakeTable:
         must cover every file's schema_version; any later snapshot does
         (history accumulates monotonically).
 
-        Base rows fold in at their *stored* system columns (``__op`` /
-        ``__lsn``, persisted by the merge since the out-of-order fix;
-        ``'E'`` / -1 for files predating it), so a delta or batch event
-        only outranks a base row when its LSN is genuinely newer, and a
+        Every file carries its rows' ``__op``/``__lsn`` (format 3: the
+        winner's op and LSN for merge output, the event's for deltas,
+        ``'E'``/-1 for plain appends), so a delta or batch event only
+        outranks a base row when its LSN is genuinely newer, and a
         delete winner survives as a hidden *tombstone* row that blocks
         late resurrections — the out-of-order arbitration the streaming
         tail's contract promises. User-facing reads drop tombstones;
@@ -847,66 +854,31 @@ class LakeTable:
         if file_filter is not None:
             files = [f for f in files if file_filter(f)]
         delta_files = [f for f in files if f.kind == "delta"]
-        # system columns are always read on base files: merge-written
-        # files may hold tombstone rows that a user read must drop
-        base = self._read_mapped(
-            proj,
-            [f for f in files if f.kind == "base"],
-            with_delta_cols=True,
-            coalesce_system=True,
-        )
-        keys = proj.key_cols
-        payload = [c for c in proj.schema.names if c not in keys]
-        if not delta_files or not with_deltas:
-            if with_lsn:
-                return base
-            return base.filter(F.col("__op") != "D").drop("__op", "__lsn")
-        deltas = self._read_mapped(proj, delta_files, with_delta_cols=True)
-        winner = F.max_by(
-            F.struct(*[F.col(c) for c in payload], F.col("__op")), F.col("__lsn")
-        ).alias("__w")
-        aggs = [winner]
+        state = self._read_mapped(proj, [f for f in files if f.kind == "base"])
+        if delta_files and with_deltas:
+            keys = proj.key_cols
+            payload = [c for c in proj.schema.names if c not in keys]
+            state = lww_fold(
+                state.unionByName(self._read_mapped(proj, delta_files)), keys, payload
+            )
         if with_lsn:
-            aggs.append(F.max("__lsn").alias("__lsn"))
-        folded = base.unionByName(deltas).groupBy(*keys).agg(*aggs)
-        if not with_lsn:
-            folded = folded.filter(F.col("__w.__op") != "D")
-        out_cols = [*keys, *[F.col(f"__w.{c}").alias(c) for c in payload]]
-        if with_lsn:
-            out_cols.append(F.col(f"__w.__op").alias("__op"))
-            out_cols.append(F.col("__lsn"))
-        return folded.select(*out_cols)
+            return state
+        return state.filter(F.col("__op") != "D").drop("__op", "__lsn")
 
-    def _read_mapped(
-        self,
-        snap,
-        files,
-        *,
-        with_delta_cols: bool = False,
-        coalesce_system: bool = False,
-    ) -> DataFrame:
+    def _read_mapped(self, snap, files) -> DataFrame:
         """Read a file set, mapping every schema version onto the current
-        schema by field id; ``with_delta_cols`` carries the ``__op`` /
-        ``__lsn`` system columns through. Since the out-of-order fix,
-        copy-on-write base files persist them too (the winner's op —
-        delete winners stay as hidden *tombstone* rows — and its LSN);
-        ``coalesce_system=True`` additionally maps files that predate
-        the fix (or plain appends) to the legacy tags ``'E'`` / ``-1``,
-        so any mix of file generations folds uniformly."""
+        schema by field id and carrying the ``__op``/``__lsn`` system
+        columns through."""
         from pyspark.sql import types as T
 
-        target_struct = snap.schema.to_struct()
         extra = [
             T.StructField("__op", T.StringType()),
             T.StructField("__lsn", T.LongType()),
         ]
         if not files:
-            out_struct = (
-                T.StructType(list(target_struct.fields) + extra)
-                if with_delta_cols
-                else target_struct
+            return self.spark.createDataFrame(
+                [], T.StructType(list(snap.schema.to_struct().fields) + extra)
             )
-            return self.spark.createDataFrame([], out_struct)
         by_version: dict[int, list[str]] = {}
         for f in files:
             by_version.setdefault(f.schema_version, []).append(
@@ -915,11 +887,7 @@ class LakeTable:
         parts: list[DataFrame] = []
         for sv, paths in sorted(by_version.items()):
             old = snap.schema_history[sv]
-            read_struct = (
-                T.StructType(list(old.to_struct().fields) + extra)
-                if with_delta_cols
-                else old.to_struct()
-            )
+            read_struct = T.StructType(list(old.to_struct().fields) + extra)
             df = self.spark.read.schema(read_struct).parquet(*paths)
             cols = []
             for fld in snap.schema.fields:
@@ -933,17 +901,7 @@ class LakeTable:
                     if old_fld.type != fld.type:
                         col = col.cast(spark_type(fld.type))
                     cols.append(col.alias(fld.name))
-            if with_delta_cols:
-                if coalesce_system:
-                    cols += [
-                        F.coalesce(F.col("__op"), F.lit("E")).alias("__op"),
-                        F.coalesce(F.col("__lsn"), F.lit(-1).cast("long")).alias(
-                            "__lsn"
-                        ),
-                    ]
-                else:
-                    cols += [F.col("__op"), F.col("__lsn")]
-            parts.append(df.select(*cols))
+            parts.append(df.select(*cols, F.col("__op"), F.col("__lsn")))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -964,9 +922,10 @@ class LakeTable:
         max_rows_per_file: int | None = None,
         n_buckets_override: int | None = None,
     ) -> list[DataFile]:
-        """Write ``df`` (current-schema columns) hash-partitioned by
-        bucket into a per-attempt unique directory
-        ``data/s{version}-{attempt}/``; returns the DataFile entries.
+        """Write ``df`` (current-schema columns plus the ``__op``/``__lsn``
+        system columns every file carries) hash-partitioned by bucket
+        into a per-attempt unique directory ``data/s{version}-{attempt}/``;
+        returns the DataFile entries.
 
         Unique-per-attempt dirs close the concurrent same-version race:
         two writers retrying the same batch can never observe (or
@@ -994,6 +953,8 @@ class LakeTable:
         snap = self.snapshot
         import uuid
 
+        if not {"__op", "__lsn"} <= set(df.columns):
+            raise ValueError("data files must carry the __op/__lsn system columns")
         n_buckets = n_buckets_override or snap.n_buckets
         prefix = "s" if kind == "base" else "d"
         rel_dir = f"data/{prefix}{new_version}-{uuid.uuid4().hex[:8]}"
@@ -1123,7 +1084,7 @@ class LakeTable:
         """Plain append (initial load path)."""
         snap = self.snapshot
         new_version = snap.version + 1
-        new_files = self.write_bucket_files(df.select(*snap.schema.names), new_version)
+        new_files = self.write_bucket_files(_appended_rows(df, snap), new_version)
         new_snap = Snapshot(
             version=new_version,
             schema=snap.schema,
@@ -1150,7 +1111,7 @@ class LakeTable:
         """
         snap = self.snapshot
         new_version = snap.version + 1
-        new_files = self.write_bucket_files(df.select(*snap.schema.names), new_version)
+        new_files = self.write_bucket_files(_appended_rows(df, snap), new_version)
         props = dict(snap.properties)
         props.update(properties or {})
         new_snap = Snapshot(
@@ -1468,10 +1429,6 @@ class LakeTable:
         )
         return snapshot_changed_buckets(snap_from, snap_to)
 
-    @staticmethod
-    def _diff_candidates(snap_from: Snapshot, snap_to: Snapshot) -> set[int] | None:
-        return diff_candidate_buckets(snap_from, snap_to)
-
     def _file_set_delta(
         self, snap_from: Snapshot, snap_to: Snapshot
     ) -> tuple[list[DataFile], list[DataFile]]:
@@ -1556,11 +1513,7 @@ class LakeTable:
         the diff path produces."""
         keys = proj.key_cols
         payload = [c for c in proj.schema.names if c not in keys]
-        deltas = self._read_mapped(proj, delta_files, with_delta_cols=True)
-        winner = F.max_by(
-            F.struct(*[F.col(c) for c in payload], F.col("__op")), F.col("__lsn")
-        ).alias("__w")
-        winners = deltas.groupBy(*keys).agg(winner, F.max("__lsn").alias("__wl"))
+        winners = lww_fold(self._read_mapped(proj, delta_files), keys, payload)
         buckets = {f.bucket for f in delta_files}
         # with_lsn: tombstones included (classification needs to know a
         # key was deleted, not absent) plus each old row's stored LSN
@@ -1574,11 +1527,11 @@ class LakeTable:
         # a range winner older than the old row's stored LSN never
         # applies (the read fold keeps the old row) — emit nothing for
         # it, exactly like the diff path (old state == new state there)
-        j = j.filter(F.col("__ol").isNull() | (F.col("__wl") >= F.col("__ol")))
-        is_del = F.col("__w.__op") == "D"
+        j = j.filter(F.col("__ol").isNull() | (F.col("__lsn") >= F.col("__ol")))
+        is_del = F.col("__op") == "D"
         # visible old row = present and not a tombstone
         in_old = F.col("__oop").isNotNull() & (F.col("__oop") != "D")
-        new_struct = F.struct(*[F.col(f"__w.{c}").alias(c) for c in payload])
+        new_struct = F.struct(*[F.col(c) for c in payload])
         op = (
             F.when(~in_old & ~is_del, F.lit("I"))
             .when(in_old & is_del, F.lit("D"))
@@ -1590,7 +1543,7 @@ class LakeTable:
             .select(
                 *keys,
                 "change_op",
-                *[F.when(~is_del, F.col(f"__w.{c}")).alias(c) for c in payload],
+                *[F.when(~is_del, F.col(c)).alias(c) for c in payload],
             )
         )
 

@@ -100,6 +100,13 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.murmur import SUPPORTED_TYPES, bucket_of, murmur3_hash
+from ..lakehouse.fold import (
+    arrow_type as _arrow_type,
+    history_fields,
+    load_projected,
+    lww_winners,
+    target_fields as _target_fields,
+)
 from ..lakehouse.snapshot import (
     Snapshot,
     SnapshotLog,
@@ -114,15 +121,6 @@ _MAX_PRUNE_COMBOS = 1024
 
 CHANGE_OP_COL = "change_op"
 CHANGE_VERSION_COL = "change_version"
-
-
-def _arrow_type(type_name: str):
-    """Table-schema DDL name → the arrow type Spark expects back."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    from ..lakehouse.schema import spark_type
-
-    return to_arrow_type(spark_type(type_name))
 
 
 # ---------------------------------------------------------------------------
@@ -174,148 +172,20 @@ class ChangesPartition(InputPartition):
 # ---------------------------------------------------------------------------
 
 
-def _load_projected(
-    root: str,
-    files: list[tuple[str, int, str]],
-    histories: dict[int, list[tuple[int, str, str]]],
-    target_fields: list[tuple[int, str, str, object]],
-    with_delta_cols: bool,
-):
-    """Read a file set and project every file onto the target schema by
-    field id (cast widened types, backfill added columns with their
-    declared default). ``with_delta_cols`` carries ``__op``/``__lsn``
-    through — base files get the E/-1 tagging the JVM read path uses."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    tables = []
-    for relpath, schema_version, kind in files:
-        tbl = pq.read_table(os.path.join(root, relpath))
-        old_by_id = {fid: (name, t) for fid, name, t in histories[schema_version]}
-        cols, names = [], []
-        for fid, name, tname, default in target_fields:
-            at = _arrow_type(tname)
-            old = old_by_id.get(fid)
-            if old is None:  # column postdates this file: backfill
-                col = (
-                    pa.nulls(len(tbl), type=at)
-                    if default is None
-                    else pa.array([default] * len(tbl)).cast(at)
-                )
-            else:
-                col = tbl.column(old[0])
-                if col.type != at:
-                    col = pc.cast(col, at)
-            cols.append(col)
-            names.append(name)
-        if with_delta_cols:
-            if kind == "delta":
-                cols += [
-                    pc.cast(tbl.column("__op"), pa.string()),
-                    pc.cast(tbl.column("__lsn"), pa.int64()),
-                ]
-            else:
-                # base rows at their STORED system columns (written by
-                # the merge since the out-of-order fix: winner op —
-                # delete winners persist as hidden tombstone rows — and
-                # winner LSN); files that predate them fold in at the
-                # legacy 'E'/-1 tags, losing every tie
-                if "__op" in tbl.column_names:
-                    op_col = pc.fill_null(
-                        pc.cast(tbl.column("__op"), pa.string()), "E"
-                    )
-                else:
-                    op_col = pa.array(["E"] * len(tbl), pa.string())
-                if "__lsn" in tbl.column_names:
-                    lsn_col = pc.fill_null(
-                        pc.cast(tbl.column("__lsn"), pa.int64()), -1
-                    )
-                else:
-                    lsn_col = pa.array([-1] * len(tbl), pa.int64())
-                cols += [op_col, lsn_col]
-            names += ["__op", "__lsn"]
-        tables.append(pa.table(cols, names=names))
-    if not tables:
-        import pyarrow as pa
-
-        fields = [(name, _arrow_type(t)) for _, name, t, _ in target_fields]
-        if with_delta_cols:
-            fields += [("__op", pa.string()), ("__lsn", pa.int64())]
-        return pa.table(
-            {n: pa.nulls(0, type=t) for n, t in fields},
-        )
-    return tables[0] if len(tables) == 1 else pa.concat_tables(tables)
-
-
-def _lww_winners(tbl, key_cols: list[str]):
-    """One winner row per key by max ``__lsn`` (keeps ``__op``).
-
-    Mirrors ``LakeTable._read_state``'s ``max_by(struct(...), __lsn)``
-    aggregate, but entirely inside one bucket (bucketing co-locates
-    keys, so no exchange is needed). LSNs are unique per key (the merge
-    dedupes each batch and the log orders batches), so the equality
-    join matches exactly one row per key; a duplicated (key, lsn) would
-    mirror ``max_by``'s arbitrary-tie behavior — the guard keeps one.
-
-    NULL keys: Arrow joins never match null keys, so rows with a NULL
-    key column would silently vanish from this fold while the JVM path
-    (groupBy + max_by) groups nulls and keeps them. Null-keyed rows are
-    split off and folded group-wise in pandas (sort by ``__lsn`` desc +
-    ``drop_duplicates``, which treats nulls as equal — Spark's groupBy
-    semantics), then concatenated back — read-surface parity at zero
-    cost on the no-null hot path.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    null_mask = None
-    for k in key_cols:
-        m = pc.is_null(tbl[k])
-        null_mask = m if null_mask is None else pc.or_(null_mask, m)
-    null_part = None
-    if null_mask is not None and pc.any(null_mask).as_py():
-        import pandas as pd
-
-        df = tbl.filter(null_mask).to_pandas(types_mapper=pd.ArrowDtype)
-        df = df.sort_values("__lsn", ascending=False, kind="stable").drop_duplicates(
-            subset=key_cols
-        )
-        null_part = pa.Table.from_pandas(df, preserve_index=False).select(
-            tbl.column_names
-        ).cast(tbl.schema)
-        tbl = tbl.filter(pc.invert(null_mask))
-    agg = tbl.group_by(key_cols).aggregate([("__lsn", "max")])
-    joined = tbl.join(agg, keys=key_cols, join_type="inner")
-    winners = joined.filter(pc.equal(joined["__lsn"], joined["__lsn_max"]))
-    if len(winners) > len(agg):  # (key, lsn) tie — keep one row per key
-        import pandas as pd
-
-        df = winners.to_pandas(types_mapper=pd.ArrowDtype)
-        winners = pa.Table.from_pandas(
-            df.drop_duplicates(subset=key_cols), preserve_index=False
-        )
-    if null_part is not None and len(null_part):
-        winners = pa.concat_tables(
-            [winners.select(tbl.column_names).cast(tbl.schema), null_part]
-        )
-    return winners
-
-
 def _load_state(
     root, files, histories, target_fields, key_cols, out_schema, with_lsn=False
 ):
     """One bucket's row state: projected files (system columns always
     read — merge-written base files hold hidden tombstone rows),
-    LWW-folded if the set holds merge-on-read deltas, tombstones and
-    delete markers dropped. ``with_lsn`` keeps tombstones and appends
+    LWW-folded if the set holds merge-on-read deltas, tombstones
+    dropped. ``with_lsn`` keeps tombstones and appends
     each row's winner op/LSN as ``__op``/``__lsn`` — the change-feed
     kernel's out-of-order arbitration input."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     have_deltas = any(kind == "delta" for _, _, kind in files)
-    tbl = _load_projected(root, files, histories, target_fields, True)
+    tbl = load_projected(root, files, histories, target_fields)
     names = list(out_schema.names)
     schema = out_schema
     if with_lsn:
@@ -325,7 +195,7 @@ def _load_state(
             + [pa.field("__op", pa.string()), pa.field("__lsn", pa.int64())]
         )
     if have_deltas:
-        tbl = _lww_winners(tbl, key_cols)
+        tbl = lww_winners(tbl, key_cols)
     if not with_lsn:
         tbl = tbl.filter(pc.not_equal(tbl["__op"], "D"))
     return tbl.select(names).cast(schema)
@@ -392,14 +262,14 @@ def _read_changes_partition(partition: ChangesPartition):
     old = old.append_column("__in_old", pa.array([True] * len(old), type=pa.bool_()))
 
     if partition.mor:
-        deltas = _load_projected(
-            partition.root, partition.new_files, partition.histories, tf, True
+        deltas = load_projected(
+            partition.root, partition.new_files, partition.histories, tf
         ).cast(
             pa.schema(
                 list(state_schema) + [pa.field("__op", pa.string()), pa.field("__lsn", pa.int64())]
             )
         )
-        w = _lww_winners(deltas, keys)
+        w = lww_winners(deltas, keys)
         j = w.join(old, keys=keys, join_type="left outer")
         # a range winner older than the old row's stored LSN never
         # applies (the read fold keeps the old row) — emit nothing,
@@ -499,16 +369,13 @@ def _plan_changes(
         if snap_to.schema.schema_version >= snap_from.schema.schema_version
         else snap_from
     )
-    target = [(f.id, f.name, f.type, f.default) for f in proj.schema.fields]
+    target = _target_fields(proj.schema)
     # histories accumulate monotonically: the LATER snapshot covers all
     # schema versions either side's files can carry
     hist_src = (
         snap_to if snap_to.version >= snap_from.version else snap_from
     )
-    histories = {
-        sv: [(f.id, f.name, f.type) for f in s.fields]
-        for sv, s in hist_src.schema_history.items()
-    }
+    histories = history_fields(hist_src.schema_history)
     keys = list(proj.key_cols)
     removed, added = snapshot_file_delta(snap_from, snap_to)
     mor = (
@@ -561,11 +428,8 @@ def _empty_changes_partition(root: str, snap: Snapshot) -> ChangesPartition:
         new_files=[],
         mor=False,
         root=root,
-        target_fields=[(f.id, f.name, f.type, f.default) for f in snap.schema.fields],
-        histories={
-            sv: [(f.id, f.name, f.type) for f in s.fields]
-            for sv, s in snap.schema_history.items()
-        },
+        target_fields=_target_fields(snap.schema),
+        histories=history_fields(snap.schema_history),
         key_cols=list(snap.key_cols),
     )
 
@@ -745,11 +609,8 @@ class PanoramaReader(DataSourceReader):
             by_bucket.setdefault(f.bucket, []).append(
                 (f.path, f.schema_version, f.kind)
             )
-        target = [(f.id, f.name, f.type, f.default) for f in snap.schema.fields]
-        histories = {
-            sv: [(f.id, f.name, f.type) for f in s.fields]
-            for sv, s in snap.schema_history.items()
-        }
+        target = _target_fields(snap.schema)
+        histories = history_fields(snap.schema_history)
         # Partition grain (the 100 TB read-path scale rule): a bucket
         # needs to stay ONE partition only while it holds merge-on-read
         # deltas — the LWW fold requires every row of a key in one task.
@@ -949,7 +810,8 @@ def _write_partition_files(
     the files this interop path writes are indistinguishable from the
     library writer's. With ``delta_in = (op_col, lsn_col)`` the input's
     change columns land as ``__op``/``__lsn`` and files are
-    merge-on-read deltas.
+    merge-on-read deltas; without it rows land as ``'E'``/``-1``, the
+    system columns of a plain append.
 
     This is the *interop* write path (Spark cannot hand a Python data
     source a pre-bucketed distribution, so each task hashes rows in
@@ -969,14 +831,12 @@ def _write_partition_files(
     from ..lakehouse.table import footer_zone_map
 
     out_fields = [(name, _arrow_type(t)) for _, name, t, _ in target_fields]
+    out_fields += [("__op", pa.string()), ("__lsn", pa.int64())]
     stat_cols = [
         (name, t, str(fid))
         for fid, name, t, _ in target_fields
         if t in ORDERABLE_TYPES
-    ]
-    if delta_in:
-        out_fields += [("__op", pa.string()), ("__lsn", pa.int64())]
-        stat_cols.append(("__lsn", "bigint", "__lsn"))
+    ] + [("__lsn", "bigint", "__lsn")]
     arrow_schema = pa.schema(out_fields)
     part = _uuid.uuid4().hex[:16]
     abs_dir = _os.path.join(root, rel_dir)
@@ -987,14 +847,15 @@ def _write_partition_files(
         if rb.num_rows == 0:
             continue
         tbl = pa.Table.from_batches([rb])
+        if delta_in:
+            system = {delta_in[0]: "__op", delta_in[1]: "__lsn"}
+            tbl = tbl.rename_columns([system.get(n, n) for n in tbl.column_names])
+        else:
+            tbl = tbl.append_column("__op", pa.array(["E"] * len(tbl), pa.string()))
+            tbl = tbl.append_column("__lsn", pa.array([-1] * len(tbl), pa.int64()))
         cols = []
         for name, at in out_fields:
-            if delta_in and name == "__op":
-                col = tbl.column(delta_in[0])
-            elif delta_in and name == "__lsn":
-                col = tbl.column(delta_in[1])
-            else:
-                col = tbl.column(name)
+            col = tbl.column(name)
             if col.type != at:
                 col = pc.cast(col, at)
             cols.append(col)
@@ -1064,9 +925,7 @@ def _writer_plan(root: str, input_names: list[str], *, delta: bool, options):
     plan = {
         "root": root,
         "rel_dir": f"data/w-{uuid.uuid4().hex[:16]}",
-        "target_fields": [
-            (f.id, f.name, f.type, f.default) for f in snap.schema.fields
-        ],
+        "target_fields": _target_fields(snap.schema),
         "key_cols": list(snap.key_cols),
         "key_types": [snap.schema.field_by_name(k).type for k in snap.key_cols],
         "n_buckets": snap.n_buckets,

@@ -13,12 +13,11 @@ from panorama_elt_spark.cdc import (
     ChangeLogSpec,
     expected_final_state,
     generate_change_log,
-    lww_dedupe_agg,
-    lww_dedupe_salted,
     lww_dedupe_window,
     merge_batch,
 )
 from panorama_elt_spark.lakehouse import Field, LakeTable, TableSchema
+from panorama_elt_spark.lakehouse.fold import lww_fold
 
 REPO_SCHEMA_V1 = TableSchema(
     [
@@ -41,20 +40,31 @@ def _rows(df, cols=("repo", "path", "commit", "lang", "content")):
 # --------------------------------------------------------------- dedupe
 
 
+def _fold_log(log):
+    """``lww_fold`` over a change log (system columns under their names)."""
+    events = log.withColumnsRenamed({"op": "__op", "lsn": "__lsn"})
+    payload = [c for c in events.columns if c not in ("repo", "path", "__op", "__lsn")]
+    return lww_fold(events, ["repo", "path"], payload).withColumnsRenamed(
+        {"__op": "op", "__lsn": "lsn"}
+    )
+
+
 def test_dedupe_strategies_agree(spark):
+    """The engine's fold picks the same winner per key as the windowed
+    reference dedupe (the oracle's semantics)."""
     log = generate_change_log(spark, SPEC)
-    a = _rows(lww_dedupe_agg(log, ["repo", "path"]), ("repo", "path", "lsn", "op"))
-    w = _rows(lww_dedupe_window(log, ["repo", "path"]), ("repo", "path", "lsn", "op"))
-    s = _rows(lww_dedupe_salted(log, ["repo", "path"]), ("repo", "path", "lsn", "op"))
-    assert a == w == s
+    cols = ("repo", "path", "lsn", "op", "commit", "lang", "content")
+    a = _rows(_fold_log(log), cols)
+    w = _rows(lww_dedupe_window(log, ["repo", "path"]), cols)
+    assert a == w
     assert len(a) <= SPEC.n_keys
 
 
 def test_dedupe_agg_is_partial_aggregated(spark):
-    """The default dedupe must compile to a hash aggregate with map-side
+    """``lww_fold`` must compile to a hash aggregate with map-side
     partial_merge (shuffle bounded by keys, not events) — the 10^10 plan."""
     log = generate_change_log(spark, SPEC)
-    plan = lww_dedupe_agg(log, ["repo", "path"])._jdf.queryExecution().executedPlan().toString()
+    plan = _fold_log(log)._jdf.queryExecution().executedPlan().toString()
     assert "partial_max_by" in plan  # map-side combine before the exchange
     assert "Window" not in plan  # not the shuffle-everything window plan
 
@@ -264,10 +274,11 @@ def test_bucket_local_merge_matches_fused(spark, tmp_path):
     assert states["fused"] == _rows(expected_final_state(spark, SPEC))
 
 
-def test_bucket_local_falls_back_on_mixed_schema_versions(spark, tmp_path):
-    """Resident files written under an older schema version need the JVM
-    field-id mapping — explicit bucket_local must degrade to fused, not
-    misread them."""
+def test_bucket_local_merges_mixed_schema_versions(spark, tmp_path):
+    """The bucket-local kernel projects resident files by field id and
+    folds merge-on-read deltas itself, so residents written under an
+    older schema version — with or without deltas on top — merge there
+    with no fallback, to exactly the fused state."""
     v2 = TableSchema(
         REPO_SCHEMA_V1.fields + [Field(6, "stars", "int", default=0)], schema_version=2
     )
@@ -277,33 +288,66 @@ def test_bucket_local_falls_back_on_mixed_schema_versions(spark, tmp_path):
         "lang string, content string, stars int, schema_version int"
     )
 
-    def run(strategy, root):
+    def batch(rows):
+        return spark.createDataFrame(rows, log_schema)
+
+    def run(strategy, root, with_deltas):
         t = LakeTable.create(
             spark, str(tmp_path / root), REPO_SCHEMA_V1, ["repo", "path"], n_buckets=4
         )
         eng = CdcEngine(t, schema_registry=registry, strategy=strategy)
-        # batch 0 writes v1 files; batch 1 (v2 events) must merge against
-        # them — the bucket_local guard has to detect the v1 residents
+        # batch 0 writes v1 files; batch 1 (v2 events) merges against them
         eng.apply_batch(
-            spark.createDataFrame(
-                [(0, "I", "o/r", "a.py", "c0", "py", "A0", None, 1),
-                 (1, "I", "o/r", "b.py", "c1", "md", "B0", None, 1)],
-                log_schema,
-            ),
+            batch([(0, "I", "o/r", "a.py", "c0", "py", "A0", None, 1),
+                   (1, "I", "o/r", "b.py", "c1", "md", "B0", None, 1)]),
             "b0",
         )
-        eng.apply_batch(
-            spark.createDataFrame(
-                [(2, "U", "o/r", "a.py", "c2", "py", "A1", 7, 2),
-                 (3, "I", "o/r", "c.py", "c3", "py", "C0", 9, 2)],
-                log_schema,
-            ),
+        if with_deltas:
+            # v1 deltas on top of a.py's bucket, folded by the next merge
+            CdcEngine(t, schema_registry=registry, strategy="append_delta").apply_batch(
+                batch([(2, "U", "o/r", "a.py", "c2", "py", "A0b", None, 1),
+                       (3, "I", "o/r", "d.py", "c3", "py", "D0", None, 1)]),
+                "bd",
+            )
+            assert t.snapshot.delta_buckets()
+        stats = eng.apply_batch(
+            batch([(4, "U", "o/r", "a.py", "c4", "py", "A1", 7, 2),
+                   (5, "I", "o/r", "c.py", "c5", "py", "C0", 9, 2),
+                   (6, "D", "o/r", "d.py", None, None, None, None, 2)]),
             "b1",
         )
+        assert stats.strategy == strategy
         cols = tuple(t.snapshot.schema.names)
         return _rows(t.read(), cols)
 
-    assert run("bucket_local", "mixed") == run("fused", "ref")
+    for with_deltas in (False, True):
+        tag = "deltas" if with_deltas else "plain"
+        got = run("bucket_local", f"bl-{tag}", with_deltas)
+        assert got == run("fused", f"fused-{tag}", with_deltas)
+        assert ("o/r", "a.py", "c4", "py", "A1", 7) in got
+
+
+def test_bucket_local_merge_over_duplicate_appended_keys(spark, tmp_path):
+    """Two appends leave the same key twice in one bucket; an explicit
+    bucket_local merge updating that key must fold both resident copies
+    like the fused merge does, not assume resident keys are unique."""
+    row = [("o/r", "a.py", "c0", "py", "A0"), ("o/r", "b.py", "c0", "md", "B0")]
+    events = spark.createDataFrame(
+        [(0, "U", "o/r", "a.py", "c1", "py", "A1")],
+        "lsn bigint, op string, repo string, path string, commit string, "
+        "lang string, content string",
+    )
+    states = {}
+    for strategy in ("fused", "bucket_local"):
+        t = _make_table(spark, tmp_path / strategy)
+        for _ in range(2):
+            t.append(spark.createDataFrame(row, "repo string, path string, "
+                                           "commit string, lang string, content string"))
+        stats = merge_batch(t, events, "b0", strategy=strategy)
+        assert stats.strategy == strategy
+        states[strategy] = _rows(t.read())
+    assert states["bucket_local"] == states["fused"]
+    assert ("o/r", "a.py", "c1", "py", "A1") in states["fused"]
 
 
 def test_auto_strategy_is_fused_in_local_mode(spark, tmp_path):

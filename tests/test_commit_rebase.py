@@ -67,7 +67,7 @@ def test_compaction_rebases_over_concurrent_delta_append(spark, tmp_path):
     assert snap.version == 2
     target = snap.delta_buckets()
     assert target
-    folded = t.read(buckets=target)
+    folded = t.read(buckets=target, with_lsn=True)
     new_files = t.write_bucket_files(folded, snap.version + 1)
 
     # --- a delta batch lands BEFORE compaction commits ---
@@ -152,10 +152,12 @@ def test_rebase_refuses_rival_bucket_rewrite(spark, tmp_path):
     merge_batch(t, b0, "b0")
     stale = t.snapshot
     buckets = {f.bucket for f in stale.files}
-    rewritten = t.write_bucket_files(t.read(buckets=buckets), stale.version + 1)
+    rewritten = t.write_bucket_files(
+        t.read(buckets=buckets, with_lsn=True), stale.version + 1
+    )
     t.commit_replace_buckets(stale, buckets, rewritten)  # rival wins
     ours = t.write_bucket_files(
-        spark.createDataFrame([], SCHEMA.to_struct()), stale.version + 1
+        t.read(buckets=buckets, with_lsn=True).limit(0), stale.version + 1
     )
     with pytest.raises(CommitConflict):
         t.commit_replace_buckets(stale, buckets, ours, retry_on_conflict=True)

@@ -3,7 +3,6 @@ snapshot document stays O(1) in table size (the round-4 scale finding:
 previously every commit rewrote an O(table-files) JSON on the driver).
 Driven through the fake object store — commits are pure metadata."""
 
-import json
 import os
 
 from panorama_elt_spark.lakehouse import (
@@ -129,43 +128,6 @@ def test_bucket_pruned_metadata_reads(spark):
     assert [f.bucket for f in files] == [3]
     manifest_reads = [p for p in reads if "/m-" in p]
     assert len(manifest_reads) == 1  # one group manifest, not 8
-
-
-def test_legacy_inline_snapshot_migrates_on_next_commit(spark):
-    """A format_version-1 document (inline file inventory) still reads,
-    and its first post-upgrade commit migrates the inventory into
-    manifests with identical file content."""
-    io = InMemoryFileIO()
-    root = "mem://legacy"
-    t = LakeTable.create(spark, root, SCHEMA, ["repo", "path"], n_buckets=8, io=io)
-    files = _fake_files(io, root, 1, range(8))
-    legacy_doc = {
-        "format_version": 1,
-        "version": 1,
-        "schema": SCHEMA.to_dict(),
-        "n_buckets": 8,
-        "key_cols": ["repo", "path"],
-        "files": [f.to_dict() for f in files],
-        "last_lsn": 7,
-        "committed_batches": ["old"],
-        "lineage": [],
-        "schema_history": {"1": SCHEMA.to_dict()},
-        "properties": {},
-        "lineage_files": [],
-    }
-    io.write_text(t.log._version_path(1), json.dumps(legacy_doc))
-    t.log._publish(1)
-    snap = t.snapshot
-    assert snap.inline_files is not None and len(snap.files) == 8
-    s2 = t.commit_replace_buckets(
-        snap, {0}, _fake_files(io, root, 2, [0]), batch_id="b-new"
-    )
-    assert s2.inline_files is None and len(s2.manifests) >= 1
-    got = {(f.path, f.bucket) for f in s2.files}
-    expect = {(f.path, f.bucket) for f in files if f.bucket != 0} | {
-        (f"data/s2/bucket=0/part-0.parquet", 0)
-    }
-    assert got == expect
 
 
 def test_batchid_window_spills_and_exactly_once_survives(spark, monkeypatch):

@@ -8,10 +8,9 @@ from panorama_elt_spark.cdc import (
     ChangeLogSpec,
     expected_final_state,
     generate_change_log,
-    lww_dedupe_agg,
-    lww_dedupe_salted,
 )
 from panorama_elt_spark.lakehouse import Field, LakeTable, TableSchema
+from panorama_elt_spark.lakehouse.fold import lww_fold
 
 SCHEMA = TableSchema(
     [
@@ -47,46 +46,20 @@ def test_replay_correct_under_skew(spark, tmp_path):
     assert _rows(t.read()) == _rows(expected_final_state(spark, HOT_SPEC))
 
 
-def test_salted_pre_dedupe_matches_fused_under_skew(spark, tmp_path):
-    log = generate_change_log(spark, HOT_SPEC)
-    t1 = LakeTable.create(spark, str(tmp_path / "a"), SCHEMA, ["repo", "path"], n_buckets=8)
-    CdcEngine(t1).replay(log, batch_size=3000)
-    t2 = LakeTable.create(spark, str(tmp_path / "b"), SCHEMA, ["repo", "path"], n_buckets=8)
-    CdcEngine(t2, pre_dedupe=lww_dedupe_salted).replay(log, batch_size=3000)
-    assert _rows(t1.read()) == _rows(t2.read())
-
-
-def test_salted_dedupe_plan_has_two_windows(spark):
-    """The salted strategy must actually split the hot key: two window
-    operators, the first partitioned by (keys, salt)."""
-    log = generate_change_log(spark, HOT_SPEC)
-    plan = (
-        lww_dedupe_salted(log, ["repo", "path"], "lsn", n_salt=8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Window") >= 2
-    assert "__salt" in plan
-
-
 def test_fused_merge_shuffles_aggregated_rows_not_events(spark, tmp_path):
     """The fused merge plan must show partial_max_by below the exchange —
     the property that makes hot keys collapse map-side at 10^10 scale."""
-    from panorama_elt_spark.lakehouse.table import bucket_expr
-
     log = generate_change_log(spark, HOT_SPEC)
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], n_buckets=8)
-    resident = t.read().select(
-        "repo", "path", "commit", "lang", "content",
-        F.lit("E").alias("op"), F.lit(-1).cast("long").alias("lsn"),
-    )
+    resident = t.read(with_lsn=True)
     unioned = resident.unionByName(
-        log.select("repo", "path", "commit", "lang", "content", "op", F.col("lsn").cast("long"))
+        log.select(
+            "repo", "path", "commit", "lang", "content",
+            F.col("op").alias("__op"), F.col("lsn").cast("long").alias("__lsn"),
+        )
     )
-    winner = F.max_by(
-        F.struct("commit", "lang", "content", "op"), F.col("lsn")
-    ).alias("__w")
     plan = (
-        unioned.groupBy("repo", "path").agg(winner)
+        lww_fold(unioned, ["repo", "path"], ["commit", "lang", "content"])
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "partial_max_by" in plan
