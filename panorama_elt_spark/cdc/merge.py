@@ -9,14 +9,18 @@ Semantics (the reference's upsert primitive generalized to row grain,
 
 Physical plan — ONE shuffle per batch, tuned for 10^10-event scale:
 
-1. **Fused dedup+merge aggregate.** Existing target rows (only the
-   affected buckets, at their stored ``__op``/``__lsn``) are unioned
-   with the raw batch events, then one ``lww_fold``
-   (``lakehouse/fold.py``: ``groupBy(keys).agg(max_by(payload, lsn))``)
-   resolves duplicates, update chains, AND the merge match in one
-   operator: the max-LSN row per key wins; a delete winner stays as a
-   hidden tombstone row; a resident row no event outranks survives
-   unchanged.
+1. **Fused dedup+merge aggregate.** The affected buckets' base AND
+   merge-on-read delta files, read unfolded at their stored
+   ``__op``/``__lsn``, are unioned with the raw batch events, then ONE
+   ``lww_fold`` (``lakehouse/fold.py``: ``groupBy(keys).agg(max_by(
+   payload, lsn))``) resolves duplicates, update chains, uncompacted
+   deltas AND the merge match in one operator: the max-LSN row per key
+   wins; a delete winner stays as a hidden tombstone row; a resident
+   row no event outranks survives unchanged. LWW by max LSN is
+   associative, so folding base ∪ deltas ∪ events once equals folding
+   the deltas first — without a second exchange.
+   ``LakeTable.fold_and_write`` is that fold plus step 2's write, the
+   same one compaction uses.
    The hash aggregate gets *map-side partial aggregation*, so a hot key
    collapses to ≤ one row per map partition before the exchange — the
    built-in answer to key skew (no join ever sees the raw event stream).
@@ -78,8 +82,8 @@ read nor rewritten, so a batch costs O(batch) regardless of how many
 buckets it touches — the write-optimized mode for high-frequency small
 batches. Readers fold deltas with one LWW aggregate
 (``LakeTable.read``); ``LakeTable.compact()`` folds them into base
-files. Copy-on-write (fused/bucket_local) stays the read-optimized
-default.
+files through the same fold-and-write. Copy-on-write (fused/
+bucket_local) stays the read-optimized default.
 
 Ordering note: every strategy resolves cross-batch collisions by TRUE
 global LSN order. Every data file persists each row's ``__op`` and
@@ -96,14 +100,18 @@ from __future__ import annotations
 
 import os
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..lakehouse.fold import lww_fold
 from ..lakehouse.snapshot import CommitConflict
-from ..lakehouse.table import LakeTable, bucket_expr, root_is_shared_posix
+from ..lakehouse.table import (
+    LakeTable,
+    _pinned_shuffle,
+    bucket_expr,
+    root_is_shared_posix,
+)
 
 _DEBUG_TIMING = os.environ.get("PANORAMA_DEBUG_TIMING", "") == "1"
 
@@ -230,31 +238,6 @@ def _resolve_requested_strategy(arg: str) -> str:
             f"expected one of {sorted(_STRATEGIES)}"
         )
     return requested
-
-
-@contextmanager
-def _pinned_shuffle(spark, n_partitions: int):
-    """Pin the aggregate exchange to the bucket count (and stop AQE from
-    coalescing it) so shuffle partition id == bucket id for the write.
-
-    Guarded by the per-session conf lock (``table._session_conf_lock``,
-    reentrant — the write's own arrow-batch pinning nests inside): two
-    threads on one session interleaving their set/restore windows would
-    otherwise leave the pinned values stuck session-wide. Cross-session
-    work (the async-compaction thread runs on a cloned session) never
-    contends."""
-    from ..lakehouse.table import _session_conf_lock
-
-    with _session_conf_lock(spark):
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        old_coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old_coalesce)
 
 
 def _bucket_local_map_fn(
@@ -472,14 +455,9 @@ def merge_batch(
             # read nor rewritten, so per-batch cost is O(batch), not
             # O(touched buckets). Readers fold deltas (LakeTable.read);
             # LakeTable.compact() folds them into base files.
-            with _pinned_shuffle(table.spark, snap.n_buckets):
-                new_files = table.write_bucket_files(
-                    lww_fold(events, keys, payload_cols),
-                    new_version,
-                    pre_partitioned=True,
-                    kind="delta",
-                    size_hint_rows=n_keys,
-                )
+            new_files = table.fold_and_write(
+                snap, [], new_version, events, kind="delta", size_hint_rows=n_keys
+            )
             replaced_buckets = set()  # pure append: nothing replaced
         elif strategy == "bucket_local":
             from pyspark.sql.pandas.types import to_arrow_schema
@@ -521,14 +499,15 @@ def merge_batch(
             # hidden tombstone rows (user reads drop them) so a late
             # update cannot resurrect a newer delete; the winner's
             # (__op, __lsn) are written back for the next merge/read.
-            resident = table.read(buckets=affected, with_lsn=True)
-            with _pinned_shuffle(table.spark, snap.n_buckets):
-                new_files = table.write_bucket_files(
-                    lww_fold(resident.unionByName(events), keys, payload_cols),
-                    new_version,
-                    pre_partitioned=True,
-                    size_hint_rows=resident_rows_total + n_keys,
-                )
+            # The resident files enter unfolded, deltas included, so a
+            # delta-holding bucket costs one fold exchange, not two.
+            new_files = table.fold_and_write(
+                snap,
+                affected_files,
+                new_version,
+                events,
+                size_hint_rows=resident_rows_total + n_keys,
+            )
         timer.lap(f"merge_write[{strategy}]")
 
         upserted = int(sum(max(r["keys"] - r["deletes"], 0) for r in per_bucket.values()))

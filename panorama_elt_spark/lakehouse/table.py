@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import os
 import threading as _threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -61,6 +62,29 @@ def _session_conf_lock(spark):
     # own arrow-batch pinning re-enters the same lock on the same thread
     with _CONF_LOCKS_GUARD:
         return _CONF_LOCKS.setdefault(id(spark), _threading.RLock())
+
+
+@contextmanager
+def _pinned_shuffle(spark, n_partitions: int):
+    """Pin the aggregate exchange to the bucket count (and stop AQE from
+    coalescing it) so shuffle partition id == bucket id for the write.
+
+    Guarded by the per-session conf lock (``_session_conf_lock``,
+    reentrant — the write's own arrow-batch pinning nests inside): two
+    threads on one session interleaving their set/restore windows would
+    otherwise leave the pinned values stuck session-wide. Cross-session
+    work (the async-compaction thread runs on a cloned session) never
+    contends."""
+    with _session_conf_lock(spark):
+        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        old_coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old_coalesce)
 
 
 def bucket_expr(key_cols: list[str], n_buckets: int):
@@ -949,7 +973,13 @@ class LakeTable:
         ``PANORAMA_TASK_WRITE_MIN_ROWS``, default 100k): the Arrow hop
         pays off on bulk, not on a few-thousand-row batch where the
         Python-worker stage spawn dominates (footer reads there are a
-        handful of driver-side metadata reads)."""
+        handful of driver-side metadata reads). Every merge and linear
+        compaction passes the hint (an upper bound on its output rows);
+        clustering compaction passes none, so it keeps the task writer
+        and its bloom sidecars wherever the root allows. Both writers
+        roll a file at ``max_rows_per_file`` rows (the JVM writer via
+        ``maxRecordsPerFile``), so a sorted rewrite's files carry
+        disjoint zone-map windows either way."""
         snap = self.snapshot
         import uuid
 
@@ -1057,10 +1087,10 @@ class LakeTable:
                 )
                 for r in manifest_rows
             ]
-        (
-            out.write.partitionBy(BUCKET_COL)
-            .parquet(out_dir, mode="errorifexists", compression="snappy")
-        )
+        writer = out.write.partitionBy(BUCKET_COL)
+        if max_rows_per_file:
+            writer = writer.option("maxRecordsPerFile", max_rows_per_file)
+        writer.parquet(out_dir, mode="errorifexists", compression="snappy")
         files: list[DataFile] = []
         for dirpath, _dirnames, filenames in os.walk(out_dir):
             parquet = [os.path.join(dirpath, n) for n in filenames if n.endswith(".parquet")]
@@ -1079,6 +1109,40 @@ class LakeTable:
                     )
                 )
         return files
+
+    def fold_and_write(
+        self,
+        snap: Snapshot,
+        files: list[DataFile],
+        new_version: int,
+        events: DataFrame | None = None,
+        **write_kw,
+    ) -> list[DataFile]:
+        """Fold ``files`` (base and delta alike, read unfolded at their
+        stored ``__op``/``__lsn``) plus optional ``events`` (same
+        columns) with ONE ``lww_fold`` and write the winners as bucket
+        files. The fold's exchange is pinned to ``snap.n_buckets``
+        (``_pinned_shuffle``), so it already is the bucket layout and
+        the write adds no second shuffle. LWW by max ``__lsn`` is
+        associative, so folding a delta-holding bucket together with the
+        events equals folding it first and the events after.
+
+        The one fold-and-write of compaction, the fused merge and the
+        merge-on-read delta append; ``write_kw`` goes to
+        ``write_bucket_files`` (``size_hint_rows``, ``kind``, sort and
+        file-roll options)."""
+        keys = snap.key_cols
+        payload = [c for c in snap.schema.names if c not in keys]
+        rows = self._read_mapped(snap, files) if files else None
+        if events is not None:
+            rows = events if rows is None else rows.unionByName(events)
+        with _pinned_shuffle(self.spark, snap.n_buckets):
+            return self.write_bucket_files(
+                lww_fold(rows, keys, payload),
+                new_version,
+                pre_partitioned=True,
+                **write_kw,
+            )
 
     def append(self, df: DataFrame) -> Snapshot:
         """Plain append (initial load path)."""
@@ -1789,13 +1853,27 @@ class LakeTable:
         pre-compaction read and post-compaction read are the same rows
         by construction (the read path's fold IS the compaction plan).
 
+        The rewrite is the merges' fold-and-write (``fold_and_write``):
+        the target buckets' base and delta files are read unfolded, one
+        ``lww_fold`` whose exchange is pinned to the bucket layout
+        resolves the winner per key (tombstones and stored LSNs kept),
+        and the write adds no second shuffle. A linear compaction passes
+        its input row count as the size hint, so a rewrite below
+        ``PANORAMA_TASK_WRITE_MIN_ROWS`` takes the JVM writer with
+        footer zone maps and spawns no Python worker; at or above the
+        gate it keeps the task writer and its bloom sidecars.
+
         ``sort_by`` turns the call into a *clustering* rewrite (Iceberg
         ``rewrite_data_files`` with a sort order): the targeted buckets
         (all live buckets when ``buckets`` is None) rewrite with rows
         sorted inside each bucket and, with ``max_rows_per_file``,
         rolled into bounded files — so the files' zone maps
         (``filestats``) carry disjoint windows on the sort columns and
-        range predicates skip whole files at plan time.
+        range predicates skip whole files at plan time. Clustering
+        exists for read-side metadata, so it always takes the task
+        writer (rolled zone maps plus bloom sidecars) where the root
+        allows; a target without delta files has nothing to fold and is
+        written through one exchange on the bucket hash.
 
         ``layout="zorder"`` (requires ``sort_by`` with ≥ 2 columns)
         sorts by the Morton interleave of the columns' affine cell
@@ -1805,7 +1883,8 @@ class LakeTable:
         skip files — a lexicographic sort only serves its leading
         column. Cell bounds come from the manifests' zone maps
         (metadata-only); columns without manifest bounds fall back to
-        one min/max aggregate over the rewrite's own input."""
+        one min/max aggregate over the rewrite's unfolded input (a
+        superset of the folded values, like the manifest bounds)."""
         snap = self.snapshot
         if sort_by is not None:
             target = (
@@ -1821,10 +1900,10 @@ class LakeTable:
         # parent: a delta landing mid-fold is then carried forward by
         # the rebase exactly once (a fresher read would fold it AND
         # carry it — harmless under LWW, but the pin keeps the commit's
-        # inputs and its conflict check the same set of files).
-        # with_lsn: the folded rows keep their winner LSN, so a late
-        # batch arriving after compaction still loses to them
-        merged = self.read(buckets=target, version=snap.version, with_lsn=True)
+        # inputs and its conflict check the same set of files). The
+        # folded rows keep their winner LSN, so a late batch arriving
+        # after compaction still loses to them
+        files = snap.files_in_buckets(target)
         sort_exprs = None
         if layout == "zorder":
             if not sort_by or len(sort_by) < 2:
@@ -1837,7 +1916,7 @@ class LakeTable:
             if missing:
                 # one bounds aggregate over the rewrite's own input —
                 # the only case a z-order rewrite scans before writing
-                row = merged.agg(
+                row = self._read_mapped(snap, files).agg(
                     *[F.min(c).alias(f"lo_{c}") for c in missing],
                     *[F.max(c).alias(f"hi_{c}") for c in missing],
                 ).collect()[0]
@@ -1846,13 +1925,18 @@ class LakeTable:
             sort_exprs = [zorder_key(sort_by, types, bounds)]
         elif layout != "linear":
             raise ValueError(f"unknown layout {layout!r}")
-        new_files = self.write_bucket_files(
-            merged,
-            snap.version + 1,
+        write_kw = dict(
             sort_within=None if sort_exprs else sort_by,
             sort_exprs=sort_exprs,
             max_rows_per_file=max_rows_per_file,
+            size_hint_rows=sum(f.rows for f in files) if sort_by is None else None,
         )
+        if any(f.kind == "delta" for f in files):
+            new_files = self.fold_and_write(snap, files, snap.version + 1, **write_kw)
+        else:
+            new_files = self.write_bucket_files(
+                self._read_mapped(snap, files), snap.version + 1, **write_kw
+            )
         # retry_on_conflict: a merge-on-read ingest batch landing mid-
         # compaction must not kill either job — its new deltas are
         # carried forward onto the compacted base (``_rebase``)

@@ -18,6 +18,14 @@ Cluster sizing knobs (pass via ``extra_conf`` on a real deployment):
   budgets n_keys × ~32 B regardless of key width.
   ``PANORAMA_PREFILTER_MAX_KEYS`` is a secondary row guard. Keep the
   bytes budget well under driver memory.
+
+DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+is off: with it on, every PySpark function call makes several extra
+py4j round trips to record its Python call site for error messages,
+so a change-feed read (``LakeTable.changes()``) makes 1.5-3x the round
+trips it needs (measured on small tables). Pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to get those call sites back while debugging a query.
 """
 
 from __future__ import annotations
@@ -106,6 +114,8 @@ def get_spark(
         # modern interop encoding (Iceberg/Delta write it too)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
+        # no per-call py4j call-site capture (module doc)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     local_dir = _default_local_dir(master)

@@ -223,6 +223,41 @@ def test_clustering_compact_rolls_and_skips(spark, tmp_path, monkeypatch):
     assert got == 600
 
 
+def test_clustering_compact_rolls_on_the_jvm_writer(spark, tmp_path, monkeypatch):
+    """The JVM writer (``PANORAMA_TASK_WRITE=0``, or any root executors
+    cannot write as POSIX paths) honours ``max_rows_per_file`` too: a
+    clustering compaction rolls each bucket into bounded files with
+    disjoint sort-column windows, so range reads still skip files."""
+    from panorama_elt_spark.lakehouse.filestats import decode_bound
+
+    monkeypatch.setenv("PANORAMA_TASK_WRITE", "0")
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["id"], n_buckets=2)
+    t.append(_frame(spark, 10000))
+    assert t.compact(sort_by=["ts"], max_rows_per_file=1000) == 2
+    snap = t.snapshot
+    assert sum(f.rows for f in snap.files) == 10000
+    for b in (0, 1):
+        files = [f for f in snap.files if f.bucket == b]
+        rows = sum(f.rows for f in files)
+        assert len(files) >= rows // 1000, (b, len(files), rows)
+        assert all(f.rows <= 1000 for f in files)
+        windows = sorted(
+            (decode_bound(f.stats["2"][0], "timestamp"), decode_bound(f.stats["2"][1], "timestamp"))
+            for f in files
+        )
+        assert all(hi < nxt_lo for (_, hi), (nxt_lo, _) in zip(windows, windows[1:]))
+    lo = datetime.datetime(2026, 1, 1, 0, 30)
+    hi = datetime.datetime(2026, 1, 1, 0, 40)
+    preds = normalize_pred_tz(
+        [("ts", "ge", lo), ("ts", "lt", hi)],
+        spark.conf.get("spark.sql.session.timeZone"),
+    )
+    kept = _prune_files_for_state(snap, snap.files, preds)
+    assert len(kept) < len(snap.files) / 2, (len(kept), len(snap.files))
+    got = sorted(r["id"] for r in t.read_where([("ts", "ge", lo), ("ts", "lt", hi)]).collect())
+    assert got == list(range(1800, 2400))
+
+
 def test_read_where_mor_payload_safety(spark, tmp_path):
     """A predicate matching a superseded base payload must not
     resurrect the stale row, and a deleted key must stay deleted —
