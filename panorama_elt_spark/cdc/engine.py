@@ -23,8 +23,8 @@ constant-column ``value:`` semantics, ``mysql_datasource.py:194-202``).
 
 from __future__ import annotations
 
-import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, functions as F
@@ -131,8 +131,6 @@ class CdcEngine:
                 return
             self._compact_fut.result()  # surface a failed fold
         if self._compact_pool is None:
-            from concurrent.futures import ThreadPoolExecutor
-
             self._compact_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="cdc-compact"
             )
@@ -237,9 +235,9 @@ class CdcEngine:
         writes; the serial path per batch is one merge job + one
         commit. Concurrent Spark jobs from two threads share the
         context safely (separate job groups in the FIFO scheduler).
-        Disabled via ``PANORAMA_PREFETCH_STATS=0``. Produces byte-identical state
-        either way — the prefetched aggregate is the exact same plan
-        over the exact same rows.
+        Produces the byte-identical state of a loop of ``apply_batch``
+        calls without stats — the prefetched aggregate is the exact
+        same plan over the exact same rows.
 
         **Prefetch under schema evolution.** With a registry, each
         batch's max event schema version is computed once upfront (one
@@ -254,7 +252,6 @@ class CdcEngine:
         """
         t0 = time.monotonic()
         report = ReplayReport()
-        prefetch = os.environ.get("PANORAMA_PREFETCH_STATS", "1") != "0"
         # without evolution the schema/keys/buckets are constant across
         # the replay — capture once so the prefetch thread never races a
         # snapshot commit; key column NAMES are stable across epochs
@@ -306,25 +303,19 @@ class CdcEngine:
                 target,
                 lsn_col=lsn_col,
                 # aligned LSN ranges bound a batch at ~batch_size rows
-                # (plus the duplicate fraction) — below the prefilter
-                # gate the per_key cache is skipped (merge.py)
+                # (plus the duplicate fraction) — below SMALL_BATCH_ROWS
+                # the per_key cache is skipped (merge.py)
                 size_hint_rows=batch_size,
             )
             stats.schema_version = stamp
             return stats
 
-        pool = fut = None
         sched_v = snap0.schema.schema_version  # predicted version as batches apply
-        if prefetch:
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="cdc-stats-prefetch"
-            )
-            # prime the FIRST batch's stats now, so they overlap the
-            # max-lsn probe below — otherwise batch 0's stats are the
-            # one remaining serial stats job of the replay
-            fut = pool.submit(stats_for, k0, max(sched_v, batch_max_v.get(k0, sched_v)))
+        pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="cdc-stats-prefetch")
+        # prime the FIRST batch's stats now, so they overlap the
+        # max-lsn probe below — otherwise batch 0's stats are the
+        # one remaining serial stats job of the replay
+        fut = pool.submit(stats_for, k0, max(sched_v, batch_max_v.get(k0, sched_v)))
         try:
             if max_lsn is None:
                 max_lsn = log_df.agg(F.max(lsn_col)).collect()[0][0]
@@ -334,10 +325,9 @@ class CdcEngine:
             for i, k in enumerate(ks):
                 lo, hi = k * batch_size, (k + 1) * batch_size - 1
                 batch_id = f"b{k}@{batch_size}"
-                stats = fut.result() if fut is not None else None
-                fut = None
+                stats, fut = fut.result(), None
                 sched_v = max(sched_v, batch_max_v.get(k, sched_v))
-                if pool is not None and i + 1 < len(ks):
+                if i + 1 < len(ks):
                     nk = ks[i + 1]
                     fut = pool.submit(
                         stats_for, nk, max(sched_v, batch_max_v.get(nk, sched_v))
@@ -378,7 +368,6 @@ class CdcEngine:
                     fut.result().per_key.unpersist()
                 except Exception:
                     pass
-            if pool is not None:
-                pool.shutdown(wait=True)
+            pool.shutdown(wait=True)
         report.wall_secs = time.monotonic() - t0
         return report

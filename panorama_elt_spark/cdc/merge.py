@@ -35,10 +35,12 @@ Physical plan — ONE shuffle per batch, tuned for 10^10-event scale:
    Skipped automatically when the winner set exceeds the broadcast
    budget: the broadcast carries fixed 64-bit key *fingerprints*, so
    the budget is n_keys × ~32 B regardless of key width
-   (``PANORAMA_PREFILTER_MAX_BYTES``, default 256 MiB;
-   ``PANORAMA_PREFILTER_MAX_KEYS`` as a secondary row guard) — or when
-   duplication is < 2×. The prefilter join is null-safe (NULL is a
-   valid key value), so every strategy sees the same event set.
+   (``PANORAMA_PREFILTER_MAX_BYTES``, default 128 MB = 4M keys; ``0``
+   disables the prefilter) — or when duplication is < 2×, or the batch
+   is below ``SMALL_BATCH_ROWS``. ``plan_batch`` makes this call, and
+   the strategy choice below, once per batch. The prefilter join is
+   null-safe (NULL is a valid key value), so every strategy sees the
+   same event set.
 0b. **Stats off the critical path.** The slim per-key aggregate ends in
    a driver ``collect`` barrier — a *fixed cost per batch* that does
    not shrink with executors (measured: under ``local-cluster[1→4]``
@@ -99,11 +101,11 @@ file splits do — and the final state is the same LWW answer the aligned
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..lakehouse import table as _table
 from ..lakehouse.fold import lww_fold
 from ..lakehouse.snapshot import CommitConflict
 from ..lakehouse.table import (
@@ -112,19 +114,6 @@ from ..lakehouse.table import (
     bucket_expr,
     root_is_shared_posix,
 )
-
-_DEBUG_TIMING = os.environ.get("PANORAMA_DEBUG_TIMING", "") == "1"
-
-
-class _Timer:
-    def __init__(self) -> None:
-        self.t = time.monotonic()
-
-    def lap(self, label: str) -> None:
-        if _DEBUG_TIMING:
-            now = time.monotonic()
-            print(f"[merge-timing] {label}: {now - self.t:.2f}s", flush=True)
-            self.t = now
 
 
 @dataclass
@@ -187,7 +176,7 @@ def compute_batch_stats(
     upsert, a multi-D chain is one delete.
 
     ``size_hint_rows`` (the engine passes its batch size): when the
-    batch is below the prefilter's minimum-rows gate, per_key is left
+    batch is below ``SMALL_BATCH_ROWS`` (the prefilter's gate), per_key is left
     UNPERSISTED — nothing will re-read it, and materializing an AQE
     aggregate into the memory store measured ~0.4 s of pure overhead
     per small batch (round-6 guide §1 isolation). Bulk batches keep the
@@ -199,9 +188,7 @@ def compute_batch_stats(
     merge job (see ``CdcEngine.replay``).
     """
     keys = snap.key_cols
-    cache = size_hint_rows is None or size_hint_rows >= int(
-        os.environ.get("PANORAMA_PREFILTER_MIN_ROWS", "100000")
-    )
+    cache = size_hint_rows is None or size_hint_rows >= _table.SMALL_BATCH_ROWS
     per_key = events.groupBy(*keys).agg(
         F.max(lsn_col).alias("__maxlsn"),
         F.min(lsn_col).alias("__lsnlo"),
@@ -225,19 +212,77 @@ def compute_batch_stats(
     return BatchStats(per_key=per_key, per_bucket=per_bucket)
 
 
-def _resolve_requested_strategy(arg: str) -> str:
-    """Explicit argument wins; PANORAMA_MERGE_STRATEGY only fills in when
-    the caller left the default ("auto"). Unknown values raise instead of
-    silently degrading to the fused path."""
-    env = os.environ.get("PANORAMA_MERGE_STRATEGY")
-    requested = arg if arg and arg != "auto" else (env or "auto")
+@dataclass(frozen=True)
+class BatchPlan:
+    """How ``merge_batch`` executes one batch (see ``plan_batch``)."""
+
+    strategy: str  # fused / bucket_local / append_delta
+    prefilter: bool  # winner prefilter ahead of the merge exchange
+    size_hint_rows: int  # upper bound on output rows, for the writer choice
+
+
+def plan_batch(
+    requested: str,
+    *,
+    rows_in: int,
+    n_keys: int,
+    resident_rows: int,
+    single_jvm: bool,
+    shared_posix: bool,
+) -> BatchPlan:
+    """The one place the per-batch choices are made, from numbers the
+    driver already holds (batch stats, manifest row counts): the merge
+    strategy, whether the winner prefilter runs, and the writer's size
+    hint. Pure — no Spark — so every rule is unit-testable. An unknown
+    ``requested`` strategy raises instead of silently degrading to the
+    fused path."""
     if requested not in _STRATEGIES:
         raise ValueError(
-            f"unknown merge strategy {requested!r} (from "
-            f"{'PANORAMA_MERGE_STRATEGY' if requested == env else 'argument'}); "
-            f"expected one of {sorted(_STRATEGIES)}"
+            f"unknown merge strategy {requested!r}; expected one of {sorted(_STRATEGIES)}"
         )
-    return requested
+    strategy = requested
+    if strategy == "auto":
+        # bucket_local removes the resident-side exchange — a win only
+        # where the exchange crosses executor JVMs. Under plain local[N]
+        # the shuffle is an in-memory copy and the Arrow hop costs more
+        # (measured 2x slower at 6M resident / 1M batch), so auto picks
+        # it only with real executors (incl. local-cluster), a
+        # resident-dominated merge, and a root every executor can read
+        # as a POSIX path (see table.root_is_shared_posix).
+        strategy = (
+            "bucket_local"
+            if not single_jvm and resident_rows > rows_in and shared_posix
+            else "fused"
+        )
+    # Late materialization (all strategies): when the batch has
+    # significant key duplication (CDC update chains — the common case),
+    # resolve the LWW winner on a *slim* (keys, lsn) aggregate first,
+    # broadcast the winner set, and let only winning rows' wide payloads
+    # into the downstream exchange. Shuffle bytes shrink by the dup
+    # ratio (~8x measured at the bench's Zipf spec); the slim pre-agg
+    # shuffles ~1% of the bytes. Skipped when the winner set is too big
+    # to broadcast or there is nothing to collapse. The broadcast
+    # budget is *bytes*: the winner set carries fixed 64-bit key
+    # fingerprints (xxhash64), so its size is n_keys × ~32 B
+    # regardless of key width — a wide composite string key can no
+    # longer blow the driver past the budget.
+    # The prefilter's fixed cost is one broadcast build + probe per
+    # batch (~0.2 s locally); its saving scales with the batch's
+    # shuffle bytes, so below ~10^5 rows it is pure overhead —
+    # measured round 6: gating it cut ~0.3-0.5 s off every small
+    # fixture batch while the 4M-row bench batches keep it (guide
+    # §1.2: config thresholds after the algorithm is right)
+    max_bytes = int(os.environ.get("PANORAMA_PREFILTER_MAX_BYTES", "128000000"))
+    prefilter = (
+        0 < n_keys
+        and n_keys * 32 <= max_bytes
+        and rows_in >= 2 * n_keys
+        and rows_in >= _table.SMALL_BATCH_ROWS
+    )
+    # an upper bound on the output rows: the writer takes the JVM path
+    # below SMALL_BATCH_ROWS (write_bucket_files)
+    size_hint_rows = n_keys if strategy == "append_delta" else resident_rows + n_keys
+    return BatchPlan(strategy, prefilter, size_hint_rows)
 
 
 def _bucket_local_map_fn(
@@ -330,7 +375,6 @@ def merge_batch(
     strategy: str = "auto",
     stats: BatchStats | None = None,
 ) -> MergeStats:
-    timer = _Timer()
     snap = table.snapshot
     if table.is_batch_committed(batch_id, snap):
         # exactly-once guard: deterministic batch id already applied
@@ -346,7 +390,6 @@ def merge_batch(
     if stats is None:
         stats = compute_batch_stats(events, snap, op_col, lsn_col)
     per_key, per_bucket = stats.per_key, stats.per_bucket
-    timer.lap("stats_agg")
     affected = set(per_bucket)
     if not affected:
         per_key.unpersist()
@@ -360,68 +403,19 @@ def merge_batch(
     # everything below may raise (bad strategy, failed write/commit);
     # the finally guarantees the cached per-key stats never leak
     try:
-        strategy = _resolve_requested_strategy(strategy)
         # O(touched) metadata: loads only the manifests covering the
         # affected buckets, never the whole table's file inventory
         affected_files = snap.files_in_buckets(affected)
-        rows_in_total = sum(int(r["rows_in"]) for r in per_bucket.values())
-        # size hint for the write path choice: small outputs skip the
-        # Arrow task-writer (worker-spawn overhead dominates there)
-        resident_rows_total = sum(f.rows for f in affected_files)
-        if strategy == "auto":
-            # bucket_local removes the resident-side exchange — a win only
-            # where the exchange crosses executor JVMs. Under plain local[N]
-            # the shuffle is an in-memory copy and the Arrow hop costs more
-            # (measured 2x slower at 6M resident / 1M batch), so auto picks
-            # it only with real executors (incl. local-cluster), a
-            # resident-dominated merge, and a root every executor can read
-            # as a POSIX path (see table.root_is_shared_posix).
-            master = table.spark.sparkContext.master
-            single_jvm = master == "local" or master.startswith("local[")
-            strategy = (
-                "bucket_local"
-                if not single_jvm
-                and resident_rows_total > rows_in_total
-                and root_is_shared_posix(table.root)
-                else "fused"
-            )
-
-        # Late materialization (all strategies): when the batch has
-        # significant key duplication (CDC update chains — the common case),
-        # resolve the LWW winner on a *slim* (keys, lsn) aggregate first,
-        # broadcast the winner set, and let only winning rows' wide payloads
-        # into the downstream exchange. Shuffle bytes shrink by the dup
-        # ratio (~8x measured at the bench's Zipf spec); the slim pre-agg
-        # shuffles ~1% of the bytes. Skipped when the winner set is too big
-        # to broadcast or there is nothing to collapse. The broadcast
-        # budget is *bytes*: the winner set carries fixed 64-bit key
-        # fingerprints (xxhash64), so its size is n_keys × ~32 B
-        # regardless of key width; PANORAMA_PREFILTER_MAX_KEYS stays as
-        # a secondary row guard.
-        n_keys = int(sum(int(r["keys"]) for r in per_bucket.values()))
-        prefilter_max = int(os.environ.get("PANORAMA_PREFILTER_MAX_KEYS", "4000000"))
-        prefilter_max_bytes = int(
-            os.environ.get("PANORAMA_PREFILTER_MAX_BYTES", str(256 << 20))
+        master = table.spark.sparkContext.master
+        plan = plan_batch(
+            strategy,
+            rows_in=sum(int(r["rows_in"]) for r in per_bucket.values()),
+            n_keys=sum(int(r["keys"]) for r in per_bucket.values()),
+            resident_rows=sum(f.rows for f in affected_files),
+            single_jvm=master == "local" or master.startswith("local["),
+            shared_posix=root_is_shared_posix(table.root),
         )
-        # the prefilter's fixed cost is one broadcast build + probe per
-        # batch (~0.2 s locally); its saving scales with the batch's
-        # shuffle bytes, so below ~10^5 rows it is pure overhead —
-        # measured round 6: gating it cut ~0.3-0.5 s off every small
-        # fixture batch while the 4M-row bench batches keep it (guide
-        # §1.2: config thresholds after the algorithm is right)
-        prefilter_min_rows = int(
-            os.environ.get("PANORAMA_PREFILTER_MIN_ROWS", "100000")
-        )
-        # the broadcast carries 64-bit key *fingerprints*, so its size is
-        # exactly n_keys × ~32 B regardless of key width — a wide
-        # composite string key can no longer blow the driver past the
-        # byte budget
-        if (
-            0 < n_keys <= prefilter_max
-            and n_keys * 32 <= prefilter_max_bytes
-            and rows_in_total >= 2 * n_keys
-            and rows_in_total >= prefilter_min_rows
-        ):
+        if plan.prefilter:
             # Fingerprint semi-filter: events keep a row iff
             # (xxhash64(keys), lsn) appears in the winner set. Safe by
             # construction — the downstream max_by re-resolves exactly,
@@ -443,12 +437,11 @@ def merge_batch(
                 .filter(F.col(lsn_col).eqNullSafe(F.col("__maxlsn")))
                 .drop("__kh", "__maxlsn")
             )
-            timer.lap("winner_prefilter_plan")
 
         events = events.withColumnsRenamed({op_col: "__op", lsn_col: "__lsn"})
         new_version = snap.version + 1
         replaced_buckets = affected
-        if strategy == "append_delta":
+        if plan.strategy == "append_delta":
             # Merge-on-read write path: dedupe the batch (same pinned
             # exchange = bucket layout) and append the winners as *delta*
             # files carrying (__op, __lsn) — the resident table is neither
@@ -456,10 +449,11 @@ def merge_batch(
             # O(touched buckets). Readers fold deltas (LakeTable.read);
             # LakeTable.compact() folds them into base files.
             new_files = table.fold_and_write(
-                snap, [], new_version, events, kind="delta", size_hint_rows=n_keys
+                snap, [], new_version, events, kind="delta",
+                size_hint_rows=plan.size_hint_rows,
             )
             replaced_buckets = set()  # pure append: nothing replaced
-        elif strategy == "bucket_local":
+        elif plan.strategy == "bucket_local":
             from pyspark.sql.pandas.types import to_arrow_schema
 
             from ..lakehouse.fold import history_fields, target_fields
@@ -488,7 +482,7 @@ def merge_batch(
                     merged,
                     new_version,
                     pre_partitioned=True,
-                    size_hint_rows=resident_rows_total + n_keys,
+                    size_hint_rows=plan.size_hint_rows,
                 )
         else:
             # existing rows of the affected buckets at their *stored*
@@ -506,9 +500,8 @@ def merge_batch(
                 affected_files,
                 new_version,
                 events,
-                size_hint_rows=resident_rows_total + n_keys,
+                size_hint_rows=plan.size_hint_rows,
             )
-        timer.lap(f"merge_write[{strategy}]")
 
         upserted = int(sum(max(r["keys"] - r["deletes"], 0) for r in per_bucket.values()))
         deleted = int(sum(r["deletes"] for r in per_bucket.values()))
@@ -535,7 +528,6 @@ def merge_batch(
             batch_id=batch_id,
             lineage_rows=lineage_rows,
         )
-        timer.lap("commit")
         if lost_race:
             # an identical concurrent retry won the CAS: its state is the
             # one this merge would have produced; our files stay
@@ -552,7 +544,7 @@ def merge_batch(
             rows_deleted=deleted,
             buckets_touched=len(affected),
             snapshot_version=new_snap.version,
-            strategy=strategy,
+            strategy=plan.strategy,
         )
     finally:
         per_key.unpersist()

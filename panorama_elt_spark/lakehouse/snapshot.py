@@ -15,7 +15,7 @@ S3 object overwrite (``panorama_datalake.py:215-258``) and the Athena
 * Commit cost is O(touched buckets), never O(table files): a commit
   writes new manifests for the buckets it touched (plus rewrites of the
   survivor manifests those buckets shared a group with — bounded by the
-  ``PANORAMA_MANIFEST_SPAN`` group size), one manifest-list file that
+  ``MANIFEST_SPAN`` group size in ``table.py``), one manifest-list file that
   mostly *references* untouched manifests, and the fixed-size snapshot
   document. At the 100 TB design point (~16k buckets, minute batches)
   the driver no longer serializes an O(table) file inventory per batch.
@@ -91,6 +91,22 @@ def snapshot_file_delta(
     removed = [f for p, f in f_from.items() if p not in f_to]
     added = [f for p, f in f_to.items() if p not in f_from]
     return removed, added
+
+
+def is_delta_append_range(removed: list["DataFile"], added: list["DataFile"]) -> bool:
+    """Whether a ``snapshot_file_delta`` result is a pure delta-append
+    range: no file removed (no copy-on-write rewrite, no compaction),
+    some added, and every added file a merge-on-read delta. Such a
+    range's change feed can be derived from its delta files alone."""
+    return not removed and bool(added) and all(f.kind == "delta" for f in added)
+
+
+def newer_schema(snap_from: "Snapshot", snap_to: "Snapshot") -> "Snapshot":
+    """The snapshot a change feed between the two projects onto: the one
+    with the newer schema version (``snap_to`` on a tie)."""
+    if snap_to.schema.schema_version >= snap_from.schema.schema_version:
+        return snap_to
+    return snap_from
 
 
 def snapshot_changed_buckets(snap_from: "Snapshot", snap_to: "Snapshot") -> set[int]:
@@ -185,7 +201,7 @@ class Snapshot:
     n_buckets: int
     key_cols: list[str]
     # the manifest list: data files live in immutable manifest files,
-    # each covering a bounded bucket group (PANORAMA_MANIFEST_SPAN)
+    # each covering a bounded bucket group (table.MANIFEST_SPAN)
     manifests: list[ManifestEntry] = dc_field(default_factory=list)
     last_lsn: int = -1
     committed_batches: list[str] = dc_field(default_factory=list)

@@ -44,11 +44,29 @@ from .snapshot import (
     ManifestEntry,
     Snapshot,
     SnapshotLog,
+    is_delta_append_range,
+    newer_schema,
     snapshot_changed_buckets,
     snapshot_file_delta,
 )
 
 BUCKET_COL = "__bucket"
+
+# The one row threshold, read at call time by the stats-cache gate
+# (``compute_batch_stats``), the prefilter gate (``plan_batch``) and the
+# writer gate (``write_bucket_files``): below it a fixed per-batch cost
+# (cache materialisation, broadcast, Python-worker spawn) outweighs a
+# saving that scales with rows.
+SMALL_BATCH_ROWS = 100_000
+# Arrow batch rows for the task writer (why: ``write_bucket_files``)
+ARROW_WRITE_BATCH = 131_072
+# buckets per manifest file: bounds a bucket rewrite's collateral
+MANIFEST_SPAN = 8
+# optimistic-rebase attempts on a CAS conflict (``retry_on_conflict``)
+COMMIT_RETRIES = 5
+# in-document lineage rows / committed batch ids before they spill
+LINEAGE_RETAIN = 4096
+BATCHID_RECENT = 4096
 
 # per-session locks guarding session-conf set/run/restore windows (the
 # arrow write-batch pinning): keyed by session id, created lazily. The
@@ -117,20 +135,16 @@ def _stat_columns(snap: "Snapshot", df_columns: list[str]) -> list[tuple[str, st
     carries, keyed by its literal name.
 
     Per-column opt-out (the Iceberg ``write.metadata.metrics.column.*``
-    knob): table property or env ``PANORAMA_STATS_SKIP_COLS`` (comma
-    list) drops named columns from collection — their files then carry
-    no bound for that key and are simply never skipped on it
-    (conservative). Meant for wide payload strings (document bodies)
-    whose min/max scan costs write throughput but whose bounds no
-    realistic predicate uses."""
+    knob): the ``stats_skip_cols`` table property (comma list) drops
+    named columns from collection — their files then carry no bound for
+    that key and are simply never skipped on it (conservative). Meant
+    for wide payload strings (document bodies) whose min/max scan costs
+    write throughput but whose bounds no realistic predicate uses."""
     from .filestats import ORDERABLE_TYPES
 
     skip = {
         c.strip()
-        for c in (
-            snap.properties.get("stats_skip_cols")
-            or os.environ.get("PANORAMA_STATS_SKIP_COLS", "")
-        ).split(",")
+        for c in snap.properties.get("stats_skip_cols", "").split(",")
         if c.strip()
     }
     return [
@@ -644,20 +658,19 @@ class LakeTable:
 
     def _write_manifests(self, files: list[DataFile]) -> list[ManifestEntry]:
         """Write ``files`` as immutable manifest files, each covering at
-        most ``PANORAMA_MANIFEST_SPAN`` buckets (default 8). The span
-        bounds the collateral of a later rewrite: replacing one bucket
-        re-chunks only its group-mates, never the table."""
+        most ``MANIFEST_SPAN`` buckets. The span bounds the collateral
+        of a later rewrite: replacing one bucket re-chunks only its
+        group-mates, never the table."""
         import json
         import uuid
 
-        span = max(1, int(os.environ.get("PANORAMA_MANIFEST_SPAN", "8")))
         by_bucket: dict[int, list[DataFile]] = {}
         for f in files:
             by_bucket.setdefault(f.bucket, []).append(f)
         buckets = sorted(by_bucket)
         entries: list[ManifestEntry] = []
-        for i in range(0, len(buckets), span):
-            group = buckets[i : i + span]
+        for i in range(0, len(buckets), MANIFEST_SPAN):
+            group = buckets[i : i + MANIFEST_SPAN]
             group_files = [f for b in group for f in by_bucket[b]]
             rel = os.path.join(
                 self.log.manifest_dir, f"m-{uuid.uuid4().hex[:16]}.json"
@@ -900,8 +913,13 @@ class LakeTable:
             T.StructField("__lsn", T.LongType()),
         ]
         if not files:
-            return self.spark.createDataFrame(
-                [], T.StructType(list(snap.schema.to_struct().fields) + extra)
+            # built in the JVM: an empty ``createDataFrame`` is a Python
+            # RDD scan, which starts a Python daemon and workers
+            return self.spark.range(0).select(
+                *[
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in list(snap.schema.to_struct().fields) + extra
+                ]
             )
         by_version: dict[int, list[str]] = {}
         for f in files:
@@ -967,11 +985,10 @@ class LakeTable:
         row groups) and emits (path, bucket, rows) — the driver never
         walks the output directory or reads parquet footers on the
         commit path (the Iceberg writer shape). Roots executors cannot
-        reach as POSIX paths fall back to the JVM writer + footer
-        stats (``PANORAMA_TASK_WRITE=0`` forces the fallback), as do
-        writes the caller hints are small (``size_hint_rows`` below
-        ``PANORAMA_TASK_WRITE_MIN_ROWS``, default 100k): the Arrow hop
-        pays off on bulk, not on a few-thousand-row batch where the
+        reach as POSIX paths (``root_is_shared_posix``) fall back to the
+        JVM writer + footer stats, as do writes the caller hints are
+        small (``size_hint_rows`` below ``SMALL_BATCH_ROWS``): the Arrow
+        hop pays off on bulk, not on a few-thousand-row batch where the
         Python-worker stage spawn dominates (footer reads there are a
         handful of driver-side metadata reads). Every merge and linear
         compaction passes the hint (an upper bound on its output rows);
@@ -1001,24 +1018,10 @@ class LakeTable:
             keys = sort_exprs or [F.col(c) for c in sort_within]
             out = out.sortWithinPartitions(F.col(BUCKET_COL), *keys)
         schema_version = snap.schema.schema_version
-        min_rows = int(os.environ.get("PANORAMA_TASK_WRITE_MIN_ROWS", "100000"))
-        task_write = (
-            os.environ.get("PANORAMA_TASK_WRITE", "1") != "0"
-            and root_is_shared_posix(self.root)
-            and (size_hint_rows is None or size_hint_rows >= min_rows)
+        task_write = root_is_shared_posix(self.root) and (
+            size_hint_rows is None or size_hint_rows >= SMALL_BATCH_ROWS
         )
-        # PANORAMA_WRITE_STATS=0 skips zone-map collection (files then
-        # carry no stats → never skipped, always correct) — an escape
-        # hatch for write-bound pipelines where min/max scans of wide
-        # string columns aren't worth the read-side skipping
-        stat_cols = (
-            _stat_columns(snap, df.columns)
-            if os.environ.get("PANORAMA_WRITE_STATS", "1") != "0"
-            else []
-        )
-        if max_rows_per_file is None:
-            env_cap = os.environ.get("PANORAMA_MAX_ROWS_PER_FILE")
-            max_rows_per_file = int(env_cap) if env_cap else None
+        stat_cols = _stat_columns(snap, df.columns)
         if task_write:
             import json
 
@@ -1033,10 +1036,8 @@ class LakeTable:
             key_types = [
                 f.type for f in snap.schema.fields if f.name in snap.key_cols
             ]
-            bloom_on = (
-                os.environ.get("PANORAMA_BLOOM", "1") != "0"
-                and len(key_types) == len(snap.key_cols)
-                and all(t in _MUR_TYPES for t in key_types)
+            bloom_on = len(key_types) == len(snap.key_cols) and all(
+                t in _MUR_TYPES for t in key_types
             )
             if bloom_on:
                 out = out.withColumn(
@@ -1066,12 +1067,11 @@ class LakeTable:
             # pinned value stuck session-wide. The async-compaction
             # thread runs on its OWN cloned session (CdcEngine), so the
             # lock never serializes ingest against maintenance.
-            batch_rows = os.environ.get("PANORAMA_ARROW_WRITE_BATCH", "131072")
             conf = self.spark.conf
             key = "spark.sql.execution.arrow.maxRecordsPerBatch"
             with _session_conf_lock(self.spark):
                 old = conf.get(key)
-                conf.set(key, batch_rows)
+                conf.set(key, str(ARROW_WRITE_BATCH))
                 try:
                     manifest_rows = writer_df.collect()
                 finally:
@@ -1121,22 +1121,30 @@ class LakeTable:
         """Fold ``files`` (base and delta alike, read unfolded at their
         stored ``__op``/``__lsn``) plus optional ``events`` (same
         columns) with ONE ``lww_fold`` and write the winners as bucket
-        files. The fold's exchange is pinned to ``snap.n_buckets``
-        (``_pinned_shuffle``), so it already is the bucket layout and
-        the write adds no second shuffle. LWW by max ``__lsn`` is
+        files. The fold's exchange is pinned to the output bucket count
+        (``write_kw["n_buckets_override"]`` or ``snap.n_buckets``,
+        through ``_pinned_shuffle``), so it already is the bucket layout
+        and the write adds no second shuffle. LWW by max ``__lsn`` is
         associative, so folding a delta-holding bucket together with the
-        events equals folding it first and the events after.
+        events equals folding it first and the events after. Base files
+        alone have nothing to fold; they are written through one
+        exchange on the bucket hash.
 
-        The one fold-and-write of compaction, the fused merge and the
-        merge-on-read delta append; ``write_kw`` goes to
-        ``write_bucket_files`` (``size_hint_rows``, ``kind``, sort and
-        file-roll options)."""
-        keys = snap.key_cols
-        payload = [c for c in snap.schema.names if c not in keys]
+        The one fold-and-write of compaction, rebucketing, the fused
+        merge and the merge-on-read delta append; ``write_kw`` goes to
+        ``write_bucket_files`` (``size_hint_rows``, ``kind``, sort,
+        file-roll and bucket-count options)."""
+        if events is None and all(f.kind == "base" for f in files):
+            return self.write_bucket_files(
+                self._read_mapped(snap, files), new_version, **write_kw
+            )
         rows = self._read_mapped(snap, files) if files else None
         if events is not None:
             rows = events if rows is None else rows.unionByName(events)
-        with _pinned_shuffle(self.spark, snap.n_buckets):
+        keys = snap.key_cols
+        payload = [c for c in snap.schema.names if c not in keys]
+        n_buckets = write_kw.get("n_buckets_override") or snap.n_buckets
+        with _pinned_shuffle(self.spark, n_buckets):
             return self.write_bucket_files(
                 lww_fold(rows, keys, payload),
                 new_version,
@@ -1216,17 +1224,16 @@ class LakeTable:
         minute-grain epochs × buckets would otherwise put tens of
         millions of lineage rows into every version file):
 
-        * lineage rows beyond ``PANORAMA_LINEAGE_RETAIN`` (default 4096)
-          spill oldest-first to parquet under ``_meta/lineage/``; the
-          snapshot lists its spill files, so readers never pick up
-          orphans from failed commits, and ``lineage_df()`` folds spilled
-          + in-doc rows transparently.
-        * batch ids beyond ``PANORAMA_BATCHID_RECENT`` (default 4096)
-          spill oldest-first to immutable files under ``_meta/batchids/``
-          — no id is ever lost (the exactly-once guard consults spills
-          via ``is_batch_committed`` only when the recent in-document
-          window misses, i.e. never on the new-batch hot path beyond a
-          cached read per spill file per process).
+        * lineage rows beyond ``LINEAGE_RETAIN`` spill oldest-first to
+          parquet under ``_meta/lineage/``; the snapshot lists its spill
+          files, so readers never pick up orphans from failed commits,
+          and ``lineage_df()`` folds spilled + in-doc rows transparently.
+        * batch ids beyond ``BATCHID_RECENT`` spill oldest-first to
+          immutable files under ``_meta/batchids/`` — no id is ever
+          lost (the exactly-once guard consults spills via
+          ``is_batch_committed`` only when the recent in-document window
+          misses, i.e. never on the new-batch hot path beyond a cached
+          read per spill file per process).
 
         ``retry_on_conflict=True`` turns a CAS loss into an *optimistic
         rebase* (Iceberg-style conflict resolution) when the winning
@@ -1237,12 +1244,7 @@ class LakeTable:
         batch can race without failing either. Default off: the bare
         call keeps strict first-writer-wins semantics.
         """
-        max_retries = (
-            int(os.environ.get("PANORAMA_COMMIT_RETRIES", "5"))
-            if retry_on_conflict
-            else 0
-        )
-        for _ in range(max_retries):
+        for _ in range(COMMIT_RETRIES if retry_on_conflict else 0):
             try:
                 return self._commit_attempt(
                     parent,
@@ -1353,24 +1355,24 @@ class LakeTable:
             for r in (lineage_rows or [])
         ]
         lineage_files = list(parent.lineage_files)
-        retain = int(os.environ.get("PANORAMA_LINEAGE_RETAIN", "4096"))
-        if len(lineage_all) > retain:
-            spilled = self._write_lineage_spill(lineage_all[:-retain], new_version)
+        if len(lineage_all) > LINEAGE_RETAIN:
+            spilled = self._write_lineage_spill(
+                lineage_all[:-LINEAGE_RETAIN], new_version
+            )
             lineage_files.append(spilled)
-            lineage_all = lineage_all[-retain:]
+            lineage_all = lineage_all[-LINEAGE_RETAIN:]
         batches = list(parent.committed_batches) + ([batch_id] if batch_id else [])
         batchid_files = list(parent.batchid_files)
-        recent_b = int(os.environ.get("PANORAMA_BATCHID_RECENT", "4096"))
-        if len(batches) > recent_b:
+        if len(batches) > BATCHID_RECENT:
             import json
             import uuid
 
             rel = f"_meta/batchids/spill-v{new_version}-{uuid.uuid4().hex[:12]}.json"
             self.io.write_text(
-                os.path.join(self.root, rel), json.dumps(batches[:-recent_b])
+                os.path.join(self.root, rel), json.dumps(batches[:-BATCHID_RECENT])
             )
             batchid_files.append(rel)
-            batches = batches[-recent_b:]
+            batches = batches[-BATCHID_RECENT:]
         new_snap = Snapshot(
             version=new_version,
             schema=schema,
@@ -1493,22 +1495,11 @@ class LakeTable:
         )
         return snapshot_changed_buckets(snap_from, snap_to)
 
-    def _file_set_delta(
-        self, snap_from: Snapshot, snap_to: Snapshot
-    ) -> tuple[list[DataFile], list[DataFile]]:
-        return snapshot_file_delta(snap_from, snap_to)
-
     def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Change feed between two snapshots (the engine as a CDC
-        *source*, the Iceberg changelog-scan analogue): one full-outer
-        join on the key columns of the two states, payloads compared as
-        structs. Returns key columns + ``change_op`` (I/U/D) + the new
-        payload (nulls for D); unchanged rows are dropped.
-
-        Scale: the scan is pruned to ``changed_buckets`` — buckets whose
-        file sets are identical cannot differ and are never read — and
-        both sides are bucket-aligned states, so the join shuffles only
-        the touched fraction of the table once per side.
+        *source*, the Iceberg changelog-scan analogue): key columns +
+        ``change_op`` (I/U/D) + the new payload (nulls for D); unchanged
+        rows are dropped.
 
         Schema epochs: when the two snapshots carry different schema
         versions, both sides are projected onto the **newer** schema via
@@ -1522,33 +1513,34 @@ class LakeTable:
         schema — emit U.
 
         Merge-on-read fast path: when the whole version range is pure
-        delta appends (no file removed — no CoW rewrite, no compaction),
-        the I/U/D feed is derived from the range's delta files directly
-        (they already carry ``__op``/``__lsn``): the NEW state is never
-        reconstructed, and the join shrinks from full-outer of two
-        O(touched-bucket) states to range-winners (O(range events))
-        against the old state — classification I-vs-U and no-op-update
-        suppression still need the old side. Byte-identical output to
-        the diff path (parity-tested); ``PANORAMA_CHANGES_MOR_FAST=0``
-        forces the diff path."""
+        delta appends (``is_delta_append_range``: no file removed — no
+        CoW rewrite, no compaction), the I/U/D feed is derived from the
+        range's delta files directly (they already carry
+        ``__op``/``__lsn``): the NEW state is never reconstructed, and
+        the join shrinks from full-outer of two O(touched-bucket) states
+        to range-winners (O(range events)) against the old state —
+        classification I-vs-U and no-op-update suppression still need
+        the old side. Any other range takes the state diff
+        (``_changes_diff``); both produce the same rows (parity-tested
+        with ``_changes_diff`` as the reference)."""
         snap = self.snapshot if to_version is None else self.log.read_version(to_version)
         snap_from = self.log.read_version(from_version)
-        proj = (
-            snap
-            if snap.schema.schema_version >= snap_from.schema.schema_version
-            else snap_from
-        )
-        removed, added = self._file_set_delta(snap_from, snap)
-        if (
-            not removed
-            and added
-            and all(f.kind == "delta" for f in added)
-            and os.environ.get("PANORAMA_CHANGES_MOR_FAST", "1") != "0"
-        ):
-            return self._changes_from_deltas(snap_from, proj, added)
+        removed, added = snapshot_file_delta(snap_from, snap)
+        if is_delta_append_range(removed, added):
+            return self._changes_from_deltas(snap_from, snap, added)
+        return self._changes_diff(snap_from, snap)
+
+    def _changes_diff(self, snap_from: Snapshot, snap: Snapshot) -> DataFrame:
+        """changes() as a state diff: one full-outer join on the key
+        columns of the two states, payloads compared as structs. The
+        scan is pruned to the buckets whose file sets differ — identical
+        file sets cannot differ — and both sides are bucket-aligned
+        states, so the join shuffles only the touched fraction of the
+        table once per side."""
+        proj = newer_schema(snap_from, snap)
         keys = proj.key_cols
         payload = [c for c in proj.schema.names if c not in keys]
-        touched = self.changed_buckets(from_version, to_version)
+        touched = snapshot_changed_buckets(snap_from, snap)
         old = self._read_state(snap_from, proj, touched).select(
             *keys, F.struct(*payload).alias("__old")
         )
@@ -1568,13 +1560,14 @@ class LakeTable:
         )
 
     def _changes_from_deltas(
-        self, snap_from: Snapshot, proj: Snapshot, delta_files: list[DataFile]
+        self, snap_from: Snapshot, snap: Snapshot, delta_files: list[DataFile]
     ) -> DataFrame:
         """changes() over a pure delta-append range: LWW winners of the
         range's delta files, classified against the OLD state only. A
         delete of a key that never existed emits nothing; an update
         whose payload equals the old row emits nothing — the same rows
         the diff path produces."""
+        proj = newer_schema(snap_from, snap)
         keys = proj.key_cols
         payload = [c for c in proj.schema.names if c not in keys]
         winners = lww_fold(self._read_mapped(proj, delta_files), keys, payload)
@@ -1806,7 +1799,9 @@ class LakeTable:
         folded current state (merge-on-read deltas resolved) under the
         new ``pmod(hash(keys), n)`` layout, with the optional clustering
         knobs of ``compact``. One shuffle on the new bucket hash, one
-        commit.
+        commit: a table with deltas goes through ``fold_and_write`` with
+        the fold's exchange pinned to the new count, so the fold is the
+        new layout; a base-only table is written through one exchange.
 
         Everything per-snapshot follows automatically: later merges,
         point-lookup bucket pruning, and the data source's partition
@@ -1824,11 +1819,12 @@ class LakeTable:
             return snap
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        # with_lsn: rows keep their stored winner LSN through the rewrite
-        # so out-of-order arbitration survives a bucket-count change
-        merged = self.read(version=snap.version, with_lsn=True)
-        new_files = self.write_bucket_files(
-            merged,
+        # rows keep their stored op and winner LSN through the rewrite
+        # (tombstones included) so out-of-order arbitration survives a
+        # bucket-count change
+        new_files = self.fold_and_write(
+            snap,
+            snap.files,
             snap.version + 1,
             sort_within=sort_by,
             max_rows_per_file=max_rows_per_file,
@@ -1859,7 +1855,7 @@ class LakeTable:
         resolves the winner per key (tombstones and stored LSNs kept),
         and the write adds no second shuffle. A linear compaction passes
         its input row count as the size hint, so a rewrite below
-        ``PANORAMA_TASK_WRITE_MIN_ROWS`` takes the JVM writer with
+        ``SMALL_BATCH_ROWS`` takes the JVM writer with
         footer zone maps and spawns no Python worker; at or above the
         gate it keeps the task writer and its bloom sidecars.
 
@@ -1931,12 +1927,7 @@ class LakeTable:
             max_rows_per_file=max_rows_per_file,
             size_hint_rows=sum(f.rows for f in files) if sort_by is None else None,
         )
-        if any(f.kind == "delta" for f in files):
-            new_files = self.fold_and_write(snap, files, snap.version + 1, **write_kw)
-        else:
-            new_files = self.write_bucket_files(
-                self._read_mapped(snap, files), snap.version + 1, **write_kw
-            )
+        new_files = self.fold_and_write(snap, files, snap.version + 1, **write_kw)
         # retry_on_conflict: a merge-on-read ingest batch landing mid-
         # compaction must not kill either job — its new deltas are
         # carried forward onto the compacted base (``_rebase``)

@@ -13,11 +13,10 @@ Cluster sizing knobs (pass via ``extra_conf`` on a real deployment):
   hundreds of thousands of tasks.
 * table ``n_buckets``: size so one bucket's rewrite fits an executor
   comfortably (~16k buckets ⇒ ~6 GB/bucket at 100 TB).
-* ``PANORAMA_PREFILTER_MAX_BYTES`` (default 256 MiB): winner-broadcast
-  budget; the broadcast carries fixed 64-bit key fingerprints, so it
-  budgets n_keys × ~32 B regardless of key width.
-  ``PANORAMA_PREFILTER_MAX_KEYS`` is a secondary row guard. Keep the
-  bytes budget well under driver memory.
+* ``PANORAMA_PREFILTER_MAX_BYTES`` (default 128 MB, i.e. 4M keys):
+  winner-broadcast budget; the broadcast carries fixed 64-bit key
+  fingerprints, so it budgets n_keys × ~32 B regardless of key width.
+  Keep it well under driver memory; ``0`` disables the prefilter.
 
 DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
 is off: with it on, every PySpark function call makes several extra
@@ -55,9 +54,12 @@ def _default_local_dir(master: str) -> str | None:
     ``PANORAMA_LOCAL_DIR=default`` keeps Spark's default; unset picks
     ``/dev/shm`` only when it exists with ≥32 GiB free (the gate keeps
     a larger run from wedging on a full tmpfs — below it, Spark's
-    default stands). Spark still creates its own per-session
-    ``spark-<uuid>`` subdirs, so concurrent sessions share the parent
-    safely and clean up via the normal shutdown hooks.
+    default stands). The directory is per user,
+    ``panorama-spark-local-<uid>``, mode 0700 (``_private_dir``): a
+    world-shared parent on tmpfs would let another local user plant or
+    read shuffle files. Spark still creates its own per-session
+    ``spark-<uuid>`` subdirs, so one user's concurrent sessions share
+    the parent safely and clean up via the normal shutdown hooks.
     """
     env = os.environ.get("PANORAMA_LOCAL_DIR")
     if env:
@@ -73,12 +75,22 @@ def _default_local_dir(master: str) -> str | None:
         return None
     if st.f_bavail * st.f_frsize < 32 << 30:
         return None
-    path = os.path.join(shm, "panorama-spark-local")
+    return _private_dir(os.path.join(shm, f"panorama-spark-local-{os.getuid()}"))
+
+
+def _private_dir(path: str) -> str | None:
+    """``path`` created (or found) as a real directory owned by this
+    user and writable by no one else; None (Spark's default) if it is a
+    symlink, belongs to another uid, or is group- or world-writable."""
+    import stat
+
     try:
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(path, mode=0o700, exist_ok=True)
+        st = os.lstat(path)
     except OSError:
         return None
-    return path
+    ok = stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid()
+    return path if ok and not st.st_mode & (stat.S_IWGRP | stat.S_IWOTH) else None
 
 
 def get_spark(

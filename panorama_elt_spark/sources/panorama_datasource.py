@@ -110,6 +110,8 @@ from ..lakehouse.fold import (
 from ..lakehouse.snapshot import (
     Snapshot,
     SnapshotLog,
+    is_delta_append_range,
+    newer_schema,
     snapshot_changed_buckets,
     snapshot_file_delta,
 )
@@ -364,11 +366,7 @@ def _plan_changes(
     Mirrors ``LakeTable.changes``'s pruning and its merge-on-read fast
     path (pure delta-append range ⇒ classify range winners against the
     old state; anything rewritten ⇒ full state diff)."""
-    proj = (
-        snap_to
-        if snap_to.schema.schema_version >= snap_from.schema.schema_version
-        else snap_from
-    )
+    proj = newer_schema(snap_from, snap_to)
     target = _target_fields(proj.schema)
     # histories accumulate monotonically: the LATER snapshot covers all
     # schema versions either side's files can carry
@@ -378,14 +376,8 @@ def _plan_changes(
     histories = history_fields(hist_src.schema_history)
     keys = list(proj.key_cols)
     removed, added = snapshot_file_delta(snap_from, snap_to)
-    mor = (
-        not removed
-        and bool(added)
-        and all(f.kind == "delta" for f in added)
-        and os.environ.get("PANORAMA_CHANGES_MOR_FAST", "1") != "0"
-    )
     parts: list[ChangesPartition] = []
-    if mor:
+    if is_delta_append_range(removed, added):
         by_bucket: dict[int, list] = {}
         for f in added:
             by_bucket.setdefault(f.bucket, []).append(f)

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from panorama_elt_spark.functions.murmur import murmur3_hash
 from panorama_elt_spark.lakehouse import Field, LakeTable, TableSchema
+from panorama_elt_spark.lakehouse import table as table_mod
 from panorama_elt_spark.lakehouse.bloom import (
     build,
     deserialize,
@@ -61,8 +62,7 @@ def _bloom_table(spark, tmp_path, **env):
     return t
 
 
-def test_sidecars_written_and_pruning_bites(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
+def test_sidecars_written_and_pruning_bites(spark, tmp_path):
     t = _bloom_table(spark, tmp_path)
     snap = t.snapshot
     files = snap.files
@@ -89,7 +89,8 @@ def test_sidecars_written_and_pruning_bites(spark, tmp_path, monkeypatch):
 def test_bloom_keeps_mor_lookup_correct(spark, tmp_path, monkeypatch):
     """Delta files carry blooms too; a key updated in a delta must fold
     base + delta even with pruning active."""
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
+    # the toy merges would take the JVM writer, which writes no sidecars
+    monkeypatch.setattr(table_mod, "SMALL_BATCH_ROWS", 0)
     from panorama_elt_spark.cdc import CdcEngine, ChangeLogSpec, generate_change_log
     from tests.test_cdc_core import REPO_SCHEMA_V1
 
@@ -109,16 +110,14 @@ def test_bloom_keeps_mor_lookup_correct(spark, tmp_path, monkeypatch):
 
 
 def test_bloom_disabled_and_jvm_fallback_still_correct(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("PANORAMA_BLOOM", "0")
+    # task-writer files whose sidecars are gone: absence means "keep"
     t1 = LakeTable.create(spark, str(tmp_path / "a"), SCHEMA, ["id"], n_buckets=2)
     t1.append(_frame(spark, 2000))
-    assert not any(
-        os.path.exists(os.path.join(t1.root, f.path + ".bloom"))
-        for f in t1.snapshot.files
-    )
+    for f in t1.snapshot.files:
+        os.remove(os.path.join(t1.root, f.path + ".bloom"))
     assert t1.read_where([("id", "eq", 55)]).count() == 1
-    monkeypatch.delenv("PANORAMA_BLOOM")
-    monkeypatch.setenv("PANORAMA_TASK_WRITE", "0")  # JVM writer: no sidecars
+    # JVM writer (a root executors cannot write as POSIX paths): no sidecars
+    monkeypatch.setattr(table_mod, "root_is_shared_posix", lambda root: False)
     t2 = LakeTable.create(spark, str(tmp_path / "b"), SCHEMA, ["id"], n_buckets=2)
     t2.append(_frame(spark, 2000))
     assert not any(
@@ -128,8 +127,7 @@ def test_bloom_disabled_and_jvm_fallback_still_correct(spark, tmp_path, monkeypa
     assert t2.read_where([("id", "eq", 55)]).count() == 1
 
 
-def test_vacuum_reaps_orphan_sidecars(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
+def test_vacuum_reaps_orphan_sidecars(spark, tmp_path):
     t = _bloom_table(spark, tmp_path)
     n_sidecars = sum(
         1
@@ -153,10 +151,9 @@ def test_vacuum_reaps_orphan_sidecars(spark, tmp_path, monkeypatch):
     assert t.read_where([("id", "eq", 77)]).count() == 1
 
 
-def test_bloom_through_datasource_planning(spark, tmp_path, monkeypatch):
+def test_bloom_through_datasource_planning(spark, tmp_path):
     """format("panorama") point lookups probe the same sidecars at plan
     time: fewer files planned, identical rows."""
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
     from pyspark.sql.datasource import EqualTo
     from panorama_elt_spark.catalog import register_data_source
     from panorama_elt_spark.sources.panorama_datasource import PanoramaReader

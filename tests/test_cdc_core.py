@@ -17,6 +17,7 @@ from panorama_elt_spark.cdc import (
     merge_batch,
 )
 from panorama_elt_spark.lakehouse import Field, LakeTable, TableSchema
+from panorama_elt_spark.lakehouse import table as table_mod
 from panorama_elt_spark.lakehouse.fold import lww_fold
 
 REPO_SCHEMA_V1 = TableSchema(
@@ -456,27 +457,23 @@ def test_winner_prefilter_matches_unfiltered_merge(spark, tmp_path, monkeypatch)
     dup ratio, so every other test exercises it) must produce the exact
     state of the unfiltered fused merge."""
     log = generate_change_log(spark, SPEC)
-    monkeypatch.setenv("PANORAMA_PREFILTER_MIN_ROWS", "0")  # force it on
+    monkeypatch.setattr(table_mod, "SMALL_BATCH_ROWS", 0)  # force it on
     t1 = _make_table(spark, tmp_path / "with_pf")
     merge_batch(t1, log, "b0")
-    monkeypatch.setenv("PANORAMA_PREFILTER_MAX_KEYS", "0")  # disable
+    monkeypatch.setenv("PANORAMA_PREFILTER_MAX_BYTES", "0")  # disable
     t2 = _make_table(spark, tmp_path / "no_pf")
     merge_batch(t2, log, "b0")
     assert _rows(t1.read()) == _rows(t2.read())
 
 
-def test_strategy_argument_beats_env_and_invalid_raises(spark, tmp_path, monkeypatch):
+def test_strategy_argument_passes_through_and_invalid_raises(spark, tmp_path):
     t = _make_table(spark, tmp_path)
     log = generate_change_log(spark, SPEC)
-    # explicit argument wins over the env var
-    monkeypatch.setenv("PANORAMA_MERGE_STRATEGY", "bucket_local")
-    stats = merge_batch(t, log, "b0", strategy="fused")
-    assert stats.strategy == "fused"
-    # unknown strategy (arg or env) raises instead of silently degrading
-    monkeypatch.setenv("PANORAMA_MERGE_STRATEGY", "bucketlocal")
+    stats = merge_batch(t, log, "b0", strategy="append_delta")
+    assert stats.strategy == "append_delta"
+    # unknown strategy raises instead of silently degrading
     with pytest.raises(ValueError, match="bucketlocal"):
-        merge_batch(t, log, "b1", strategy="auto")
-    monkeypatch.delenv("PANORAMA_MERGE_STRATEGY")
+        merge_batch(t, log, "b1", strategy="bucketlocal")
     with pytest.raises(ValueError, match="fussed"):
         merge_batch(t, log, "b1", strategy="fussed")
 
@@ -519,7 +516,7 @@ def test_prefilter_is_null_key_safe(spark, tmp_path, monkeypatch):
     must not silently drop NULL-keyed events (the prefilter fires
     data-dependently, so dropping them would make the same log produce
     different states depending on dup ratio)."""
-    monkeypatch.setenv("PANORAMA_PREFILTER_MIN_ROWS", "0")  # force it on
+    monkeypatch.setattr(table_mod, "SMALL_BATCH_ROWS", 0)  # force it on
     nullable = TableSchema(
         [
             Field(1, "repo", "string", True),
@@ -589,11 +586,11 @@ def test_prefilter_on_off_parity_nasty_log(spark, tmp_path, monkeypatch):
         "lsn bigint, op string, repo string, path string, commit string, lang string, content string",
     )
     states = {}
-    monkeypatch.setenv("PANORAMA_PREFILTER_MIN_ROWS", "0")
+    monkeypatch.setattr(table_mod, "SMALL_BATCH_ROWS", 0)
     for strategy in ("fused", "append_delta"):
         for prefilter in (True, False):
             monkeypatch.setenv(
-                "PANORAMA_PREFILTER_MAX_KEYS", "4000000" if prefilter else "0"
+                "PANORAMA_PREFILTER_MAX_BYTES", "128000000" if prefilter else "0"
             )
             root = str(tmp_path / f"{strategy}_{prefilter}")
             t = LakeTable.create(spark, root, nullable, ["repo", "path"], n_buckets=4)
@@ -611,25 +608,42 @@ def test_prefilter_on_off_parity_nasty_log(spark, tmp_path, monkeypatch):
         assert state == sorted(expected, key=str)
 
 
-def test_stats_prefetch_on_off_parity(spark, tmp_path, monkeypatch):
-    """The stats prefetch is pure pipelining: with it disabled the replay
-    produces the identical state, lineage, and batch ids (byte-identical
-    per-row sha256)."""
+def serial_replay(engine, log, batch_size):
+    """The stats prefetch's reference: one public ``apply_batch`` per
+    aligned batch of a fresh table, each computing its own stats."""
+    max_lsn = log.agg(F.max("lsn")).collect()[0][0]
+    return [
+        engine.apply_batch(
+            log.filter(
+                (F.col("lsn") >= k * batch_size) & (F.col("lsn") < (k + 1) * batch_size)
+            ),
+            f"b{k}@{batch_size}",
+        )
+        for k in range(max_lsn // batch_size + 1)
+    ]
+
+
+def test_stats_prefetch_on_off_parity(spark, tmp_path):
+    """The stats prefetch is pure pipelining: ``replay`` produces the
+    state, lineage, and batch ids of a serial loop of ``apply_batch``
+    calls without it (byte-identical per-row sha256)."""
     log = generate_change_log(spark, SPEC)
     states = {}
     for flag in ("1", "0"):
-        monkeypatch.setenv("PANORAMA_PREFETCH_STATS", flag)
         root = tmp_path / f"prefetch_{flag}"
         root.mkdir()
         t = _make_table(spark, root)
-        report = CdcEngine(t).replay(log, batch_size=1000)
+        if flag == "1":
+            batches = CdcEngine(t).replay(log, batch_size=1000).batches
+        else:
+            batches = serial_replay(CdcEngine(t), log, batch_size=1000)
         states[flag] = {
             "state": sorted(
                 tuple(r) for r in t.read().select(
                     "repo", "path", "commit", F.sha2("content", 256)
                 ).collect()
             ),
-            "batches": [b.batch_id for b in report.batches],
+            "batches": [b.batch_id for b in batches],
             "lineage": sorted(
                 tuple(r) for r in t.lineage_df().drop("snapshot_version").collect()
             ),

@@ -63,11 +63,15 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_mor_fast_path_parity_with_diff(delta_table, monkeypatch):
+def _diff(t, v_from):
+    """The state-diff change feed, the fast path's reference."""
+    return t._changes_diff(t.log.read_version(v_from), t.snapshot)
+
+
+def test_mor_fast_path_parity_with_diff(delta_table):
     t, v_from = delta_table
     fast = _rows(t.changes(v_from))
-    monkeypatch.setenv("PANORAMA_CHANGES_MOR_FAST", "0")
-    diff = _rows(t.changes(v_from))
+    diff = _rows(_diff(t, v_from))
     assert fast == diff
     assert fast == sorted(
         [
@@ -78,30 +82,29 @@ def test_mor_fast_path_parity_with_diff(delta_table, monkeypatch):
     )
 
 
-def test_mor_fast_path_is_taken_and_skips_new_state(delta_table, monkeypatch):
+def test_mor_fast_path_is_taken_and_skips_new_state(delta_table):
     """The fast path must actually engage on a pure-delta range (guard
-    against silently always falling back): force-disable flips the plan."""
+    against silently always falling back): the diff reference's plan
+    differs."""
     t, v_from = delta_table
     plan_fast = t.changes(v_from)._jdf.queryExecution().optimizedPlan().toString()
-    monkeypatch.setenv("PANORAMA_CHANGES_MOR_FAST", "0")
-    plan_diff = t.changes(v_from)._jdf.queryExecution().optimizedPlan().toString()
+    plan_diff = _diff(t, v_from)._jdf.queryExecution().optimizedPlan().toString()
     # diff path full-outer-joins two states; fast path left-joins winners
     assert "FullOuter" in plan_diff and "FullOuter" not in plan_fast
 
 
-def test_mor_fast_path_declines_after_compaction(delta_table, monkeypatch):
+def test_mor_fast_path_declines_after_compaction(delta_table):
     """Compaction (or any CoW rewrite) inside the range removes files —
     the feed falls back to the diff path and stays correct."""
     t, v_from = delta_table
     t.compact()
     fast_route = _rows(t.changes(v_from))
-    monkeypatch.setenv("PANORAMA_CHANGES_MOR_FAST", "0")
-    diff = _rows(t.changes(v_from))
+    diff = _rows(_diff(t, v_from))
     assert fast_route == diff
     assert ("r", "k1", "U", "a3") in fast_route
 
 
-def test_mor_fast_path_across_schema_epoch(spark, tmp_path, monkeypatch):
+def test_mor_fast_path_across_schema_epoch(spark, tmp_path):
     """Delta files written under an older schema version classify
     correctly after an ALTER (field-id projection inside the fast path)."""
     t = LakeTable.create(spark, str(tmp_path / "t2"), SCHEMA, ["repo", "path"], n_buckets=4)
@@ -121,6 +124,5 @@ def test_mor_fast_path_across_schema_epoch(spark, tmp_path, monkeypatch):
     )
     t.alter_schema(new_schema)
     fast = _rows(t.changes(v_from))
-    monkeypatch.setenv("PANORAMA_CHANGES_MOR_FAST", "0")
-    diff = _rows(t.changes(v_from))
+    diff = _rows(_diff(t, v_from))
     assert fast == diff == [("r", "k1", "U", "a2", 0)]

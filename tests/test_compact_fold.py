@@ -3,7 +3,7 @@ bucket's base files, its merge-on-read deltas and (for the merge) the
 batch's events with a single ``lww_fold`` whose exchange is pinned to
 the bucket layout (``LakeTable.fold_and_write``), so the write adds no
 second shuffle. Linear compaction hints its size to the writer: below
-``PANORAMA_TASK_WRITE_MIN_ROWS`` it takes the JVM writer (footer zone
+``SMALL_BATCH_ROWS`` it takes the JVM writer (footer zone
 maps, no bloom sidecars, no Python worker); clustering compaction keeps
 the task writer for its read-side metadata.
 
@@ -59,8 +59,7 @@ def _sidecars(t, files):
     return [f for f in files if os.path.exists(os.path.join(t.root, f.path + ".bloom"))]
 
 
-def test_small_linear_compaction_takes_the_jvm_writer(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("PANORAMA_TASK_WRITE_MIN_ROWS", raising=False)
+def test_small_linear_compaction_takes_the_jvm_writer(spark, tmp_path):
     t, _late, _spec = build(spark, str(tmp_path / "t"))
     before = _rows(t.read(with_lsn=True))
     assert any(r[-2] == "D" for r in before)  # tombstones are part of the state
@@ -72,8 +71,7 @@ def test_small_linear_compaction_takes_the_jvm_writer(spark, tmp_path, monkeypat
     assert _rows(t.read(with_lsn=True)) == before
 
 
-def test_clustering_compaction_keeps_the_task_writer(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("PANORAMA_TASK_WRITE_MIN_ROWS", raising=False)
+def test_clustering_compaction_keeps_the_task_writer(spark, tmp_path):
     t, _late, _spec = build(spark, str(tmp_path / "t"))
     before = _rows(t.read(with_lsn=True))
     assert t.compact(sort_by=["path"]) == N_BUCKETS

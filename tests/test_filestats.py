@@ -148,11 +148,13 @@ class LakeSnapStub:
 def test_stats_written_both_paths(spark, tmp_path, monkeypatch):
     """Task-write kernel and JVM-writer footer fallback both attach
     zone maps, with matching values for the same data."""
+    from panorama_elt_spark.lakehouse import table as table_mod
+
     df = _frame(spark).coalesce(1)
     per_path = {}
-    for flag, sub in (("1", "task"), ("0", "jvm")):
-        monkeypatch.setenv("PANORAMA_TASK_WRITE", flag)
-        monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
+    for posix, sub in ((True, "task"), (False, "jvm")):
+        # a root executors cannot write as POSIX paths takes the JVM writer
+        monkeypatch.setattr(table_mod, "root_is_shared_posix", lambda root, p=posix: p)
         t = LakeTable.create(spark, str(tmp_path / sub), SCHEMA, ["id"], n_buckets=2)
         t.append(df)
         agg = {}
@@ -198,11 +200,10 @@ def test_read_where_parity(spark, tmp_path):
         assert got == exp, preds
 
 
-def test_clustering_compact_rolls_and_skips(spark, tmp_path, monkeypatch):
+def test_clustering_compact_rolls_and_skips(spark, tmp_path):
     """compact(sort_by=...) + max_rows_per_file writes bounded sorted
     files whose disjoint windows make range predicates skip files at
     plan time."""
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["id"], n_buckets=2)
     df = _frame(spark, 20000)
     t.append(df)
@@ -224,13 +225,14 @@ def test_clustering_compact_rolls_and_skips(spark, tmp_path, monkeypatch):
 
 
 def test_clustering_compact_rolls_on_the_jvm_writer(spark, tmp_path, monkeypatch):
-    """The JVM writer (``PANORAMA_TASK_WRITE=0``, or any root executors
-    cannot write as POSIX paths) honours ``max_rows_per_file`` too: a
-    clustering compaction rolls each bucket into bounded files with
-    disjoint sort-column windows, so range reads still skip files."""
+    """The JVM writer (any root executors cannot write as POSIX paths)
+    honours ``max_rows_per_file`` too: a clustering compaction rolls
+    each bucket into bounded files with disjoint sort-column windows, so
+    range reads still skip files."""
+    from panorama_elt_spark.lakehouse import table as table_mod
     from panorama_elt_spark.lakehouse.filestats import decode_bound
 
-    monkeypatch.setenv("PANORAMA_TASK_WRITE", "0")
+    monkeypatch.setattr(table_mod, "root_is_shared_posix", lambda root: False)
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["id"], n_buckets=2)
     t.append(_frame(spark, 10000))
     assert t.compact(sort_by=["ts"], max_rows_per_file=1000) == 2
@@ -291,7 +293,7 @@ def test_read_where_mor_payload_safety(spark, tmp_path):
 # ----------------------------------------------------- data source pushdown
 
 
-def test_datasource_zone_skip_and_parity(spark, tmp_path, monkeypatch):
+def test_datasource_zone_skip_and_parity(spark, tmp_path):
     """format('panorama') translates pushed comparison filters into
     zone-map pruning: fewer input partitions planned, identical rows."""
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
@@ -301,7 +303,6 @@ def test_datasource_zone_skip_and_parity(spark, tmp_path, monkeypatch):
         PanoramaReader,
     )
 
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["id"], n_buckets=2)
     t.append(_frame(spark, 20000))
     t.compact(sort_by=["id"], max_rows_per_file=2500)

@@ -139,8 +139,10 @@ def test_lineage_spill_and_batchid_retention(spark, tmp_path, monkeypatch):
     from panorama_elt_spark.cdc import merge_batch
     from panorama_elt_spark.lakehouse import Field, LakeTable, TableSchema
 
-    monkeypatch.setenv("PANORAMA_LINEAGE_RETAIN", "2")
-    monkeypatch.setenv("PANORAMA_BATCHID_RECENT", "3")
+    from panorama_elt_spark.lakehouse import table as table_mod
+
+    monkeypatch.setattr(table_mod, "LINEAGE_RETAIN", 2)
+    monkeypatch.setattr(table_mod, "BATCHID_RECENT", 3)
     schema = TableSchema(
         [
             Field(1, "repo", "string", False),
@@ -186,7 +188,9 @@ def test_vacuum_removes_orphan_lineage_spills(spark, tmp_path, monkeypatch):
     from panorama_elt_spark.cdc import merge_batch
     from panorama_elt_spark.lakehouse import Field, LakeTable, TableSchema
 
-    monkeypatch.setenv("PANORAMA_LINEAGE_RETAIN", "1")
+    from panorama_elt_spark.lakehouse import table as table_mod
+
+    monkeypatch.setattr(table_mod, "LINEAGE_RETAIN", 1)
     schema = TableSchema(
         [Field(1, "repo", "string", False), Field(2, "path", "string", False),
          Field(3, "commit", "string")],
@@ -319,3 +323,27 @@ def test_vacuum_preserves_retained_noncurrent_snapshots(spark, tmp_path):
     assert [
         (r["repo"], r["change_op"], r["commit"]) for r in t.changes(3).collect()
     ] == [("r0", "U", "c3")]
+
+
+def test_read_of_a_delta_only_bucket_builds_no_python_scan(spark, tmp_path):
+    """A bucket holding only merge-on-read deltas has an empty base side.
+    That empty frame is built in the JVM: an empty ``createDataFrame``
+    is a Python RDD scan, which starts a Python daemon and workers on
+    every such read."""
+    from panorama_elt_spark.cdc import merge_batch
+    from panorama_elt_spark.lakehouse import Field, LakeTable, TableSchema
+
+    schema = TableSchema(
+        [Field(1, "id", "bigint", False), Field(2, "val", "string")], schema_version=1
+    )
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema, ["id"], n_buckets=2)
+    ev = spark.createDataFrame(
+        [(1, "I", 1, "a"), (2, "U", 1, "b"), (3, "I", 2, "c"), (4, "D", 3, None)],
+        "lsn long, op string, id long, val string",
+    )
+    merge_batch(t, ev, "d1", strategy="append_delta")
+    assert {f.kind for f in t.snapshot.files} == {"delta"}
+    df = t.read()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "Python" not in plan, plan
+    assert sorted(map(tuple, df.collect())) == [(1, "b"), (2, "c")]

@@ -136,7 +136,9 @@ def test_batchid_window_spills_and_exactly_once_survives(spark, monkeypatch):
     them — a batch id aged out of the in-doc window must NOT re-apply."""
     from panorama_elt_spark.cdc.merge import commit_or_skip
 
-    monkeypatch.setenv("PANORAMA_BATCHID_RECENT", "4")
+    from panorama_elt_spark.lakehouse import table as table_mod
+
+    monkeypatch.setattr(table_mod, "BATCHID_RECENT", 4)
     io = InMemoryFileIO()
     root = "mem://bid"
     t = LakeTable.create(spark, root, SCHEMA, ["repo", "path"], n_buckets=4, io=io)

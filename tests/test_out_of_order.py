@@ -6,8 +6,6 @@ per-row LSN (every batch event beat the resident row) and deletes left
 no tombstone (a late update resurrected a newer delete). State files
 now persist (__op, __lsn) per winner row; folds arbitrate on them."""
 
-import os
-
 from pyspark.sql import functions as F
 
 from panorama_elt_spark.cdc.generator import (
@@ -115,11 +113,7 @@ def test_late_delta_vs_stored_base_lsn(spark, tmp_path):
     got = {r["id"]: r["val"] for r in t.read().collect()}
     assert got == {1: "cow1", 5: "new5"}, got
     fast = _rows(t.changes(v1))
-    os.environ["PANORAMA_CHANGES_MOR_FAST"] = "0"
-    try:
-        slow = _rows(t.changes(v1))
-    finally:
-        os.environ.pop("PANORAMA_CHANGES_MOR_FAST")
+    slow = _rows(t._changes_diff(t.log.read_version(v1), t.snapshot))
     assert fast == slow
     assert {r[0] for r in fast} == {5}  # only the genuinely new key
 

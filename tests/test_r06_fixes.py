@@ -326,9 +326,36 @@ def test_default_local_dir_policy(monkeypatch, tmp_path):
     if os.path.isdir("/dev/shm"):
         st = os.statvfs("/dev/shm")
         if st.f_bavail * st.f_frsize >= 32 << 30:
-            assert got == "/dev/shm/panorama-spark-local"
+            assert got == f"/dev/shm/panorama-spark-local-{os.getuid()}"
             assert os.path.isdir(got)
+            assert os.stat(got).st_mode & 0o777 == 0o700
         else:
             assert got is None
     else:
         assert got is None
+
+
+def test_local_dir_refuses_a_dir_others_can_write(tmp_path):
+    """The scratch dir is per user and private: a pre-created directory
+    that is group/world-writable, owned by another user, or a symlink is
+    refused (Spark's default stands) instead of being written into."""
+    from panorama_elt_spark.session import _private_dir
+
+    mine = tmp_path / "mine"
+    assert _private_dir(str(mine)) == str(mine)
+    assert os.stat(mine).st_mode & 0o777 == 0o700
+
+    shared = tmp_path / "shared"
+    shared.mkdir()
+    os.chmod(shared, 0o777)
+    assert _private_dir(str(shared)) is None
+
+    link = tmp_path / "link"
+    link.symlink_to(mine)
+    assert _private_dir(str(link)) is None
+
+    if os.getuid() == 0:  # only root can hand a directory to another user
+        theirs = tmp_path / "theirs"
+        theirs.mkdir(mode=0o700)
+        os.chown(theirs, 65534, 65534)
+        assert _private_dir(str(theirs)) is None

@@ -17,6 +17,7 @@ from panorama_elt_spark.cdc.merge import commit_or_skip
 from panorama_elt_spark.lakehouse import LakeTable
 from panorama_elt_spark.lakehouse.snapshot import CommitConflict
 from tests.test_cdc_core import REPO_SCHEMA_V1 as SCHEMA
+from tools.compact_fold_plans import executed_plans, shuffle_exchanges, write_plans
 
 
 def _state(t, version=None):
@@ -39,13 +40,30 @@ def _make(spark, tmp_path, n_buckets=4, mor=True):
     return t, log
 
 
+def _with_lsn(t):
+    return sorted(map(tuple, t.read(with_lsn=True).collect()))
+
+
 def test_rebucket_preserves_state_and_folds_deltas(spark, tmp_path):
     t, log = _make(spark, tmp_path)
     before = _state(t)
+    before_lsn = _with_lsn(t)
+    assert any(r[-2] == "D" for r in before_lsn)  # tombstones are state too
     v_pre = t.snapshot.version
-    snap = t.rebucket(16)
+    out = []
+    plans = write_plans(executed_plans(spark, lambda: out.append(t.rebucket(16))))
+    snap = out[0]
     assert snap.n_buckets == 16
     assert _state(t) == before
+    assert _with_lsn(t) == before_lsn
+    # one exchange: the fold is pinned to the NEW count, so it already
+    # is the new layout and the write adds no repartition
+    assert len(plans) == 1
+    exchanges = shuffle_exchanges(plans[0])
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0].startswith("hashpartitioning(repo#"), exchanges
+    assert "path#" in exchanges[0] and ", 16)" in exchanges[0], exchanges
+    assert "REPARTITION" not in plans[0]
     # deltas folded, files live under the new layout
     assert not snap.delta_buckets()
     buckets = {f.bucket for f in snap.files}

@@ -123,17 +123,18 @@ def _evo_log(spark, n=3000):
 def test_prefetch_on_off_parity_under_evolution(spark, tmp_path, monkeypatch):
     """Round-4 verdict item 7: with a registry the stats prefetch stays
     ON between ALTER boundaries (the evolution schedule is precomputed
-    from the log). States must be byte-identical with prefetch on/off,
-    the evolution must land at v3 both ways, and with a correct schedule
-    no batch recomputes its stats at apply time."""
+    from the log). States must be byte-identical with prefetch on (the
+    replay) and off (a serial loop of ``apply_batch`` calls), the
+    evolution must land at v3 both ways, and with a correct schedule no
+    batch recomputes its stats at apply time."""
     import panorama_elt_spark.cdc.engine as engine_mod
     import panorama_elt_spark.cdc.merge as merge_mod
+    from tests.test_cdc_core import serial_replay
 
     log = _evo_log(spark).cache()
     try:
         states = {}
         for flag in ("1", "0"):
-            monkeypatch.setenv("PANORAMA_PREFETCH_STATS", flag)
             calls = {"n": 0}
             orig = merge_mod.compute_batch_stats
 
@@ -147,8 +148,11 @@ def test_prefetch_on_off_parity_under_evolution(spark, tmp_path, monkeypatch):
                 spark, str(tmp_path / f"t{flag}"), V1, ["repo", "path"], n_buckets=4
             )
             engine = CdcEngine(t, schema_registry=REGISTRY)
-            report = engine.replay(log, batch_size=500)
-            assert len(report.batches) == 6 and not any(b.skipped for b in report.batches)
+            if flag == "1":
+                batches = engine.replay(log, batch_size=500).batches
+            else:
+                batches = serial_replay(engine, log, batch_size=500)
+            assert len(batches) == 6 and not any(b.skipped for b in batches)
             assert t.snapshot.schema.schema_version == 3
             # exactly one stats computation per batch — the prediction
             # held across both ALTER boundaries (no discard+recompute)

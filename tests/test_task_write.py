@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from panorama_elt_spark.cdc.generator import ChangeLogSpec, generate_change_log
 from panorama_elt_spark.cdc.merge import merge_batch
 from panorama_elt_spark.lakehouse import Field, LakeTable, TableSchema
+from panorama_elt_spark.lakehouse import table as table_mod
 
 SCHEMA = TableSchema(
     [Field(1, "repo", "string"), Field(2, "path", "string"), Field(3, "content", "string")],
@@ -33,12 +34,13 @@ def test_task_write_parity_with_jvm_fallback(spark, tmp_path, monkeypatch):
     per-bucket manifest stats (paths differ by attempt id)."""
     # the size hint would route this toy batch to the JVM path on both
     # sides — force the task writer so the parity is real
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
+    monkeypatch.setattr(table_mod, "SMALL_BATCH_ROWS", 0)
     ev = _events(spark).cache()
     try:
         states, stats = [], []
-        for flag, sub in (("1", "task"), ("0", "jvm")):
-            monkeypatch.setenv("PANORAMA_TASK_WRITE", flag)
+        for posix, sub in ((True, "task"), (False, "jvm")):
+            # a root executors cannot write as POSIX paths takes the JVM writer
+            monkeypatch.setattr(table_mod, "root_is_shared_posix", lambda root, p=posix: p)
             t = LakeTable.create(
                 spark, str(tmp_path / sub), SCHEMA, ["repo", "path"], n_buckets=8
             )
@@ -59,7 +61,7 @@ def test_task_write_parity_with_jvm_fallback(spark, tmp_path, monkeypatch):
 def test_task_write_paths_are_task_reported(spark, tmp_path, monkeypatch):
     """Every manifested path exists, parses its bucket dir, and carries
     the exact row count of that file (spot-check against a read)."""
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
+    monkeypatch.setattr(table_mod, "SMALL_BATCH_ROWS", 0)
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], n_buckets=8)
     merge_batch(t, _events(spark), batch_id="b0")
     snap = t.snapshot

@@ -130,8 +130,7 @@ def _layout_table(spark, tmp_path, name, **compact_kw):
     return t
 
 
-def test_zorder_skips_on_both_dimensions(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
+def test_zorder_skips_on_both_dimensions(spark, tmp_path):
     lin = _layout_table(spark, tmp_path, "lin", sort_by=["ts", "val"])
     zo = _layout_table(
         spark, tmp_path, "zo", sort_by=["ts", "val"], layout="zorder"
@@ -169,16 +168,16 @@ def test_zorder_skips_on_both_dimensions(spark, tmp_path, monkeypatch):
 
 
 def test_zorder_bounds_fallback_without_stats(spark, tmp_path, monkeypatch):
-    """With zone maps disabled at write time the manifests carry no
-    bounds; the z-order rewrite falls back to one min/max aggregate and
-    still produces a correct (and, after the rewrite, stats-bearing)
-    layout."""
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
-    monkeypatch.setenv("PANORAMA_WRITE_STATS", "0")
+    """With no zone maps written the manifests carry no bounds; the
+    z-order rewrite falls back to one min/max aggregate and still
+    produces a correct (and, after the rewrite, stats-bearing) layout."""
+    from panorama_elt_spark.lakehouse import table as table_mod
+
+    monkeypatch.setattr(table_mod, "_stat_columns", lambda snap, cols: [])
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["id"], n_buckets=2)
     t.append(_frame(spark, 4000))
     assert t.column_bounds(["ts", "val"]) == {}
-    monkeypatch.setenv("PANORAMA_WRITE_STATS", "1")
+    monkeypatch.undo()
     assert t.compact(sort_by=["ts", "val"], layout="zorder", max_rows_per_file=500) == 2
     assert set(t.column_bounds(["ts", "val"])) == {"ts", "val"}
     assert t.read().count() == 4000
@@ -193,11 +192,10 @@ def test_compact_rejects_bad_layout(spark, tmp_path):
         t.compact(sort_by=["ts", "val"], layout="hilbert")
 
 
-def test_compact_cli_zorder(spark, tmp_path, monkeypatch):
+def test_compact_cli_zorder(spark, tmp_path):
     import subprocess
     import sys
 
-    monkeypatch.setenv("PANORAMA_TASK_WRITE_MIN_ROWS", "0")
     t = LakeTable.create(spark, str(tmp_path / "c"), SCHEMA, ["id"], n_buckets=2)
     t.append(_frame(spark, 4000))
     out = subprocess.run(
@@ -207,7 +205,6 @@ def test_compact_cli_zorder(spark, tmp_path, monkeypatch):
             "--layout", "zorder", "--max-rows-per-file", "500",
         ],
         capture_output=True, text=True, timeout=300,
-        env={**__import__("os").environ, "PANORAMA_TASK_WRITE_MIN_ROWS": "0"},
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "compacted 2 buckets" in out.stdout

@@ -1,11 +1,13 @@
 """Executed plans of the fold-and-write: linear compaction of a
-delta-holding table, and the fused merge into delta-holding buckets.
+delta-holding table, the fused merge into delta-holding buckets, and
+rebucketing a delta-holding table to three times its bucket count.
 
     python tools/compact_fold_plans.py plans/compact_fold --tag after
 
-Builds two identical small tables (a copy-on-write base, then one
-merge-on-read delta epoch touching every bucket), compacts the first and
-fused-merges an older, out-of-order batch into the second, and writes
+Builds three identical small tables (a copy-on-write base, then one
+merge-on-read delta epoch touching every bucket), compacts the first,
+fused-merges an older, out-of-order batch into the second and rebuckets
+the third from ``N_BUCKETS`` to ``3 * N_BUCKETS`` buckets, and writes
 the executed physical plan of each write job to
 ``<out_dir>/<name>_<tag>.txt`` with expression ids, plan ids and paths
 masked, so two trees' files diff cleanly. Run it from a tree's root (or
@@ -141,7 +143,13 @@ def main() -> None:
         fused = write_plans(
             executed_plans(spark, lambda: merge_batch(t, late, "b-late", strategy="fused"))
         )
-        for name, plans in (("compact_linear", compact), ("merge_fused_delta", fused)):
+        t, _late, _spec = build(spark, os.path.join(work, "rebucket"))
+        rebucket = write_plans(executed_plans(spark, lambda: t.rebucket(3 * N_BUCKETS)))
+        for name, plans in (
+            ("compact_linear", compact),
+            ("merge_fused_delta", fused),
+            ("rebucket", rebucket),
+        ):
             path = os.path.join(args.out_dir, f"{name}_{args.tag}.txt")
             with open(path, "w") as fh:
                 for p in plans:
