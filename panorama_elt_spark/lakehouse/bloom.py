@@ -19,15 +19,16 @@ parquet, NOT in the manifests: at ~1.25 bytes/key a 100k-key file
 carries a ~128 KB filter, which would bloat the O(manifest-list)
 metadata the snapshot design defends; a probe reads only the candidate
 bucket's sidecars (KBs) before deciding which multi-MB parquet files to
-plan. The manifest records only a marker (``stats["__bloom"]``) so the
-planner knows a sidecar exists; a missing/unreadable sidecar degrades
-to "keep the file" — conservative by construction.
+plan. Nothing about blooms lands in the manifest: the probe looks for
+``<path>.bloom`` next to each candidate file, and a missing/unreadable
+sidecar degrades to "keep the file" — conservative by construction.
 
 Layout: JSON ``{"m": bits, "k": hashes, "b64": bitmap}``. ``m`` is a
 power of two sized at ~10 bits per distinct key (classic ~1 % false
 positive rate at k = 7), built vectorized in the write task from the
-``F.hash`` column Spark computed JVM-side — the task never hashes rows
-in Python.
+key-hash column: ``F.hash`` computed JVM-side for library writes, the
+vectorized Murmur3 kernel (``functions/murmur.py``) for the ``panorama``
+data source's writers — no writer hashes row by row in Python.
 
 Reference parity note: the reference scans its whole S3 prefix per
 query (``panorama_datalake.py``); this is a scale addition.

@@ -63,7 +63,10 @@ ARROW_WRITE_BATCH = 131_072
 # buckets per manifest file: bounds a bucket rewrite's collateral
 MANIFEST_SPAN = 8
 # optimistic-rebase attempts on a CAS conflict (``retry_on_conflict``)
+# and the data-source writers' commit retries
 COMMIT_RETRIES = 5
+# key-value combinations a lookup may hash for bucket/bloom pruning
+MAX_PRUNE_COMBOS = 1024
 # in-document lineage rows / committed batch ids before they spill
 LINEAGE_RETAIN = 4096
 BATCHID_RECENT = 4096
@@ -304,6 +307,54 @@ def normalize_key_value_sets(
     for c in needs:
         out[c] = {v.replace(tzinfo=tz) if naive(v) else v for v in value_sets[c]}
     return out
+
+
+def key_hash_pruning(
+    snap: "Snapshot", predicates, session_tz: str | None
+) -> tuple[set[int], list[int]] | None:
+    """Key-hash pruning inputs of a predicate set: ``(buckets,
+    fingerprints)`` when ``eq``/``in`` predicates pin every key column to
+    a finite value set, else ``None`` (scan every bucket, probe no
+    bloom). Shared by ``LakeTable.read_where`` and the ``panorama`` data
+    source's ``pushFilters``. Values are hashed with the writers' Murmur3
+    (``functions/murmur.py``), every combination in one kernel call; the
+    buckets prune the scan and the fingerprints probe the per-file bloom
+    sidecars. Pruning is refused (``None``) for key types the kernel
+    cannot hash, naive timestamps without a usable session tz
+    (``normalize_key_value_sets``), more than ``MAX_PRUNE_COMBOS``
+    combinations, and values that do not convert to the key type."""
+    from itertools import product
+
+    from ..functions.murmur import SUPPORTED_TYPES, hash_rows
+
+    keys = list(snap.key_cols)
+    types_by_col = {f.name: f.type for f in snap.schema.fields}
+    if not all(types_by_col.get(c) in SUPPORTED_TYPES for c in keys):
+        return None
+    value_sets: dict[str, set] = {}
+    for col, op, value in predicates:
+        if col not in keys or op not in ("eq", "in"):
+            continue
+        vals = {value} if op == "eq" else set(value)
+        value_sets[col] = vals if col not in value_sets else value_sets[col] & vals
+    if set(value_sets) != set(keys):
+        return None
+    value_sets = normalize_key_value_sets(value_sets, types_by_col, session_tz)
+    if value_sets is None:
+        return None
+    combos = 1
+    for vs in value_sets.values():
+        combos *= len(vs)
+    if combos > MAX_PRUNE_COMBOS:
+        return None
+    try:
+        fps = hash_rows(
+            list(product(*[list(value_sets[c]) for c in keys])),
+            [types_by_col[c] for c in keys],
+        )
+    except (ValueError, TypeError):
+        return None  # a value the key type cannot hold: scan, never guess
+    return {int(b) for b in fps.astype("int64") % snap.n_buckets}, [int(h) for h in fps]
 
 
 def _pred_column_expr(col: str, op: str, value):
@@ -783,65 +834,16 @@ class LakeTable:
                 raise ValueError("pass version or ref, not both")
             version = self.resolve_ref(ref)
         snap = self.snapshot if version is None else self.log.read_version(version)
-        predicates = normalize_pred_tz(
-            predicates, self.spark.conf.get("spark.sql.session.timeZone")
-        )
-        buckets: set[int] | None = None
-        from ..functions.murmur import SUPPORTED_TYPES, bucket_of
-
-        types_by_col = {f.name: f.type for f in snap.schema.fields}
-        if all(types_by_col.get(c) in SUPPORTED_TYPES for c in snap.key_cols):
-            value_sets: dict[str, set] = {}
-            for col, op, value in predicates:
-                if col not in snap.key_cols:
-                    continue
-                if op == "eq":
-                    vals = {value}
-                elif op == "in":
-                    vals = set(value)
-                else:
-                    continue
-                value_sets[col] = (
-                    vals if col not in value_sets else value_sets[col] & vals
-                )
-            file_filter = None
-            if set(value_sets) == set(snap.key_cols):
-                # key-hash pruning needs aware timestamps (normalize_pred_tz
-                # leaves values naive when the session tz is unparseable —
-                # there the hash would be wrong, so pruning is disabled)
-                value_sets = normalize_key_value_sets(
-                    value_sets,
-                    types_by_col,
-                    self.spark.conf.get("spark.sql.session.timeZone"),
-                )
-            if value_sets is not None and set(value_sets) == set(snap.key_cols):
-                combos = 1
-                for vs in value_sets.values():
-                    combos *= len(vs)
-                if combos <= 1024:
-                    from itertools import product
-
-                    from ..functions.murmur import murmur3_hash
-
-                    types = [types_by_col[c] for c in snap.key_cols]
-                    combo_list = [
-                        list(combo)
-                        for combo in product(
-                            *[sorted(value_sets[c]) for c in snap.key_cols]
-                        )
-                    ]
-                    buckets = {
-                        bucket_of(c, types, snap.n_buckets) for c in combo_list
-                    }
-                    # third metadata level: per-file key blooms
-                    # (lakehouse/bloom.py) — probe the candidate bucket's
-                    # sidecars with the same fingerprints and plan only
-                    # files that could hold one of the keys; no false
-                    # negatives, so the fold's inputs never lose a row
-                    fps = [murmur3_hash(c, types) for c in combo_list]
-                    file_filter = self._bloom_file_filter(fps)
-        else:
-            file_filter = None
+        session_tz = self.spark.conf.get("spark.sql.session.timeZone")
+        predicates = normalize_pred_tz(predicates, session_tz)
+        buckets, file_filter = None, None
+        pruning = key_hash_pruning(snap, predicates, session_tz)
+        if pruning is not None:
+            # third metadata level: per-file key blooms (lakehouse/bloom.py)
+            # probed with the same fingerprints; no false negatives, so
+            # the fold's inputs never lose a row
+            buckets, fps = pruning
+            file_filter = self._bloom_file_filter(fps)
         df = self._read_state(
             snap, snap, buckets, with_deltas, predicates, file_filter=file_filter
         )

@@ -75,7 +75,6 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field as dc_field
-from itertools import product as _product
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -99,7 +98,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..functions.murmur import SUPPORTED_TYPES, bucket_of, murmur3_hash
+from ..functions.murmur import SUPPORTED_TYPES
 from ..lakehouse.fold import (
     arrow_type as _arrow_type,
     history_fields,
@@ -117,9 +116,6 @@ from ..lakehouse.snapshot import (
 )
 
 FORMAT_NAME = "panorama"
-
-# refuse to enumerate unbounded key-combination products during pruning
-_MAX_PRUNE_COMBOS = 1024
 
 CHANGE_OP_COL = "change_op"
 CHANGE_VERSION_COL = "change_version"
@@ -497,7 +493,6 @@ class PanoramaReader(DataSourceReader):
           (``_prune_files_for_state`` carries the merge-on-read safety
           rule: payload predicates prune base files only).
         """
-        snap = self.snap
         for f in filters:
             if len(f.attribute) != 1:
                 continue
@@ -518,54 +513,14 @@ class PanoramaReader(DataSourceReader):
                 self._preds.append((col, "isnull", None))
             elif isinstance(f, IsNotNull):
                 self._preds.append((col, "notnull", None))
-        types_by_col = {f.name: f.type for f in snap.schema.fields}
-        if all(types_by_col.get(c) in SUPPORTED_TYPES for c in snap.key_cols):
-            value_sets: dict[str, set] = {}
-            for f in filters:
-                col = f.attribute[0] if len(f.attribute) == 1 else None
-                if col not in snap.key_cols:
-                    continue
-                if isinstance(f, EqualTo):
-                    vals = {f.value}
-                elif isinstance(f, In):
-                    vals = set(f.value)
-                else:
-                    continue
-                # intersect with any earlier constraint on the same col
-                value_sets[col] = (
-                    vals if col not in value_sets else value_sets[col] & vals
-                )
-            # timestamp hygiene: Spark 4.1's pushdown delivers aware-UTC
-            # datetimes (hash correctly as instants), but a NAIVE value
-            # (other builds / direct reader use) would be hashed as UTC
-            # wall time — normalize with the session tz when known
-            # (LakeTable.read_where parity) and otherwise DISABLE
-            # key-hash pruning rather than plan the wrong bucket
-            from ..lakehouse.table import normalize_key_value_sets
+        # bucket set + bloom fingerprints (LakeTable.read_where parity);
+        # a naive timestamp normalizes with the session tz, or disables
+        # key-hash pruning rather than plan the wrong bucket
+        from ..lakehouse.table import key_hash_pruning
 
-            value_sets = normalize_key_value_sets(
-                value_sets, types_by_col, self._session_tz
-            )
-            if value_sets is not None and set(value_sets) == set(snap.key_cols):
-                combos = 1
-                for vs in value_sets.values():
-                    combos *= len(vs)
-                if combos <= _MAX_PRUNE_COMBOS:
-                    types = [types_by_col[c] for c in snap.key_cols]
-                    combo_list = [
-                        list(combo)
-                        for combo in _product(
-                            *[sorted(value_sets[c]) for c in snap.key_cols]
-                        )
-                    ]
-                    self._allowed_buckets = {
-                        bucket_of(c, types, snap.n_buckets) for c in combo_list
-                    }
-                    # third level: per-file key bloom sidecars
-                    # (lakehouse/bloom.py) probed at plan time
-                    self._key_fingerprints = [
-                        murmur3_hash(c, types) for c in combo_list
-                    ]
+        pruning = key_hash_pruning(self.snap, self._preds, self._session_tz)
+        if pruning is not None:
+            self._allowed_buckets, self._key_fingerprints = pruning
         return iter(filters)  # pruning-only: Spark re-applies everything
 
     # --------------------------------------------------------- planning
@@ -784,119 +739,15 @@ class PanoramaWriteResult(WriterCommitMessage):
     max_lsn: int | None = None
 
 
-def _write_partition_files(
-    root: str,
-    rel_dir: str,
-    batches,
-    target_fields: list[tuple[int, str, str, object]],
-    key_cols: list[str],
-    key_types: list[str],
-    n_buckets: int,
-    delta_in: tuple[str, str] | None,
-) -> tuple[list, int | None]:
-    """Executor kernel: stream one task's Arrow batches into per-bucket
-    parquet files under ``rel_dir``, harvesting zone-map stats from each
-    file's footer at close (``footer_zone_map`` — no second data scan).
-    Buckets come from the pure-Python
-    Murmur3 (``functions/murmur.py``, bit-for-bit with ``F.hash``), so
-    the files this interop path writes are indistinguishable from the
-    library writer's. With ``delta_in = (op_col, lsn_col)`` the input's
-    change columns land as ``__op``/``__lsn`` and files are
-    merge-on-read deltas; without it rows land as ``'E'``/``-1``, the
-    system columns of a plain append.
-
-    This is the *interop* write path (Spark cannot hand a Python data
-    source a pre-bucketed distribution, so each task hashes rows in
-    Python and may write one file per bucket it sees); the hot path
-    remains ``LakeTable.append``/``merge_batch``, which bucket with the
-    JVM hash and shuffle once. Same layout, same stats, same commit."""
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ..functions.murmur import bucket_of
-    from ..lakehouse.filestats import ORDERABLE_TYPES
-    from ..lakehouse.table import footer_zone_map
-
-    out_fields = [(name, _arrow_type(t)) for _, name, t, _ in target_fields]
-    out_fields += [("__op", pa.string()), ("__lsn", pa.int64())]
-    stat_cols = [
-        (name, t, str(fid))
-        for fid, name, t, _ in target_fields
-        if t in ORDERABLE_TYPES
-    ] + [("__lsn", "bigint", "__lsn")]
-    arrow_schema = pa.schema(out_fields)
-    part = _uuid.uuid4().hex[:16]
-    abs_dir = _os.path.join(root, rel_dir)
-    writers: dict[int, dict] = {}
-    max_lsn: int | None = None
-
-    for rb in batches:
-        if rb.num_rows == 0:
-            continue
-        tbl = pa.Table.from_batches([rb])
-        if delta_in:
-            system = {delta_in[0]: "__op", delta_in[1]: "__lsn"}
-            tbl = tbl.rename_columns([system.get(n, n) for n in tbl.column_names])
-        else:
-            tbl = tbl.append_column("__op", pa.array(["E"] * len(tbl), pa.string()))
-            tbl = tbl.append_column("__lsn", pa.array([-1] * len(tbl), pa.int64()))
-        cols = []
-        for name, at in out_fields:
-            col = tbl.column(name)
-            if col.type != at:
-                col = pc.cast(col, at)
-            cols.append(col)
-        tbl = pa.table(cols, schema=arrow_schema)
-        if delta_in:
-            m = pc.max(tbl.column("__lsn")).as_py()
-            if m is not None:
-                max_lsn = m if max_lsn is None else max(max_lsn, m)
-        key_vals = [tbl.column(k).to_pylist() for k in key_cols]
-        buckets = pa.array(
-            [bucket_of(list(row), key_types, n_buckets) for row in zip(*key_vals)],
-            type=pa.int32(),
-        )
-        for b in pc.unique(buckets).to_pylist():
-            b = int(b)
-            sub = tbl.filter(pc.equal(buckets, b))
-            st = writers.get(b)
-            if st is None:
-                bucket_dir = _os.path.join(abs_dir, f"bucket={b}")
-                _os.makedirs(bucket_dir, exist_ok=True)
-                name = f"part-{part}.parquet"
-                st = writers[b] = {
-                    "writer": pq.ParquetWriter(
-                        _os.path.join(bucket_dir, name),
-                        arrow_schema,
-                        compression="snappy",
-                    ),
-                    "abs_path": _os.path.join(bucket_dir, name),
-                    "rel_path": f"{rel_dir}/bucket={b}/{name}",
-                    "total": 0,
-                }
-            st["writer"].write_table(sub)
-            st["total"] += sub.num_rows
-    out = []
-    for b, st in writers.items():
-        st["writer"].close()
-        # stats from the just-written footer: the encoder already
-        # tracked them, one metadata read, no second data scan
-        stats = footer_zone_map(pq.ParquetFile(st["abs_path"]).metadata, stat_cols)
-        out.append(
-            (st["rel_path"], b, st["total"], _json.dumps(stats) if stats else None)
-        )
-    return out, max_lsn
-
-
 def _writer_plan(root: str, input_names: list[str], *, delta: bool, options):
     """Driver-side prep shared by both writers: resolve the snapshot,
-    validate the incoming column set, pick the attempt dir."""
+    validate the incoming column set and the key types, pick the
+    attempt dir. Everything a write task needs rides in the plan."""
     import uuid
+
+    import pyarrow as pa
+
+    from ..lakehouse.table import _stat_columns
 
     log = SnapshotLog(root)
     snap = log.read_current()
@@ -914,17 +765,89 @@ def _writer_plan(root: str, input_names: list[str], *, delta: bool, options):
             f"write schema mismatch: table {root} expects columns "
             f"{sorted(expected)}, got {sorted(input_names)}"
         )
-    plan = {
+    key_types = [snap.schema.field_by_name(k).type for k in snap.key_cols]
+    for k, t in zip(snap.key_cols, key_types):
+        if t not in SUPPORTED_TYPES:
+            raise ValueError(
+                f"cannot write to {root} through format('panorama'): key column "
+                f"{k!r} has type {t}, and the writer buckets keys with Spark's "
+                f"Murmur3 over {sorted(SUPPORTED_TYPES)} only"
+            )
+    names = list(snap.schema.names) + ["__op", "__lsn"]
+    return {
         "root": root,
         "rel_dir": f"data/w-{uuid.uuid4().hex[:16]}",
-        "target_fields": _target_fields(snap.schema),
+        "names": names,
+        "arrow_schema": pa.schema(
+            [(f.name, _arrow_type(f.type)) for f in snap.schema.fields]
+            + [("__op", pa.string()), ("__lsn", pa.int64())]
+        ),
+        "stat_cols": _stat_columns(snap, names),
         "key_cols": list(snap.key_cols),
-        "key_types": [snap.schema.field_by_name(k).type for k in snap.key_cols],
+        "key_types": key_types,
         "n_buckets": snap.n_buckets,
-        "delta_in": (op_col, lsn_col) if delta else None,
+        "system": {op_col: "__op", lsn_col: "__lsn"} if delta else None,
         "schema_version": snap.schema.schema_version,
     }
-    return plan
+
+
+def _write_task(plan: dict, batches) -> PanoramaWriteResult:
+    """Executor side of both writers: give the input the columns the
+    table's task writer expects and hand it over (``_task_write_fn``,
+    the writer ``write_bucket_files`` uses — same files, zone maps and
+    bloom sidecars). Only three steps are the data source's own: the
+    change columns become ``__op``/``__lsn`` (or rows land as
+    ``'E'``/-1, a plain append), rows cast to the file schema, and the
+    epoch's max LSN is tracked. ``__bucket``/``__kh`` come from the
+    vectorized Murmur3, bit-for-bit ``F.hash``: Spark cannot hand a
+    Python data source a pre-bucketed distribution, so each task may
+    write one file per bucket it sees."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..functions.murmur import hash_columns
+    from ..lakehouse.table import BUCKET_COL, _task_write_fn
+
+    schema, system = plan["arrow_schema"], plan["system"]
+    max_lsn = None
+
+    def bucketed():
+        nonlocal max_lsn
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            tbl = pa.Table.from_batches([rb])
+            if system:
+                tbl = tbl.rename_columns([system.get(n, n) for n in tbl.column_names])
+            else:
+                tbl = tbl.append_column("__op", pa.repeat("E", len(tbl)))
+                tbl = tbl.append_column("__lsn", pa.repeat(pa.scalar(-1, pa.int64()), len(tbl)))
+            tbl = tbl.select(schema.names).cast(schema)
+            if system:
+                m = pc.max(tbl["__lsn"]).as_py()
+                if m is not None:
+                    max_lsn = m if max_lsn is None else max(max_lsn, m)
+            kh = hash_columns([tbl[k] for k in plan["key_cols"]], plan["key_types"])
+            tbl = tbl.append_column(
+                BUCKET_COL, pa.array((kh.astype(np.int64) % plan["n_buckets"]).astype(np.int32))
+            ).append_column("__kh", pa.array(kh))
+            yield from tbl.to_batches()
+
+    write = _task_write_fn(
+        os.path.join(plan["root"], plan["rel_dir"]),
+        plan["rel_dir"],
+        plan["names"],
+        schema,
+        stat_cols=plan["stat_cols"],
+        bloom_col="__kh",
+    )
+    files = [
+        (r["path"], r["bucket"], r["rows"], r["stats"])
+        for manifest in write(bucketed())
+        for r in manifest.to_pylist()
+    ]
+    return PanoramaWriteResult(files=files, max_lsn=max_lsn)
 
 
 def _data_files_from_messages(messages, schema_version: int, kind: str):
@@ -957,21 +880,21 @@ def _commit_with_retry(
     overwrite: bool,
     batch_id: str | None = None,
     last_lsn: int | None = None,
-    retries: int = 5,
 ):
-    """Driver-side snapshot commit. Appends commute, so a CAS loss to a
-    concurrent writer just re-reads the parent and retries; the batch-id
-    guard keeps a replayed streaming epoch exactly-once (same skip the
-    merge path uses, ``cdc/merge.py`` ``commit_or_skip``)."""
+    """Driver-side snapshot commit, up to ``table.COMMIT_RETRIES``
+    attempts. Appends commute, so a CAS loss to a concurrent writer just
+    re-reads the parent and retries; the batch-id guard keeps a replayed
+    streaming epoch exactly-once (same skip the merge path uses,
+    ``cdc/merge.py`` ``commit_or_skip``)."""
     from pyspark.sql import SparkSession
 
+    from ..lakehouse import table as table_mod
     from ..lakehouse.snapshot import CommitConflict
-    from ..lakehouse.table import LakeTable
 
     spark = SparkSession.getActiveSession()
-    table = LakeTable(spark, root)
+    table = table_mod.LakeTable(spark, root)
     last_err = None
-    for _ in range(retries):
+    for _ in range(table_mod.COMMIT_RETRIES):
         snap = table.snapshot
         if batch_id is not None and table.is_batch_committed(batch_id, snap):
             return None  # replayed epoch: already applied, files orphan→vacuum
@@ -994,7 +917,8 @@ def _abort_cleanup(root: str, rel_dir: str) -> None:
 class PanoramaWriter(DataSourceArrowWriter):
     """Batch write: ``df.write.format("panorama").mode("append"|
     "overwrite").save(root)``. Tasks write bucket-hashed parquet with
-    zone-map stats into a per-attempt unique dir; the driver commits
+    zone maps and bloom sidecars through the table's task writer
+    (``_write_task``) into a per-attempt unique dir; the driver commits
     one atomic snapshot (append adds files; overwrite swaps every live
     bucket — the reference's wholesale re-upload landing,
     ``panorama_datalake.py:215-258``, at snapshot grain). A failed job
@@ -1005,18 +929,7 @@ class PanoramaWriter(DataSourceArrowWriter):
         self.plan = _writer_plan(root, input_names, delta=False, options=options)
 
     def write(self, iterator):
-        p = self.plan
-        files, _ = _write_partition_files(
-            p["root"],
-            p["rel_dir"],
-            iterator,
-            p["target_fields"],
-            p["key_cols"],
-            p["key_types"],
-            p["n_buckets"],
-            None,
-        )
-        return PanoramaWriteResult(files=files)
+        return _write_task(self.plan, iterator)
 
     def commit(self, messages):
         files = _data_files_from_messages(messages, self.plan["schema_version"], "base")
@@ -1056,18 +969,7 @@ class PanoramaStreamSink(DataSourceStreamArrowWriter):
         self.plan = _writer_plan(root, input_names, delta=True, options=options)
 
     def write(self, iterator):
-        p = self.plan
-        files, max_lsn = _write_partition_files(
-            p["root"],
-            p["rel_dir"],
-            iterator,
-            p["target_fields"],
-            p["key_cols"],
-            p["key_types"],
-            p["n_buckets"],
-            p["delta_in"],
-        )
-        return PanoramaWriteResult(files=files, max_lsn=max_lsn)
+        return _write_task(self.plan, iterator)
 
     def commit(self, messages, batchId: int) -> None:
         files = _data_files_from_messages(messages, self.plan["schema_version"], "delta")

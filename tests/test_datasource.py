@@ -15,7 +15,7 @@ from pyspark.sql import functions as F, types as T
 from pyspark.sql.datasource import EqualTo, In
 
 from panorama_elt_spark.cdc.merge import merge_batch
-from panorama_elt_spark.functions.murmur import bucket_of, murmur3_hash
+from panorama_elt_spark.functions.murmur import bucket_of, hash_columns, murmur3_hash
 from panorama_elt_spark.lakehouse import Field, LakeTable, TableSchema
 from panorama_elt_spark.lakehouse.schema import apply_alters, diff_schemas
 from panorama_elt_spark.sources.panorama_datasource import (
@@ -84,6 +84,47 @@ def test_murmur3_matches_spark_hash(spark):
         assert murmur3_hash(list(r), types) == row.all
         assert murmur3_hash([r[2]], ["string"]) == row.s_only
         assert bucket_of([r[0], r[2]], ["int", "string"], 16) == row.bk
+
+    # the column kernel itself, on the Arrow columns Spark hands out:
+    # every key type, ASCII and multibyte strings at every UTF-8 tail
+    # length 0-3, NULLs inside composite keys, and sliced arrays
+    strings = [None, "", "a", "ab", "abc", "abcd", "abcde", "abcdef", "abcdefg",
+               "😀", "é中", "é", "中", "héllo wörld", "é中文", "x" * 37]
+    assert {len(s.encode()) % 4 for s in strings[9:13]} == {0, 1, 2, 3}
+    kinds = {"i": "int", "l": "bigint", "b": "boolean", "d": "date",
+             "t": "timestamp", "s": "string", "m": "string"}
+    krows = [
+        (
+            random.choice([None, random.randint(-(2**31), 2**31 - 1)]),
+            random.choice([None, random.randint(-(2**63), 2**63 - 1)]),
+            random.choice([None, True, False]),
+            random.choice([None, datetime.date(1970, 1, 1)
+                           + datetime.timedelta(days=random.randint(-9000, 9000))]),
+            random.choice([None, datetime.datetime(2021, 3, 4, 5, 6, 7, random.randint(0, 999999))]),
+            strings[k % len(strings)],
+            random.choice(strings),
+        )
+        for k in range(240)
+    ]
+    kstruct = T.StructType(
+        [T.StructField(c, struct[c].dataType) for c in "ilbdts"]
+        + [T.StructField("m", T.StringType())]
+    )
+    keys = {"all": list(kinds), "s": ["s"], "sm": ["s", "m"], "i_s": ["i", "s"],
+            "t_d_b": ["t", "d", "b"], "l_m": ["l", "m"]}
+    got = (
+        spark.createDataFrame(krows, kstruct)
+        .select(*[F.hash(*c).alias(f"h_{name}") for name, c in keys.items()], *kinds)
+        .toArrow()
+    )
+    for name, cols in keys.items():
+        want = got[f"h_{name}"].to_pylist()
+        arrays = [got[c].combine_chunks() for c in cols]
+        types = [kinds[c] for c in cols]
+        assert hash_columns(arrays, types).tolist() == want, name
+        sliced = [a.slice(5, 200) for a in arrays]
+        assert all(a.offset == 5 for a in sliced)
+        assert hash_columns(sliced, types).tolist() == want[5:205], name
 
 
 # ----------------------------------------------------------- read parity

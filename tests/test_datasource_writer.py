@@ -4,22 +4,28 @@ column that makes lake→lake replication a pure
 ``readStream → writeStream`` pipeline with a deterministic LSN.
 
 Scale/contract notes under test: writer tasks bucket rows with the
-pure-Python Murmur3 pinned bit-for-bit to ``F.hash`` (files land exactly
-where the library writer would put them — point lookups stay one-bucket
-reads), stats ride along (zone maps work on sink-written files), commits
-are single atomic snapshots with the same batch-id exactly-once guard
-the merge path uses, and the streaming sink writes merge-on-read deltas
-(per-epoch cost O(epoch), no read of the resident table).
+vectorized Murmur3 pinned bit-for-bit to ``F.hash`` and write them
+through the table's own task writer (files land exactly where the
+library writer would put them — point lookups stay one-bucket reads),
+zone maps and bloom sidecars ride along and honour ``stats_skip_cols``,
+commits are single atomic snapshots with the same batch-id exactly-once
+guard the merge path uses, and the streaming sink writes merge-on-read
+deltas (per-epoch cost O(epoch), no read of the resident table). Key
+types the hash cannot cover are refused on the driver.
 """
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from panorama_elt_spark.cdc.merge import merge_batch
+from panorama_elt_spark.functions.murmur import bucket_of
 from panorama_elt_spark.lakehouse import Field, LakeTable, TableSchema
 from panorama_elt_spark.sources.panorama_datasource import (
     PanoramaDataSource,
     PanoramaStreamSink,
+    PanoramaWriter,
 )
 
 SCHEMA = TableSchema(
@@ -53,10 +59,19 @@ def test_batch_write_append_and_overwrite(registered, spark, tmp_path):
     df.write.format("panorama").mode("append").save(root)
     t = LakeTable.load(spark, root)
     assert t.read().count() == 500
-    # python-side murmur put rows in their F.hash buckets: a pruned
+    # the vectorized murmur put rows in their F.hash buckets: a pruned
     # point lookup (bucket pruning + zone maps) finds the row
     assert [r["val"] for r in t.read_where([("id", "eq", 123)]).collect()] == [246.0]
     assert all(f.stats and "1" in f.stats for f in t.snapshot.files)
+    # bloom sidecars like library files: the lookup plans fewer files
+    # than its bucket holds (each write task left one file per bucket)
+    assert all(
+        os.path.exists(os.path.join(root, f.path + ".bloom")) for f in t.snapshot.files
+    )
+    in_bucket = t.snapshot.files_in_buckets({bucket_of([123], ["bigint"], 4)})
+    assert len(in_bucket) >= 2
+    planned = t.read_where([("id", "eq", 123)]).inputFiles()
+    assert 1 <= len(planned) < len(in_bucket), (planned, in_bucket)
     df.write.format("panorama").mode("append").save(root)
     assert LakeTable.load(spark, root).read().count() == 1000
     df.write.format("panorama").mode("overwrite").save(root)
@@ -74,6 +89,34 @@ def test_batch_write_schema_mismatch_raises(registered, spark, tmp_path):
     with pytest.raises(Exception, match="write schema mismatch"):
         bad.write.format("panorama").mode("append").save(root)
     # nothing committed, no stray data
+    assert LakeTable.load(spark, root).read().count() == 0
+
+
+def test_batch_write_honours_stats_skip_cols(registered, spark, tmp_path):
+    root = str(tmp_path / "t")
+    t = LakeTable.create(spark, root, SCHEMA, ["id"], n_buckets=4)
+    t.overwrite(_frame(spark, 0), properties={"stats_skip_cols": "name"})
+    _frame(spark).write.format("panorama").mode("append").save(root)
+    files = LakeTable.load(spark, root).snapshot.files
+    assert files
+    # field 3 is "name": skipped; field 1 ("id") keeps its bounds
+    assert all(f.stats and "1" in f.stats and "3" not in f.stats for f in files)
+
+
+def test_write_refuses_unhashable_key_type_on_the_driver(registered, spark, tmp_path):
+    root = str(tmp_path / "t")
+    LakeTable.create(spark, root, SCHEMA, ["val"], n_buckets=4)  # a double key
+    with pytest.raises(ValueError, match="'val' has type double"):
+        PanoramaWriter(root, {}, False, ["id", "val", "name"])
+    df = _frame(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("ds-double-key", "refused write")
+    try:
+        with pytest.raises(Exception, match="'val' has type double"):
+            df.write.format("panorama").mode("append").save(root)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("ds-double-key") == []
     assert LakeTable.load(spark, root).read().count() == 0
 
 
@@ -99,6 +142,9 @@ def test_stream_sink_upserts_and_deletes(registered, spark, tmp_path):
     q.awaitTermination(180)
     t2 = LakeTable.load(spark, root)
     assert t2.snapshot.delta_buckets()  # the sink wrote MOR deltas
+    deltas = [f for f in t2.snapshot.files if f.kind == "delta"]
+    assert all(f.stats and "__lsn" in f.stats for f in deltas)
+    assert all(os.path.exists(os.path.join(root, f.path + ".bloom")) for f in deltas)
     state = {r["id"]: r["val"] for r in t2.read().collect()}
     assert state[5] == 99.0 and 7 not in state and len(state) == 9
     # compaction folds the sink's deltas like any append_delta batch
