@@ -36,6 +36,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .fileio import FileIO, LocalFileIO
+from .feed import classify_changes
 from .fold import lww_fold
 from .schema import TableSchema, spark_type
 from .snapshot import (
@@ -564,32 +565,38 @@ def _task_write_fn(
                 }
             )
 
-        def flush(b, roll: bool):
+        def flush(b, roll: bool) -> int:
             st = writers[b]
+            n = st["buf_rows"]
             if st["buf"]:
                 st["writer"].write_table(
                     pa.Table.from_batches(st["buf"], schema=arrow_schema)
                 )
-                st["total"] += st["buf_rows"]
+                st["total"] += n
                 st["buf"], st["buf_rows"] = [], 0
             if roll and max_rows_per_file and st["total"] >= max_rows_per_file:
                 finalize(st, b)
                 writers[b] = open_file(b, st["seq"] + 1)
+            return n
 
+        buffered = 0  # rows held across every open bucket
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             tbl = pa.Table.from_batches([rb])
             # one bucket per partition in the pre-partitioned hot path;
-            # group generically so repartitioned writes stay correct
-            buckets = tbl.column(BUCKET_COL).unique().to_pylist()
-            for b in buckets:
-                b = int(b)
-                sub_full = (
-                    tbl.filter(pc.equal(tbl.column(BUCKET_COL), b))
-                    if len(buckets) > 1
-                    else tbl
-                )
+            # otherwise one stable sort groups the rows into bucket runs,
+            # each taken as its own table (in input order) so a flushed
+            # buffer frees its memory
+            bs = tbl.column(BUCKET_COL).to_numpy()
+            order = None
+            if (bs != bs[0]).any():
+                order = pc.sort_indices(tbl, [(BUCKET_COL, "ascending")])
+                bs = bs[order.to_numpy()]
+            cuts = (bs[1:] != bs[:-1]).nonzero()[0] + 1
+            for lo, hi in zip([0, *cuts], [*cuts, len(bs)]):
+                b = int(bs[lo])
+                sub_full = tbl if order is None else tbl.take(order.slice(lo, hi - lo))
                 kh = sub_full.column(bloom_col) if bloom_col else None
                 sub = sub_full.select(out_names).cast(arrow_schema)
                 if b not in writers:
@@ -615,11 +622,20 @@ def _task_write_fn(
                         kh = kh.slice(take)
                     st["buf"].extend(piece.to_batches())
                     st["buf_rows"] += piece.num_rows
+                    buffered += piece.num_rows
                     if st["buf_rows"] >= flush_rows or (
                         max_rows_per_file
                         and st["total"] + st["buf_rows"] >= max_rows_per_file
                     ):
-                        flush(b, roll=True)
+                        buffered -= flush(b, roll=True)
+            # a task holds at most flush_rows (plus one input batch)
+            # however many buckets it sees: write out the largest buffers
+            if buffered >= flush_rows:
+                by_size = sorted(writers, key=lambda x: writers[x]["buf_rows"], reverse=True)
+                for big in by_size:
+                    if buffered < flush_rows:
+                        break
+                    buffered -= flush(big, roll=True)
         for b in list(writers):
             flush(b, roll=False)
             finalize(writers[b], b)
@@ -1501,7 +1517,12 @@ class LakeTable:
         """Change feed between two snapshots (the engine as a CDC
         *source*, the Iceberg changelog-scan analogue): key columns +
         ``change_op`` (I/U/D) + the new payload (nulls for D); unchanged
-        rows are dropped.
+        rows are dropped. Keys match like ``groupBy`` groups them
+        (``IS NOT DISTINCT FROM``): a NULL key value is a value, so an
+        update of a NULL-keyed row is a U, not a D+I pair. The I/U/D
+        rule itself lives in ``lakehouse/feed.py`` (``classify_changes``,
+        shared with the data source's Arrow twin); this method only
+        picks the two sides.
 
         Schema epochs: when the two snapshots carry different schema
         versions, both sides are projected onto the **newer** schema via
@@ -1516,94 +1537,39 @@ class LakeTable:
 
         Merge-on-read fast path: when the whole version range is pure
         delta appends (``is_delta_append_range``: no file removed — no
-        CoW rewrite, no compaction), the I/U/D feed is derived from the
-        range's delta files directly (they already carry
-        ``__op``/``__lsn``): the NEW state is never reconstructed, and
-        the join shrinks from full-outer of two O(touched-bucket) states
-        to range-winners (O(range events)) against the old state —
-        classification I-vs-U and no-op-update suppression still need
-        the old side. Any other range takes the state diff
-        (``_changes_diff``); both produce the same rows (parity-tested
-        with ``_changes_diff`` as the reference)."""
+        CoW rewrite, no compaction), the new side is the LWW winners of
+        the range's delta files (they already carry ``__op``/``__lsn``),
+        left-joined to the old state of their buckets read with
+        tombstones and stored LSNs: the NEW state is never
+        reconstructed, and the join shrinks from full-outer of two
+        O(touched-bucket) states to O(range events) winners. Any other
+        range takes the state diff (``_changes_diff``); both produce the
+        same rows (parity-tested with ``_changes_diff`` as the
+        reference)."""
         snap = self.snapshot if to_version is None else self.log.read_version(to_version)
         snap_from = self.log.read_version(from_version)
         removed, added = snapshot_file_delta(snap_from, snap)
-        if is_delta_append_range(removed, added):
-            return self._changes_from_deltas(snap_from, snap, added)
-        return self._changes_diff(snap_from, snap)
+        if not is_delta_append_range(removed, added):
+            return self._changes_diff(snap_from, snap)
+        proj = newer_schema(snap_from, snap)
+        keys = proj.key_cols
+        payload = [c for c in proj.schema.names if c not in keys]
+        winners = lww_fold(self._read_mapped(proj, added), keys, payload)
+        old = self._read_state(snap_from, proj, {f.bucket for f in added}, with_lsn=True)
+        return classify_changes(old, winners, keys, range_winners=True)
 
     def _changes_diff(self, snap_from: Snapshot, snap: Snapshot) -> DataFrame:
-        """changes() as a state diff: one full-outer join on the key
-        columns of the two states, payloads compared as structs. The
-        scan is pruned to the buckets whose file sets differ — identical
-        file sets cannot differ — and both sides are bucket-aligned
+        """changes() as a state diff: the two states, pruned to the
+        buckets whose file sets differ (identical file sets cannot
+        differ), full-outer classified. Both sides are bucket-aligned
         states, so the join shuffles only the touched fraction of the
         table once per side."""
         proj = newer_schema(snap_from, snap)
-        keys = proj.key_cols
-        payload = [c for c in proj.schema.names if c not in keys]
         touched = snapshot_changed_buckets(snap_from, snap)
-        old = self._read_state(snap_from, proj, touched).select(
-            *keys, F.struct(*payload).alias("__old")
-        )
-        new = self._read_state(snap, proj, touched).select(
-            *keys, F.struct(*payload).alias("__new")
-        )
-        j = old.join(new, on=list(keys), how="full_outer")
-        op = (
-            F.when(F.col("__old").isNull(), F.lit("I"))
-            .when(F.col("__new").isNull(), F.lit("D"))
-            .when(F.col("__old") != F.col("__new"), F.lit("U"))
-        )
-        return (
-            j.withColumn("change_op", op)
-            .filter(F.col("change_op").isNotNull())
-            .select(*keys, "change_op", *[F.col(f"__new.{c}").alias(c) for c in payload])
-        )
-
-    def _changes_from_deltas(
-        self, snap_from: Snapshot, snap: Snapshot, delta_files: list[DataFile]
-    ) -> DataFrame:
-        """changes() over a pure delta-append range: LWW winners of the
-        range's delta files, classified against the OLD state only. A
-        delete of a key that never existed emits nothing; an update
-        whose payload equals the old row emits nothing — the same rows
-        the diff path produces."""
-        proj = newer_schema(snap_from, snap)
-        keys = proj.key_cols
-        payload = [c for c in proj.schema.names if c not in keys]
-        winners = lww_fold(self._read_mapped(proj, delta_files), keys, payload)
-        buckets = {f.bucket for f in delta_files}
-        # with_lsn: tombstones included (classification needs to know a
-        # key was deleted, not absent) plus each old row's stored LSN
-        old = self._read_state(snap_from, proj, buckets, with_lsn=True).select(
-            *keys,
-            F.struct(*payload).alias("__old"),
-            F.col("__op").alias("__oop"),
-            F.col("__lsn").alias("__ol"),
-        )
-        j = winners.join(old, on=list(keys), how="left")
-        # a range winner older than the old row's stored LSN never
-        # applies (the read fold keeps the old row) — emit nothing for
-        # it, exactly like the diff path (old state == new state there)
-        j = j.filter(F.col("__ol").isNull() | (F.col("__lsn") >= F.col("__ol")))
-        is_del = F.col("__op") == "D"
-        # visible old row = present and not a tombstone
-        in_old = F.col("__oop").isNotNull() & (F.col("__oop") != "D")
-        new_struct = F.struct(*[F.col(c) for c in payload])
-        op = (
-            F.when(~in_old & ~is_del, F.lit("I"))
-            .when(in_old & is_del, F.lit("D"))
-            .when(in_old & ~is_del & (F.col("__old") != new_struct), F.lit("U"))
-        )
-        return (
-            j.withColumn("change_op", op)
-            .filter(F.col("change_op").isNotNull())
-            .select(
-                *keys,
-                "change_op",
-                *[F.when(~is_del, F.col(c)).alias(c) for c in payload],
-            )
+        return classify_changes(
+            self._read_state(snap_from, proj, touched),
+            self._read_state(snap, proj, touched),
+            proj.key_cols,
         )
 
     # ------------------------------------------------------------ maintenance

@@ -1441,8 +1441,8 @@ FROM j WHERE change_op IS NOT NULL
 # different physical plan: the second replay appends delta files
 # (strategy="append_delta"), so the whole version range is pure delta
 # adds and changes() takes the fast path (range winners LEFT JOIN the
-# old state; the new state is never reconstructed — table.py
-# _changes_from_deltas). The oracle is the SAME snapshot-diff SQL as
+# old state; the new state is never reconstructed — LakeTable.changes,
+# classified by lakehouse/feed.py). The oracle is the SAME snapshot-diff SQL as
 # cdc_changes_feed on this query's own persisted log: the fast path
 # must be byte-equivalent to the diff semantics.
 # ---------------------------------------------------------------------------

@@ -99,6 +99,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.murmur import SUPPORTED_TYPES
+from ..lakehouse.feed import classify_changes_arrow
 from ..lakehouse.fold import (
     arrow_type as _arrow_type,
     history_fields,
@@ -144,14 +145,16 @@ class BucketPartition(InputPartition):
 
 @dataclass
 class ChangesPartition(InputPartition):
-    """One changed bucket's inputs for a change-feed scan. ``mor`` picks
-    the kernel: delta-classify (pure delta-append range) or full-outer
-    state diff."""
+    """One changed bucket's two sides for a change-feed scan. ``mor``
+    says what the sides are: a pure delta-append range classifies the
+    LWW winners of the range's delta files against the old state with
+    its tombstones and stored LSNs; any other range diffs the two
+    folded states. The I/U/D rule is ``lakehouse/feed.py``'s."""
 
     bucket: int
     old_files: list[tuple[str, int, str]]
-    # diff path: the bucket's files in the TO snapshot; MOR path: the
-    # range's delta files only
+    # diff: the bucket's files in the TO snapshot; MOR: the range's
+    # delta files only
     new_files: list[tuple[str, int, str]]
     mor: bool
     root: str
@@ -199,147 +202,43 @@ def _load_state(
     return tbl.select(names).cast(schema)
 
 
-def _null_safe_any_diff(tbl, cols: list[str]):
-    """True where any payload column differs from its ``__old_`` twin,
-    with null == null (Spark's struct-comparison semantics, which
-    ``LakeTable.changes`` relies on)."""
-    import pyarrow.compute as pc
-
-    any_diff = None
-    for c in cols:
-        a, b = tbl[c], tbl[f"__old_{c}"]
-        eq = pc.fill_null(
-            pc.or_kleene(pc.equal(a, b), pc.and_(pc.is_null(a), pc.is_null(b))),
-            False,
-        )
-        d = pc.invert(eq)
-        any_diff = d if any_diff is None else pc.or_(any_diff, d)
-    return any_diff
-
-
-def _feed_schema_arrow(target_fields, key_cols, with_version: bool = False):
-    import pyarrow as pa
-
-    by_name = {name: tname for _, name, tname, _ in target_fields}
-    payload = [n for _, n, _, _ in target_fields if n not in key_cols]
-    return pa.schema(
-        [(k, _arrow_type(by_name[k])) for k in key_cols]
-        + [(CHANGE_OP_COL, pa.string())]
-        + ([(CHANGE_VERSION_COL, pa.int64())] if with_version else [])
-        + [(c, _arrow_type(by_name[c])) for c in payload]
-    )
-
-
 def _read_changes_partition(partition: ChangesPartition):
-    """The change rows of one bucket — both kernels emit exactly the
-    rows ``LakeTable.changes`` would (parity-tested): I for new keys,
-    D (payload nulls) for removed keys, U for payload changes; no-op
-    updates and deletes of never-existing keys emit nothing."""
+    """The change rows of one bucket as Arrow batches — exactly the rows
+    ``LakeTable.changes`` emits (parity-tested). This kernel only loads
+    the two sides (see ``ChangesPartition``); ``classify_changes_arrow``
+    turns them into I/U/D rows, with NULL keys matching like any other
+    value."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
+    if not partition.old_files and not partition.new_files:
+        return iter(())
     tf, keys = partition.target_fields, partition.key_cols
-    payload = [n for _, n, _, _ in tf if n not in keys]
-    out_schema = _feed_schema_arrow(tf, keys, partition.version is not None)
     state_schema = pa.schema([(name, _arrow_type(t)) for _, name, t, _ in tf])
-    old = _load_state(
-        partition.root,
-        partition.old_files,
-        partition.histories,
-        tf,
+
+    def side(files):
+        return _load_state(
+            partition.root,
+            files,
+            partition.histories,
+            tf,
+            keys,
+            state_schema,
+            with_lsn=partition.mor,
+        )
+
+    tbl = classify_changes_arrow(
+        side(partition.old_files),
+        side(partition.new_files),
         keys,
-        state_schema,
-        with_lsn=partition.mor,
+        range_winners=partition.mor,
     )
-    # rename old payload out of the way of the join
-    old = old.rename_columns(
-        keys
-        + [f"__old_{c}" for c in payload]
-        + (["__old_op", "__old_lsn"] if partition.mor else [])
-    )
-    old = old.append_column("__in_old", pa.array([True] * len(old), type=pa.bool_()))
-
-    if partition.mor:
-        deltas = load_projected(
-            partition.root, partition.new_files, partition.histories, tf
-        ).cast(
-            pa.schema(
-                list(state_schema) + [pa.field("__op", pa.string()), pa.field("__lsn", pa.int64())]
-            )
+    if partition.version is not None:
+        tbl = tbl.add_column(
+            len(keys) + 1,
+            CHANGE_VERSION_COL,
+            pa.array([partition.version] * len(tbl), type=pa.int64()),
         )
-        w = lww_winners(deltas, keys)
-        j = w.join(old, keys=keys, join_type="left outer")
-        # a range winner older than the old row's stored LSN never
-        # applies (the read fold keeps the old row) — emit nothing,
-        # exactly like the state-diff path (old state == new state)
-        applies = pc.fill_null(
-            pc.or_kleene(
-                pc.is_null(j["__old_lsn"]),
-                pc.greater_equal(j["__lsn"], j["__old_lsn"]),
-            ),
-            True,
-        )
-        j = j.filter(applies)
-        # visible old row = present and not a tombstone
-        in_old = pc.and_(
-            pc.fill_null(j["__in_old"], False),
-            pc.invert(pc.fill_null(pc.equal(j["__old_op"], "D"), False)),
-        )
-        is_del = pc.equal(j["__op"], "D")
-        differs = (
-            _null_safe_any_diff(j, payload)
-            if payload
-            else pa.array([False] * len(j), type=pa.bool_())
-        )
-        op = pc.if_else(
-            pc.and_(pc.invert(in_old), pc.invert(is_del)),
-            pa.scalar("I"),
-            pc.if_else(
-                pc.and_(in_old, is_del),
-                pa.scalar("D"),
-                pc.if_else(pc.and_(in_old, differs), pa.scalar("U"), pa.scalar(None, pa.string())),
-            ),
-        )
-    else:
-        new = _load_state(
-            partition.root, partition.new_files, partition.histories, tf, keys, state_schema
-        )
-        new = new.append_column("__in_new", pa.array([True] * len(new), type=pa.bool_()))
-        j = new.join(old, keys=keys, join_type="full outer")
-        in_old = pc.fill_null(j["__in_old"], False)
-        in_new = pc.fill_null(j["__in_new"], False)
-        differs = (
-            _null_safe_any_diff(j, payload)
-            if payload
-            else pa.array([False] * len(j), type=pa.bool_())
-        )
-        is_del = pc.invert(in_new)
-        op = pc.if_else(
-            pc.invert(in_old),
-            pa.scalar("I"),
-            pc.if_else(
-                is_del,
-                pa.scalar("D"),
-                pc.if_else(pc.and_(in_new, differs), pa.scalar("U"), pa.scalar(None, pa.string())),
-            ),
-        )
-
-    j = j.append_column(CHANGE_OP_COL, op)
-    j = j.filter(pc.is_valid(j[CHANGE_OP_COL]))
-    # D rows surface null payload (the new side has no row / is a marker)
-    is_d = pc.equal(j[CHANGE_OP_COL], "D")
-    cols = []
-    for name in out_schema.names:
-        if name == CHANGE_OP_COL:
-            cols.append(j[CHANGE_OP_COL])
-        elif name == CHANGE_VERSION_COL:
-            cols.append(pa.array([partition.version] * len(j), type=pa.int64()))
-        elif name in keys:
-            cols.append(j[name])
-        else:
-            at = out_schema.field(name).type
-            cols.append(pc.if_else(is_d, pa.scalar(None, at), pc.cast(j[name], at)))
-    return pa.table(cols, names=out_schema.names).cast(out_schema)
+    return iter(tbl.to_batches(max_chunksize=1 << 16))
 
 
 # ---------------------------------------------------------------------------
@@ -363,63 +262,36 @@ def _plan_changes(
     path (pure delta-append range ⇒ classify range winners against the
     old state; anything rewritten ⇒ full state diff)."""
     proj = newer_schema(snap_from, snap_to)
-    target = _target_fields(proj.schema)
     # histories accumulate monotonically: the LATER snapshot covers all
     # schema versions either side's files can carry
-    hist_src = (
-        snap_to if snap_to.version >= snap_from.version else snap_from
-    )
-    histories = history_fields(hist_src.schema_history)
+    later = max(snap_from, snap_to, key=lambda s: s.version)
+    target = _target_fields(proj.schema)
+    histories = history_fields(later.schema_history)
     keys = list(proj.key_cols)
     removed, added = snapshot_file_delta(snap_from, snap_to)
-    parts: list[ChangesPartition] = []
-    if is_delta_append_range(removed, added):
-        by_bucket: dict[int, list] = {}
+    mor = is_delta_append_range(removed, added)
+    new_by_bucket: dict[int, list] = {}
+    if mor:
         for f in added:
-            by_bucket.setdefault(f.bucket, []).append(f)
-        for b, dfs in sorted(by_bucket.items()):
-            parts.append(
-                ChangesPartition(
-                    bucket=b,
-                    old_files=_pack_files(snap_from.files_in_buckets({b})),
-                    new_files=_pack_files(dfs),
-                    mor=True,
-                    root=root,
-                    target_fields=target,
-                    histories=histories,
-                    key_cols=keys,
-                    version=snap_to.version if include_version else None,
-                )
-            )
+            new_by_bucket.setdefault(f.bucket, []).append(f)
     else:
-        for b in sorted(snapshot_changed_buckets(snap_from, snap_to)):
-            parts.append(
-                ChangesPartition(
-                    bucket=b,
-                    old_files=_pack_files(snap_from.files_in_buckets({b})),
-                    new_files=_pack_files(snap_to.files_in_buckets({b})),
-                    mor=False,
-                    root=root,
-                    target_fields=target,
-                    histories=histories,
-                    key_cols=keys,
-                    version=snap_to.version if include_version else None,
-                )
-            )
-    return parts
-
-
-def _empty_changes_partition(root: str, snap: Snapshot) -> ChangesPartition:
-    return ChangesPartition(
-        bucket=-1,
-        old_files=[],
-        new_files=[],
-        mor=False,
-        root=root,
-        target_fields=_target_fields(snap.schema),
-        histories=history_fields(snap.schema_history),
-        key_cols=list(snap.key_cols),
-    )
+        for b in snapshot_changed_buckets(snap_from, snap_to):
+            new_by_bucket[b] = snap_to.files_in_buckets({b})
+    # a scan needs one partition: an empty range plans one empty bucket
+    return [
+        ChangesPartition(
+            bucket=b,
+            old_files=_pack_files(snap_from.files_in_buckets({b})),
+            new_files=_pack_files(fs),
+            mor=mor,
+            root=root,
+            target_fields=target,
+            histories=histories,
+            key_cols=keys,
+            version=snap_to.version if include_version else None,
+        )
+        for b, fs in sorted(new_by_bucket.items() or [(-1, [])])
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -651,10 +523,9 @@ class PanoramaChangesReader(DataSourceReader):
         )
 
     def partitions(self) -> list[InputPartition]:
-        parts = _plan_changes(
+        return _plan_changes(
             self.root, self.snap_from, self.snap_to, self.include_version
         )
-        return parts or [_empty_changes_partition(self.root, self.snap_to)]
 
     def __getstate__(self):
         state = dict(self.__dict__)
@@ -662,11 +533,7 @@ class PanoramaChangesReader(DataSourceReader):
         return state
 
     def read(self, partition: ChangesPartition):
-        if not partition.old_files and not partition.new_files:
-            return iter(())
-        return iter(
-            _read_changes_partition(partition).to_batches(max_chunksize=1 << 16)
-        )
+        return _read_changes_partition(partition)
 
 
 class PanoramaStreamReader(DataSourceStreamReader):
@@ -700,22 +567,12 @@ class PanoramaStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         v0, v1 = int(start["version"]), int(end["version"])
-        if v0 >= v1:
-            return [_empty_changes_partition(self.root, self.log.read_version(v1))]
-        parts = _plan_changes(
-            self.root,
-            self.log.read_version(v0),
-            self.log.read_version(v1),
-            self.include_version,
-        )
-        return parts or [_empty_changes_partition(self.root, self.log.read_version(v1))]
+        snap_to = self.log.read_version(v1)
+        snap_from = snap_to if v0 >= v1 else self.log.read_version(v0)
+        return _plan_changes(self.root, snap_from, snap_to, self.include_version)
 
     def read(self, partition: ChangesPartition):
-        if not partition.old_files and not partition.new_files:
-            return iter(())
-        return iter(
-            _read_changes_partition(partition).to_batches(max_chunksize=1 << 16)
-        )
+        return _read_changes_partition(partition)
 
     def commit(self, end: dict) -> None:
         pass  # snapshots are immutable; retention is expire_snapshots'
@@ -1037,12 +894,14 @@ class PanoramaDataSource(DataSource):
         if snap is None:
             raise FileNotFoundError(f"no lake table at {self._root()}")
         if self._is_feed():
+            # the batch feed projects onto the newer of its two ends, as
+            # _plan_changes does; the stream pins the current schema
             from_v = self.options.get("changes_from")
             proj = snap
             if from_v is not None:
-                snap_from = log.read_version(int(from_v))
-                if snap_from.schema.schema_version > snap.schema.schema_version:
-                    proj = snap_from
+                to_v = self.options.get("changes_to")
+                snap_to = snap if to_v is None else log.read_version(int(to_v))
+                proj = newer_schema(log.read_version(int(from_v)), snap_to)
             keys = list(proj.key_cols)
             struct = proj.schema.to_struct()
             version_field = (
