@@ -107,13 +107,15 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..lakehouse import table as _table
 from ..lakehouse.fold import lww_fold
-from ..lakehouse.snapshot import CommitConflict
 from ..lakehouse.table import (
     LakeTable,
     _pinned_shuffle,
     bucket_expr,
     root_is_shared_posix,
 )
+
+# the exactly-once commit lives next to the rebase rule it relies on
+commit_or_skip = LakeTable.commit_or_skip
 
 
 @dataclass
@@ -335,36 +337,6 @@ def _bucket_local_map_fn(
     return fn
 
 
-def commit_or_skip(table: LakeTable, parent, *commit_args, batch_id: str, **commit_kwargs):
-    """Commit; on a CAS conflict, resolve the exactly-once race.
-
-    Two writers submitting the *same deterministic batch id* (a retried
-    job, a failed-over driver) race on version N; the loser's
-    ``CommitConflict`` here means the batch may already be in. If the
-    winning snapshot carries ``batch_id``, the loser's work is redundant
-    by construction (same id ⇒ same LSN range ⇒ same resolved state) —
-    return (current snapshot, skipped=True) and let ``vacuum`` reap the
-    loser's unreferenced files. A *different* batch that invalidated
-    this merge's inputs (moved the LSN checkpoint, or touched the
-    replaced buckets with anything but fold-forward deltas) is a real
-    lost update and re-raises; a provably-disjoint concurrent commit —
-    a compaction landing mid-merge, a delta append racing a compaction
-    — rebases onto the fresh snapshot instead
-    (``LakeTable._rebase``), so maintenance never blocks ingestion.
-    """
-    try:
-        snap = table.commit_replace_buckets(
-            parent, *commit_args, batch_id=batch_id, retry_on_conflict=True,
-            **commit_kwargs
-        )
-        return snap, False
-    except CommitConflict:
-        cur = table.snapshot
-        if table.is_batch_committed(batch_id, cur):
-            return cur, True
-        raise
-
-
 def merge_batch(
     table: LakeTable,
     batch_df: DataFrame,
@@ -393,8 +365,8 @@ def merge_batch(
     affected = set(per_bucket)
     if not affected:
         per_key.unpersist()
-        new_snap, lost_race = commit_or_skip(
-            table, snap, set(), [], batch_id=batch_id, lineage_rows=[]
+        new_snap, lost_race = table.commit_or_skip(
+            snap, set(), [], batch_id=batch_id, lineage_rows=[]
         )
         return MergeStats(
             batch_id=batch_id, skipped=lost_race, snapshot_version=new_snap.version
@@ -519,12 +491,11 @@ def merge_batch(
             for b in sorted(affected)
         ]
         batch_max_lsn = max(int(per_bucket[b]["lsn_hi"]) for b in affected)
-        new_snap, lost_race = commit_or_skip(
-            table,
+        new_snap, lost_race = table.commit_or_skip(
             snap,
             replaced_buckets,
             new_files,
-            last_lsn=max(snap.last_lsn, batch_max_lsn),
+            last_lsn=batch_max_lsn,
             batch_id=batch_id,
             lineage_rows=lineage_rows,
         )

@@ -351,6 +351,7 @@ class SnapshotLog:
         self.meta_dir = os.path.join(table_root, "_meta")
         self.manifest_dir = os.path.join("_meta", "manifests")  # root-relative
         self.hint_path = os.path.join(self.meta_dir, "version-hint.txt")
+        self.refs_path = os.path.join(self.meta_dir, "refs.json")
 
     def _version_path(self, version: int) -> str:
         return os.path.join(self.meta_dir, f"v{version}.json")
@@ -391,6 +392,22 @@ class SnapshotLog:
             )
             snap.manifests = [ManifestEntry.from_dict(e) for e in ml["entries"]]
         return snap
+
+    def refs(self) -> dict[str, int]:
+        """Named snapshot refs (tags, ``LakeTable.tag``): ``{name: version}``
+        from the ``_meta/refs.json`` document; none written yet = ``{}``."""
+        try:
+            return {
+                k: int(v) for k, v in json.loads(self.io.read_text(self.refs_path)).items()
+            }
+        except (FileNotFoundError, NotADirectoryError):
+            return {}
+
+    def resolve_ref(self, ref: str) -> int:
+        refs = self.refs()
+        if ref not in refs:
+            raise KeyError(f"unknown ref {ref!r}; known: {sorted(refs)}")
+        return refs[ref]
 
     def commit(self, snapshot: Snapshot, expected_parent: int | None) -> None:
         """Write the manifest-list file, then exclusive-create v{N};

@@ -64,7 +64,6 @@ ARROW_WRITE_BATCH = 131_072
 # buckets per manifest file: bounds a bucket rewrite's collateral
 MANIFEST_SPAN = 8
 # optimistic-rebase attempts on a CAS conflict (``retry_on_conflict``)
-# and the data-source writers' commit retries
 COMMIT_RETRIES = 5
 # key-value combinations a lookup may hash for bucket/bloom pruning
 MAX_PRUNE_COMBOS = 1024
@@ -761,13 +760,17 @@ class LakeTable:
         self, parent: Snapshot, replaced_buckets: set[int]
     ) -> list[ManifestEntry]:
         """Parent manifests minus ``replaced_buckets``: untouched
-        manifests carry over as references (zero IO); manifests whose
-        bucket group intersects the replacement are loaded, filtered
-        and re-chunked."""
+        manifests carry over as references and wholly replaced ones
+        drop out (zero IO either way); manifests whose bucket group
+        only partly intersects the replacement are loaded, filtered and
+        re-chunked."""
         out: list[ManifestEntry] = []
         for m in parent.manifests:
-            if not (set(m.buckets) & replaced_buckets):
+            hit = set(m.buckets) & replaced_buckets
+            if not hit:
                 out.append(m)
+                continue
+            if len(hit) == len(set(m.buckets)):
                 continue
             survivors = [
                 f for f in parent.load_manifest(m) if f.bucket not in replaced_buckets
@@ -1173,24 +1176,8 @@ class LakeTable:
     def append(self, df: DataFrame) -> Snapshot:
         """Plain append (initial load path)."""
         snap = self.snapshot
-        new_version = snap.version + 1
-        new_files = self.write_bucket_files(_appended_rows(df, snap), new_version)
-        new_snap = Snapshot(
-            version=new_version,
-            schema=snap.schema,
-            n_buckets=snap.n_buckets,
-            key_cols=snap.key_cols,
-            manifests=self._carry_manifests(snap, set()) + self._write_manifests(new_files),
-            last_lsn=snap.last_lsn,
-            committed_batches=list(snap.committed_batches),
-            lineage=list(snap.lineage),
-            schema_history=dict(snap.schema_history),
-            properties=dict(snap.properties),
-            lineage_files=list(snap.lineage_files),
-            batchid_files=list(snap.batchid_files),
-        )
-        self.log.commit(new_snap, expected_parent=snap.version)
-        return new_snap
+        new_files = self.write_bucket_files(_appended_rows(df, snap), snap.version + 1)
+        return self._commit_attempt(snap, set(), new_files)
 
     def overwrite(self, df: DataFrame, *, properties: dict | None = None) -> Snapshot:
         """Full-table replace — the extract-and-load landing path (the
@@ -1198,28 +1185,13 @@ class LakeTable:
         extract, ``panorama_datalake.py:215-258``; at row grain that is
         one atomic all-bucket swap). ``properties`` merge into the
         snapshot (e.g. the declared field-type map the typed view uses).
+        Replacing every bucket reads no parent manifest.
         """
         snap = self.snapshot
-        new_version = snap.version + 1
-        new_files = self.write_bucket_files(_appended_rows(df, snap), new_version)
-        props = dict(snap.properties)
-        props.update(properties or {})
-        new_snap = Snapshot(
-            version=new_version,
-            schema=snap.schema,
-            n_buckets=snap.n_buckets,
-            key_cols=snap.key_cols,
-            manifests=self._write_manifests(new_files),
-            last_lsn=snap.last_lsn,
-            committed_batches=list(snap.committed_batches),
-            lineage=list(snap.lineage),
-            schema_history=dict(snap.schema_history),
-            properties=props,
-            lineage_files=list(snap.lineage_files),
-            batchid_files=list(snap.batchid_files),
+        new_files = self.write_bucket_files(_appended_rows(df, snap), snap.version + 1)
+        return self._commit_attempt(
+            snap, set(range(snap.n_buckets)), new_files, properties=properties
         )
-        self.log.commit(new_snap, expected_parent=snap.version)
-        return new_snap
 
     def commit_replace_buckets(
         self,
@@ -1230,12 +1202,12 @@ class LakeTable:
         last_lsn: int | None = None,
         batch_id: str | None = None,
         lineage_rows: list[dict] | None = None,
-        new_schema: TableSchema | None = None,
         new_n_buckets: int | None = None,
         retry_on_conflict: bool = False,
     ) -> Snapshot:
         """Atomic snapshot swap: files of ``replaced_buckets`` out, ``new_files``
         in, plus checkpoint LSN / batch id / lineage in the same commit.
+        ``_commit_attempt`` builds the snapshot.
 
         Metadata retention (the snapshot document must stay O(retention),
         not O(table lifetime) — at streaming cadence a year of
@@ -1253,46 +1225,37 @@ class LakeTable:
           misses, i.e. never on the new-batch hot path beyond a cached
           read per spill file per process).
 
-        ``retry_on_conflict=True`` turns a CAS loss into an *optimistic
-        rebase* (Iceberg-style conflict resolution) when the winning
-        commit provably doesn't invalidate this one — see ``_rebase``.
-        Data files are already on disk either way; a rebase rewrites
-        only O(touched) metadata against the fresh parent, so a
-        maintenance commit (compaction) and a merge-on-read ingest
-        batch can race without failing either. Default off: the bare
-        call keeps strict first-writer-wins semantics.
+        Conflict policy. ``retry_on_conflict=True`` turns a CAS loss into
+        an *optimistic rebase* (Iceberg-style conflict resolution) when
+        the winning commit provably doesn't invalidate this one — see
+        ``_rebase``. Data files are already on disk either way; a rebase
+        rewrites only O(touched) metadata against the fresh parent, so a
+        maintenance commit (compaction) and a merge-on-read ingest batch
+        can race without failing either. Default off: the bare call keeps
+        strict first-writer-wins semantics. Callers: ``commit_or_skip``
+        (every merge and streaming-sink epoch), ``compact`` and the
+        ``format("panorama")`` batch writer retry; ``rebucket`` is
+        strict, and so are ``append``, ``overwrite`` and ``alter_schema``,
+        which call ``_commit_attempt`` directly.
         """
+        kw = dict(
+            last_lsn=last_lsn,
+            batch_id=batch_id,
+            lineage_rows=lineage_rows,
+            new_n_buckets=new_n_buckets,
+        )
         for _ in range(COMMIT_RETRIES if retry_on_conflict else 0):
             try:
-                return self._commit_attempt(
-                    parent,
-                    replaced_buckets,
-                    new_files,
-                    last_lsn=last_lsn,
-                    batch_id=batch_id,
-                    lineage_rows=lineage_rows,
-                    new_schema=new_schema,
-                    new_n_buckets=new_n_buckets,
-                )
+                return self._commit_attempt(parent, replaced_buckets, new_files, **kw)
             except CommitConflict:
                 rebased = self._rebase(
-                    parent, replaced_buckets, last_lsn, batch_id, new_schema,
-                    new_n_buckets,
+                    parent, replaced_buckets, last_lsn, batch_id, new_n_buckets
                 )
                 if rebased is None:
                     raise
                 parent, carried = rebased
                 new_files = new_files + carried
-        return self._commit_attempt(
-            parent,
-            replaced_buckets,
-            new_files,
-            last_lsn=last_lsn,
-            batch_id=batch_id,
-            lineage_rows=lineage_rows,
-            new_schema=new_schema,
-            new_n_buckets=new_n_buckets,
-        )
+        return self._commit_attempt(parent, replaced_buckets, new_files, **kw)
 
     def _rebase(
         self,
@@ -1300,20 +1263,24 @@ class LakeTable:
         replaced_buckets: set[int],
         last_lsn: int | None,
         batch_id: str | None,
-        new_schema: TableSchema | None,
-        new_n_buckets: int | None = None,
+        new_n_buckets: int | None,
     ) -> tuple[Snapshot, list[DataFile]] | None:
         """Decide whether a CAS-losing commit can re-target the current
         snapshot unchanged. Returns ``(fresh_parent, carried_files)`` or
-        ``None`` (caller re-raises). Safe iff the intervening commits
-        are provably disjoint from this one:
+        ``None`` (caller re-raises). The one conflict rule of every
+        ``retry_on_conflict=True`` caller of ``commit_replace_buckets``.
+        Safe iff the intervening commits are provably disjoint from
+        this one:
 
+        * no concurrent bucket-count change (our files carry bucket ids
+          of ``parent``'s layout) and this commit isn't itself one;
         * no concurrent schema change (our files conform to ``parent``'s
-          epoch) and this commit isn't itself a schema change;
+          epoch);
         * the batch id isn't already in (that's the exactly-once race —
           ``commit_or_skip`` resolves it to a skip, not a rebase);
-        * if this commit moves the LSN checkpoint, nobody else moved it
-          (two checkpointing writers = two tails = a real conflict);
+        * if this commit carries an LSN checkpoint, nobody else moved it
+          (two checkpointing writers = two tails = a real conflict; a
+          streaming sink whose events carry LSNs counts as a tail);
         * the files this commit read-and-replaced are all still live in
           the fresh snapshot. Files *added* to those buckets meanwhile
           are fine only if they are merge-on-read deltas: deltas fold
@@ -1322,13 +1289,16 @@ class LakeTable:
           Hudi-style "compaction never blocks ingestion" property). A
           removed or non-delta-added file means the winner rewrote state
           this commit depended on — no rebase.
+
+        ``format("panorama")`` writes are held to this rule too and
+        are never retried blindly: one that loses the race to a
+        rebucket, an ALTER, a rival rewrite of its buckets, or another
+        writer that moved the checkpoint fails with ``CommitConflict``.
         """
         fresh = self.log.read_current()
-        if fresh is None or new_schema is not None or new_n_buckets is not None:
+        if fresh is None or new_n_buckets is not None:
             return None
         if fresh.n_buckets != parent.n_buckets:
-            # a rebucket landed under us: our files carry stale bucket
-            # ids — never carry or re-target across a bucket-count change
             return None
         if batch_id is not None and self.is_batch_committed(batch_id, fresh):
             return None
@@ -1349,20 +1319,69 @@ class LakeTable:
                 return None
         return fresh, carried
 
+    def commit_or_skip(
+        self, parent: Snapshot, *commit_args, batch_id: str, **commit_kwargs
+    ) -> tuple[Snapshot, bool]:
+        """Commit a batch exactly once (merges, streaming-sink epochs);
+        returns ``(snapshot, skipped)``. A batch id already in
+        ``parent`` (a re-delivered epoch) or in the snapshot that beat
+        this commit's CAS (a retried job, a failed-over driver: same id
+        ⇒ same LSN range ⇒ same resolved state) is skipped, and
+        ``vacuum`` reaps the loser's files. Any other lost race follows
+        ``_rebase``: a provably disjoint winner (a compaction landing
+        mid-merge) is rebased over, a real lost update re-raises.
+        """
+        if self.is_batch_committed(batch_id, parent):
+            return self.snapshot, True
+        try:
+            snap = self.commit_replace_buckets(
+                parent, *commit_args, batch_id=batch_id, retry_on_conflict=True,
+                **commit_kwargs
+            )
+            return snap, False
+        except CommitConflict:
+            cur = self.snapshot
+            if self.is_batch_committed(batch_id, cur):
+                return cur, True
+            raise
+
     def _commit_attempt(
         self,
         parent: Snapshot,
         replaced_buckets: set[int],
         new_files: list[DataFile],
         *,
-        last_lsn: int | None,
-        batch_id: str | None,
-        lineage_rows: list[dict] | None,
-        new_schema: TableSchema | None,
+        last_lsn: int | None = None,
+        batch_id: str | None = None,
+        lineage_rows: list[dict] | None = None,
+        new_schema: TableSchema | None = None,
         new_n_buckets: int | None = None,
+        properties: dict | None = None,
     ) -> Snapshot:
-        kept_manifests = self._carry_manifests(parent, replaced_buckets)
+        """Build the child of ``parent`` and CAS it in — the one place a
+        snapshot is built after ``create``. The checkpoint never moves
+        backwards (``max`` of the parent's and ``last_lsn``); under a
+        ``new_schema`` key columns follow their field ids through
+        renames and may not change type (``alter_schema``);
+        ``properties`` merge over the parent's."""
+        from .schema import SchemaEvolutionError
+
         schema = new_schema or parent.schema
+        key_cols = list(parent.key_cols)
+        for i, k in enumerate(key_cols):
+            old_fld = parent.schema.field_by_name(k)
+            new_fld = schema.field_by_id(old_fld.id) if old_fld else None
+            if new_fld is None:
+                continue
+            if new_fld.type != old_fld.type:
+                raise SchemaEvolutionError(
+                    f"cannot change type of key column {k!r} "
+                    f"({old_fld.type} -> {new_fld.type}): the bucket hash is "
+                    "type-dependent, so existing rows would be addressed under "
+                    "the wrong bucket; rewrite via rebucket() instead"
+                )
+            key_cols[i] = new_fld.name
+        kept_manifests = self._carry_manifests(parent, replaced_buckets)
         history = dict(parent.schema_history)
         history[schema.schema_version] = schema
         new_version = parent.version + 1
@@ -1395,13 +1414,13 @@ class LakeTable:
             version=new_version,
             schema=schema,
             n_buckets=new_n_buckets or parent.n_buckets,
-            key_cols=parent.key_cols,
+            key_cols=key_cols,
             manifests=kept_manifests + self._write_manifests(new_files),
-            last_lsn=parent.last_lsn if last_lsn is None else last_lsn,
+            last_lsn=parent.last_lsn if last_lsn is None else max(parent.last_lsn, last_lsn),
             committed_batches=batches,
             lineage=lineage_all,
             schema_history=history,
-            properties=dict(parent.properties),
+            properties={**parent.properties, **(properties or {})},
             lineage_files=lineage_files,
             batchid_files=batchid_files,
         )
@@ -1463,43 +1482,9 @@ class LakeTable:
         under the new type — splitting keys across buckets (duplicate
         winners) and silently missing rows on pruned reads. A key-type
         change needs a full rewrite: ``rebucket(n_buckets)`` after
-        changing the type out-of-band."""
-        from .schema import SchemaEvolutionError
-
-        snap = self.snapshot
-        for k in snap.key_cols:
-            old_fld = snap.schema.field_by_name(k)
-            new_fld = new_schema.field_by_id(old_fld.id) if old_fld else None
-            if new_fld is not None and new_fld.type != old_fld.type:
-                raise SchemaEvolutionError(
-                    f"cannot change type of key column {k!r} "
-                    f"({old_fld.type} -> {new_fld.type}): the bucket hash is "
-                    "type-dependent, so existing rows would be addressed under "
-                    "the wrong bucket; rewrite via rebucket() instead"
-                )
-        history = dict(snap.schema_history)
-        history[new_schema.schema_version] = new_schema
-        new_keys = []
-        for k in snap.key_cols:
-            old_fld = snap.schema.field_by_name(k)
-            new_fld = new_schema.field_by_id(old_fld.id) if old_fld else None
-            new_keys.append(new_fld.name if new_fld else k)
-        new_snap = Snapshot(
-            version=snap.version + 1,
-            schema=new_schema,
-            n_buckets=snap.n_buckets,
-            key_cols=new_keys,
-            manifests=self._carry_manifests(snap, set()),
-            last_lsn=snap.last_lsn,
-            committed_batches=list(snap.committed_batches),
-            lineage=list(snap.lineage),
-            schema_history=history,
-            properties=dict(snap.properties),
-            lineage_files=list(snap.lineage_files),
-            batchid_files=list(snap.batchid_files),
-        )
-        self.log.commit(new_snap, expected_parent=snap.version)
-        return new_snap
+        changing the type out-of-band. Both rules live in
+        ``_commit_attempt``."""
+        return self._commit_attempt(self.snapshot, set(), [], new_schema=new_schema)
 
     def changed_buckets(self, from_version: int, to_version: int | None = None) -> set[int]:
         """Buckets whose file set differs between two snapshots. Data
@@ -1700,25 +1685,13 @@ class LakeTable:
 
     # ------------------------------------------------------------ named refs
 
-    def _refs_path(self) -> str:
-        return os.path.join(self.root, "_meta", "refs.json")
-
     def refs(self) -> dict[str, int]:
         """Named snapshot refs (tags): ``{name: version}``. Tags pin a
         version against ``expire_snapshots`` and give readers a stable
         name (``read(ref=...)``, data source ``.option("ref", ...)``) —
         the Iceberg tag shape. Stored in one ``_meta/refs.json``
-        document through the FileIO seam."""
-        import json
-
-        try:
-            return {
-                k: int(v) for k, v in json.loads(
-                    self.io.read_text(self._refs_path())
-                ).items()
-            }
-        except (FileNotFoundError, NotADirectoryError):
-            return {}
+        document (``SnapshotLog.refs``)."""
+        return self.log.refs()
 
     def tag(self, name: str, version: int | None = None) -> int:
         """Create or move the tag ``name`` to ``version`` (default: the
@@ -1733,7 +1706,7 @@ class LakeTable:
         self.log.read_version(v)  # raises if expired/nonexistent
         refs = self.refs()
         refs[name] = v
-        self.io.write_text(self._refs_path(), json.dumps(refs, indent=1))
+        self.io.write_text(self.log.refs_path, json.dumps(refs, indent=1))
         return v
 
     def drop_tag(self, name: str) -> None:
@@ -1743,15 +1716,10 @@ class LakeTable:
         if name not in refs:
             raise KeyError(name)
         del refs[name]
-        self.io.write_text(self._refs_path(), json.dumps(refs, indent=1))
+        self.io.write_text(self.log.refs_path, json.dumps(refs, indent=1))
 
     def resolve_ref(self, ref: str) -> int:
-        refs = self.refs()
-        if ref not in refs:
-            raise KeyError(
-                f"unknown ref {ref!r}; known: {sorted(refs)}"
-            )
-        return refs[ref]
+        return self.log.resolve_ref(ref)
 
     def rebucket(
         self,

@@ -44,6 +44,9 @@ And two write surfaces over the same bucket layout (``PanoramaWriter``
   lake → readStream → transform → writeStream → lake is end-to-end
   exactly-once in pure Spark API.
 
+Both commit through the table's conflict policy (``LakeTable._rebase``),
+so sinks that carry LSNs into one table conflict like two CDC tails.
+
 Scale design:
 
 * state-read partition grain: one input partition per FILE for
@@ -299,7 +302,7 @@ def _plan_changes(
 # ---------------------------------------------------------------------------
 
 
-def _resolve_version_option(log: SnapshotLog, root: str, options) -> int | None:
+def _resolve_version_option(log: SnapshotLog, options) -> int | None:
     """``version`` (numeric) or ``ref`` (a tag name in ``_meta/refs.json``,
     ``LakeTable.tag``) → snapshot version; None = current."""
     version = options.get("version")
@@ -307,13 +310,7 @@ def _resolve_version_option(log: SnapshotLog, root: str, options) -> int | None:
     if ref is not None:
         if version is not None:
             raise ValueError("pass version or ref, not both")
-        import json
-        import os as _os
-
-        refs = json.loads(log.io.read_text(_os.path.join(root, "_meta", "refs.json")))
-        if ref not in refs:
-            raise KeyError(f"unknown ref {ref!r}; known: {sorted(refs)}")
-        return int(refs[ref])
+        return log.resolve_ref(ref)
     return None if version is None else int(version)
 
 
@@ -326,7 +323,7 @@ class PanoramaReader(DataSourceReader):
         if not log.exists():
             raise FileNotFoundError(f"no lake table at {root}")
         self._io = log.io  # planning-time metadata IO (bloom sidecars)
-        version = _resolve_version_option(log, root, options)
+        version = _resolve_version_option(log, options)
         self.snap = (
             log.read_current() if version is None else log.read_version(int(version))
         )
@@ -590,9 +587,12 @@ class PanoramaStreamReader(DataSourceStreamReader):
 
 @dataclass
 class PanoramaWriteResult(WriterCommitMessage):
-    """One task's written files: (rel_path, bucket, rows, stats_json)."""
+    """One task's written files: (rel_path, bucket, rows, stats_json),
+    and the bucket count and schema version it wrote them under."""
 
     files: list
+    n_buckets: int
+    schema_version: int
     max_lsn: int | None = None
 
 
@@ -704,71 +704,67 @@ def _write_task(plan: dict, batches) -> PanoramaWriteResult:
         for manifest in write(bucketed())
         for r in manifest.to_pylist()
     ]
-    return PanoramaWriteResult(files=files, max_lsn=max_lsn)
+    return PanoramaWriteResult(files, plan["n_buckets"], plan["schema_version"], max_lsn)
 
 
-def _data_files_from_messages(messages, schema_version: int, kind: str):
+def _commit_messages(root: str, messages, *, overwrite=False, batch_id=None) -> None:
+    """Commit the files the write tasks reported onto the current
+    snapshot. Files bucketed for another bucket count raise
+    ``CommitConflict``; each file keeps its task's schema version. A
+    sink epoch (``batch_id``) lands deltas through ``commit_or_skip``,
+    checkpointing its max LSN; a batch write lands base files and
+    retries through ``_rebase``."""
     import json
 
-    from ..lakehouse.snapshot import DataFile
-
-    files = []
-    for m in messages:
-        if m is None:
-            continue
-        for rel_path, bucket, rows, stats_json in m.files:
-            files.append(
-                DataFile(
-                    path=rel_path,
-                    bucket=int(bucket),
-                    rows=int(rows),
-                    schema_version=schema_version,
-                    kind=kind,
-                    stats=json.loads(stats_json) if stats_json else None,
-                )
-            )
-    return files
-
-
-def _commit_with_retry(
-    root: str,
-    files,
-    *,
-    overwrite: bool,
-    batch_id: str | None = None,
-    last_lsn: int | None = None,
-):
-    """Driver-side snapshot commit, up to ``table.COMMIT_RETRIES``
-    attempts. Appends commute, so a CAS loss to a concurrent writer just
-    re-reads the parent and retries; the batch-id guard keeps a replayed
-    streaming epoch exactly-once (same skip the merge path uses,
-    ``cdc/merge.py`` ``commit_or_skip``)."""
     from pyspark.sql import SparkSession
 
-    from ..lakehouse import table as table_mod
-    from ..lakehouse.snapshot import CommitConflict
+    from ..lakehouse.snapshot import CommitConflict, DataFile
+    from ..lakehouse.table import LakeTable
 
-    spark = SparkSession.getActiveSession()
-    table = table_mod.LakeTable(spark, root)
-    last_err = None
-    for _ in range(table_mod.COMMIT_RETRIES):
-        snap = table.snapshot
-        if batch_id is not None and table.is_batch_committed(batch_id, snap):
-            return None  # replayed epoch: already applied, files orphan→vacuum
-        replaced = {f.bucket for f in snap.files} if overwrite else set()
-        try:
-            return table.commit_replace_buckets(
-                snap, replaced, files, batch_id=batch_id, last_lsn=last_lsn
-            )
-        except CommitConflict as exc:
-            last_err = exc
-    raise last_err
+    msgs = [m for m in messages if m is not None]
+    if not overwrite and not any(m.files for m in msgs):
+        return
+    table = LakeTable(SparkSession.getActiveSession(), root)
+    snap = table.snapshot
+    stale = {m.n_buckets for m in msgs} - {snap.n_buckets}
+    if stale:
+        raise CommitConflict(
+            f"write tasks bucketed rows for {sorted(stale)} buckets, but {root} "
+            f"has {snap.n_buckets} now (a rebucket landed): rerun the write"
+        )
+    files = [
+        DataFile(
+            path,
+            int(b),
+            int(rows),
+            m.schema_version,
+            "base" if batch_id is None else "delta",
+            json.loads(stats) if stats else None,
+        )
+        for m in msgs
+        for path, b, rows, stats in m.files
+    ]
+    if batch_id is not None:
+        lsns = [m.max_lsn for m in msgs if m.max_lsn is not None]
+        table.commit_or_skip(
+            snap, set(), files, batch_id=batch_id, last_lsn=max(lsns) if lsns else None
+        )
+    else:
+        replaced = set(range(snap.n_buckets)) if overwrite else set()
+        table.commit_replace_buckets(snap, replaced, files, retry_on_conflict=True)
 
 
-def _abort_cleanup(root: str, rel_dir: str) -> None:
-    import shutil
+def _abort_cleanup(root: str, messages) -> None:
+    """Delete the files and ``.bloom`` sidecars the tasks reported — never
+    the writer's directory, which holds earlier committed epochs. Files
+    of tasks that failed before reporting are ``vacuum``'s."""
+    from contextlib import suppress
 
-    shutil.rmtree(os.path.join(root, rel_dir), ignore_errors=True)
+    for m in filter(None, messages):
+        for path, *_ in m.files:
+            for p in (path, path + ".bloom"):
+                with suppress(FileNotFoundError):
+                    os.remove(os.path.join(root, p))
 
 
 class PanoramaWriter(DataSourceArrowWriter):
@@ -789,13 +785,10 @@ class PanoramaWriter(DataSourceArrowWriter):
         return _write_task(self.plan, iterator)
 
     def commit(self, messages):
-        files = _data_files_from_messages(messages, self.plan["schema_version"], "base")
-        if not files and not self.overwrite:
-            return
-        _commit_with_retry(self.plan["root"], files, overwrite=self.overwrite)
+        _commit_messages(self.plan["root"], messages, overwrite=self.overwrite)
 
     def abort(self, messages):
-        _abort_cleanup(self.plan["root"], self.plan["rel_dir"])
+        _abort_cleanup(self.plan["root"], messages)
 
 
 class PanoramaStreamSink(DataSourceStreamArrowWriter):
@@ -811,10 +804,14 @@ class PanoramaStreamSink(DataSourceStreamArrowWriter):
     schedule. Exactly-once: the commit registers a deterministic batch
     id ``pansink:{sink_id}:{epoch}``, so a replayed epoch after a crash
     resolves to the idempotent skip; a distinct ``sink_id`` option
-    namespaces multiple streams into one table. Combined with the
+    namespaces multiple streams into one table. The epoch's max LSN
+    moves the table's checkpoint (never backwards), so sinks that carry
+    LSNs into one table conflict like two tails (``LakeTable._rebase``).
+    Combined with the
     streaming change feed this closes the loop: lake → readStream →
     transform → writeStream → lake is end-to-end exactly-once in pure
-    ``spark.readStream/writeStream`` API."""
+    ``spark.readStream/writeStream`` API. Spark commits and aborts on a
+    fresh ``streamWriter()`` instance, so both trust only the messages."""
 
     def __init__(self, root: str, options, overwrite: bool, input_names: list[str]):
         if overwrite:
@@ -829,20 +826,12 @@ class PanoramaStreamSink(DataSourceStreamArrowWriter):
         return _write_task(self.plan, iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        files = _data_files_from_messages(messages, self.plan["schema_version"], "delta")
-        lsns = [m.max_lsn for m in messages if m is not None and m.max_lsn is not None]
-        if not files:
-            return
-        _commit_with_retry(
-            self.plan["root"],
-            files,
-            overwrite=False,
-            batch_id=f"pansink:{self.sink_id}:{batchId}",
-            last_lsn=max(lsns) if lsns else None,
+        _commit_messages(
+            self.plan["root"], messages, batch_id=f"pansink:{self.sink_id}:{batchId}"
         )
 
     def abort(self, messages, batchId: int) -> None:
-        _abort_cleanup(self.plan["root"], self.plan["rel_dir"])
+        _abort_cleanup(self.plan["root"], messages)
 
 
 # ---------------------------------------------------------------------------
@@ -887,7 +876,7 @@ class PanoramaDataSource(DataSource):
 
     def schema(self) -> StructType:
         log = SnapshotLog(self._root())
-        version = _resolve_version_option(log, self._root(), self.options)
+        version = _resolve_version_option(log, self.options)
         snap = (
             log.read_current() if version is None else log.read_version(int(version))
         )
