@@ -43,6 +43,7 @@ import time
 
 from pyspark.sql import SparkSession
 
+from .functions.typed_view import typed_view
 from .lakehouse.fileio import FileIO, LocalFileIO
 from .lakehouse.table import LakeTable, list_tables
 
@@ -127,12 +128,7 @@ def attach_catalog(
             register_data_source(spark)
             raw = spark.read.format("panorama").load(root)
             raw.createOrReplaceTempView(f"{name}_raw")
-            from .functions.typed_view import typed_view_columns
-
-            snap = table.snapshot
-            declared = snap.properties.get("field_types") or {}
-            field_types = {c: declared.get(c, "string") for c in snap.schema.names}
-            raw.select(typed_view_columns(field_types)).createOrReplaceTempView(name)
+            typed_view(table.snapshot, raw).createOrReplaceTempView(name)
         else:
             table.register_view(f"{name}_raw")
             table.register_typed_view(name)

@@ -54,6 +54,17 @@ def typed_view_columns(field_types: dict[str, str]) -> list[Column]:
     return cols
 
 
+def typed_view(snap, raw: DataFrame) -> DataFrame:
+    """A lake table's typed (silver) view over its raw frame: one
+    ``typed_view_columns`` conversion per schema column, by the declared
+    field-type map the snapshot stores (``field_types``, set by
+    extract-and-load); columns without a declared type stay string."""
+    declared = snap.properties.get("field_types") or {}
+    return raw.select(
+        typed_view_columns({c: declared.get(c, "string") for c in snap.schema.names})
+    )
+
+
 def raw_string_columns(df: DataFrame) -> list[Column]:
     """The inverse edge: render every column as the raw layer would store
     it — strings, datetimes with 6-digit microseconds (reference K1)."""

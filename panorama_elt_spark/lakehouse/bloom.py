@@ -95,9 +95,8 @@ def deserialize(text: str) -> dict:
 
 def sidecar_file_filter(io, root: str, fingerprints: list[int]):
     """File predicate over per-file key bloom sidecars — the ONE probe
-    implementation shared by ``LakeTable.read_where`` and the
-    ``panorama`` data source's ``pushFilters`` planning, routed through
-    the ``FileIO`` seam (a bare ``open()`` would silently lose bloom
+    implementation, run by ``plan_state_files`` for both read engines
+    and routed through the ``FileIO`` seam (a bare ``open()`` would silently lose bloom
     pruning on any non-POSIX backend). Keeps a file unless its sidecar
     proves none of the probe fingerprints are in it; a missing or
     unreadable sidecar keeps the file (conservative). Sidecar docs

@@ -64,8 +64,8 @@ def diff_candidate_buckets(snap_from: "Snapshot", snap_to: "Snapshot") -> set[in
     immutable, so a bucket can only differ if some manifest covering it
     appears on one side and not the other. Returns the candidate bucket
     set — O(manifest-list compare), no manifest reads. Pure metadata:
-    used by ``LakeTable`` and by the ``panorama`` data source's
-    change-feed planner (which runs without a SparkSession)."""
+    the first level of ``plan_changes``, which runs without a
+    SparkSession."""
     paths_from = {m.path for m in snap_from.manifests}
     paths_to = {m.path for m in snap_to.manifests}
     candidates: set[int] = set()
@@ -107,6 +107,39 @@ def newer_schema(snap_from: "Snapshot", snap_to: "Snapshot") -> "Snapshot":
     if snap_to.schema.schema_version >= snap_from.schema.schema_version:
         return snap_to
     return snap_from
+
+
+def plan_changes(
+    snap_from: "Snapshot", snap_to: "Snapshot"
+) -> tuple["Snapshot", bool, list[tuple[int, list["DataFile"], list["DataFile"]]]]:
+    """The one change-feed plan both engines execute (``LakeTable.changes``
+    in the JVM, the ``panorama`` data source's batch and stream feeds in
+    Arrow): ``(proj, mor, rows)``. ``proj`` is the snapshot whose schema
+    both sides project onto (``newer_schema``). Metadata-only pruning
+    picks the buckets: manifest-list compare, then the file-set diff.
+    Each row is ``(bucket, old_files, new_files)``, sorted by bucket.
+    ``mor`` marks a pure delta-append range (``is_delta_append_range``):
+    its ``new_files`` are the range's delta files, classified as LWW
+    winners against the old state. Any other range diffs the two states
+    of each changed bucket, and ``new_files`` are the bucket's files in
+    ``snap_to``."""
+    removed, added = snapshot_file_delta(snap_from, snap_to)
+    mor = is_delta_append_range(removed, added)
+    if mor:
+        buckets, new = {f.bucket for f in added}, added
+    else:
+        buckets = snapshot_changed_buckets(snap_from, snap_to)
+        new = snap_to.files_in_buckets(buckets)
+
+    def by_bucket(files: list[DataFile]) -> dict[int, list[DataFile]]:
+        out: dict[int, list[DataFile]] = {b: [] for b in buckets}
+        for f in files:
+            out[f.bucket].append(f)
+        return out
+
+    old_of, new_of = by_bucket(snap_from.files_in_buckets(buckets)), by_bucket(new)
+    rows = [(b, old_of[b], new_of[b]) for b in sorted(buckets)]
+    return newer_schema(snap_from, snap_to), mor, rows
 
 
 def snapshot_changed_buckets(snap_from: "Snapshot", snap_to: "Snapshot") -> set[int]:
@@ -368,20 +401,41 @@ class SnapshotLog:
             hinted = -1
         # the hint is advisory: a crash between publish steps can leave it
         # stale, so trust the highest committed version file.
-        best = hinted
+        best = max([hinted, *self.versions()])
+        return best if best >= 0 else None
+
+    def versions(self) -> list[int]:
+        """The versions whose ``v{N}.json`` document is in ``_meta/``."""
+        out = []
         for name in self.io.list_dir(self.meta_dir):
             if name.startswith("v") and name.endswith(".json"):
                 try:
-                    best = max(best, int(name[1:-5]))
+                    out.append(int(name[1:-5]))
                 except ValueError:
                     pass
-        return best if best >= 0 else None
+        return out
 
     def read_current(self) -> Snapshot | None:
         v = self.current_version()
         if v is None:
             return None
         return self.read_version(v)
+
+    def resolve(self, version: int | None = None, ref: str | None = None) -> Snapshot:
+        """The snapshot a read names: a numeric ``version``, a tag ``ref``
+        (``refs()``), or the current one when neither is given. Raises
+        ``ValueError`` for both, ``KeyError`` for an unknown ref and
+        ``FileNotFoundError`` when there is no table."""
+        if ref is not None:
+            if version is not None:
+                raise ValueError("pass version or ref, not both")
+            version = self.resolve_ref(ref)
+        if version is not None:
+            return self.read_version(int(version))
+        snap = self.read_current()
+        if snap is None:
+            raise FileNotFoundError(f"no lake table at {self.root}")
+        return snap
 
     def read_version(self, version: int) -> Snapshot:
         snap = Snapshot.from_json(self.io.read_text(self._version_path(version)))

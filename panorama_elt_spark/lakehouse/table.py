@@ -32,6 +32,7 @@ from __future__ import annotations
 import os
 import threading as _threading
 from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -45,10 +46,9 @@ from .snapshot import (
     ManifestEntry,
     Snapshot,
     SnapshotLog,
-    is_delta_append_range,
     newer_schema,
+    plan_changes,
     snapshot_changed_buckets,
-    snapshot_file_delta,
 )
 
 BUCKET_COL = "__bucket"
@@ -315,11 +315,10 @@ def key_hash_pruning(
     """Key-hash pruning inputs of a predicate set: ``(buckets,
     fingerprints)`` when ``eq``/``in`` predicates pin every key column to
     a finite value set, else ``None`` (scan every bucket, probe no
-    bloom). Shared by ``LakeTable.read_where`` and the ``panorama`` data
-    source's ``pushFilters``. Values are hashed with the writers' Murmur3
-    (``functions/murmur.py``), every combination in one kernel call; the
-    buckets prune the scan and the fingerprints probe the per-file bloom
-    sidecars. Pruning is refused (``None``) for key types the kernel
+    bloom); a step of ``plan_state_files``. Values are hashed with the
+    writers' Murmur3 (``functions/murmur.py``), every combination in one
+    kernel call; the buckets prune the scan and the fingerprints probe
+    the per-file bloom sidecars. Pruning is refused (``None``) for key types the kernel
     cannot hash, naive timestamps without a usable session tz
     (``normalize_key_value_sets``), more than ``MAX_PRUNE_COMBOS``
     combinations, and values that do not convert to the key type."""
@@ -355,6 +354,54 @@ def key_hash_pruning(
     except (ValueError, TypeError):
         return None  # a value the key type cannot hold: scan, never guess
     return {int(b) for b in fps.astype("int64") % snap.n_buckets}, [int(h) for h in fps]
+
+
+class StatePlan(NamedTuple):
+    """``plan_state_files``'s answer: the files a state read scans, and
+    the bucket set key-hash pruning pinned (``None``: every bucket)."""
+
+    files: list[DataFile]
+    key_buckets: set[int] | None
+
+
+def plan_state_files(
+    snap: Snapshot,
+    predicates: list[tuple[str, str, object]],
+    *,
+    session_tz: str | None,
+    io: FileIO,
+    root: str,
+    buckets: set[int] | None = None,
+    with_deltas: bool = True,
+) -> StatePlan:
+    """The one state-read plan both engines execute (``LakeTable.read`` /
+    ``read_where`` in the JVM, the ``panorama`` data source in Arrow):
+    the files of ``snap`` a read of ``(column, op, value)`` predicates
+    must scan, pruned on metadata only. In order: the ``buckets`` the
+    caller names; naive datetimes take the session time zone
+    (``normalize_pred_tz``); key-hash pruning (``key_hash_pruning``)
+    narrows the buckets; zone maps drop files whose windows exclude the
+    predicates (``_prune_files_for_state``, with its merge-on-read
+    rule); the key fingerprints probe the per-file bloom sidecars
+    through ``io`` (no false negatives); ``with_deltas=False`` drops the
+    delta files last, leaving the raw base state. Every level is
+    conservative, so a caller that re-applies the predicates gets
+    exactly the rows of an unpruned read."""
+    predicates = normalize_pred_tz(predicates, session_tz)
+    pruning = key_hash_pruning(snap, predicates, session_tz) if predicates else None
+    key_buckets, fingerprints = pruning or (None, None)
+    if key_buckets is not None:
+        buckets = key_buckets if buckets is None else buckets & key_buckets
+    files = snap.files if buckets is None else snap.files_in_buckets(buckets)
+    files = _prune_files_for_state(snap, files, predicates)
+    if fingerprints:
+        from .bloom import sidecar_file_filter
+
+        keep = sidecar_file_filter(io, root, fingerprints)
+        files = [f for f in files if keep(f)]
+    if not with_deltas:
+        files = [f for f in files if f.kind != "delta"]
+    return StatePlan(files, key_buckets)
 
 
 def _pred_column_expr(col: str, op: str, value):
@@ -781,18 +828,16 @@ class LakeTable:
 
     @classmethod
     def load(cls, spark: SparkSession, root: str, io: FileIO | None = None) -> "LakeTable":
-        """Open an existing table; raises ``UnsupportedFormatVersion`` if
-        its current snapshot predates format 3."""
+        """Open an existing table; raises ``FileNotFoundError`` if there
+        is none and ``UnsupportedFormatVersion`` if its current snapshot
+        predates format 3."""
         table = cls(spark, root, io)
-        if table.log.read_current() is None:
-            raise FileNotFoundError(f"no lake table at {root}")
+        table.log.resolve()
         return table
 
     @property
     def snapshot(self) -> Snapshot:
-        snap = self.log.read_current()
-        assert snap is not None
-        return snap
+        return self.log.resolve()
 
     # ----------------------------------------------------------------- read
 
@@ -801,17 +846,12 @@ class LakeTable:
         buckets: set[int] | None = None,
         version: int | None = None,
         with_deltas: bool = True,
-        predicates: list[tuple[str, str, object]] | None = None,
         ref: str | None = None,
         with_lsn: bool = False,
     ) -> DataFrame:
         """Current (or time-travel) state; ``buckets`` prunes the scan to
         the named buckets only — the merge path's file pruning.
-        ``predicates`` rows are ``(column, op, value)`` with op in
-        ``eq|lt|le|gt|ge|in|isnull|notnull`` — zone-map file skipping
-        only (``filestats``): files whose stats windows exclude the
-        predicate never plan a task, but surviving files' rows are NOT
-        filtered — use ``read_where`` for prune + residual filter.
+        ``read_where`` adds predicate pruning and the residual filter.
 
         Merge-on-read: if the snapshot holds delta files (written by the
         ``append_delta`` strategy), they are folded in here — base rows
@@ -819,14 +859,12 @@ class LakeTable:
         ``lww_fold`` resolves the winner per key, tombstones drop. A
         compacted table (no deltas) reads with zero shuffle.
         ``ref`` names a tag (``refs()``) instead of a numeric version."""
-        if ref is not None:
-            if version is not None:
-                raise ValueError("pass version or ref, not both")
-            version = self.resolve_ref(ref)
-        snap = self.snapshot if version is None else self.log.read_version(version)
-        return self._read_state(
-            snap, snap, buckets, with_deltas, predicates, with_lsn=with_lsn
+        snap = self.log.resolve(version, ref)
+        plan = plan_state_files(
+            snap, [], session_tz=None, io=self.io, root=self.root,
+            buckets=buckets, with_deltas=with_deltas,
         )
+        return self._read_state(snap, plan.files, with_lsn=with_lsn)
 
     def read_where(
         self,
@@ -835,66 +873,41 @@ class LakeTable:
         with_deltas: bool = True,
         ref: str | None = None,
     ) -> DataFrame:
-        """Predicate read = metadata pruning + residual filter. Two
-        metadata levels act before any file IO: key-equality predicates
-        that pin every key column resolve to a bucket set driver-side
-        (the same Murmur3 the writer used — a point lookup plans one
-        bucket), then zone maps drop files whose [min,max] windows
-        exclude the conjunction. The full predicate is re-applied on the
-        DataFrame, so pruning can never change results — only skip IO.
+        """Predicate read = metadata pruning + residual filter. The
+        metadata levels (``plan_state_files``: key buckets, zone maps,
+        key blooms) act before any file IO — a point lookup plans one
+        bucket's files that can hold the key. The full predicate is
+        re-applied on the DataFrame, so pruning can never change results
+        — only skip IO.
 
         At the 100 TB design point this is the difference between "one
         task per live file" and "one task per file that can match": CDC
         commits correlate file windows with ingestion time, so
         time-range queries plan a sliver of the table.
         """
-        if ref is not None:
-            if version is not None:
-                raise ValueError("pass version or ref, not both")
-            version = self.resolve_ref(ref)
-        snap = self.snapshot if version is None else self.log.read_version(version)
+        snap = self.log.resolve(version, ref)
         session_tz = self.spark.conf.get("spark.sql.session.timeZone")
-        predicates = normalize_pred_tz(predicates, session_tz)
-        buckets, file_filter = None, None
-        pruning = key_hash_pruning(snap, predicates, session_tz)
-        if pruning is not None:
-            # third metadata level: per-file key blooms (lakehouse/bloom.py)
-            # probed with the same fingerprints; no false negatives, so
-            # the fold's inputs never lose a row
-            buckets, fps = pruning
-            file_filter = self._bloom_file_filter(fps)
-        df = self._read_state(
-            snap, snap, buckets, with_deltas, predicates, file_filter=file_filter
+        plan = plan_state_files(
+            snap, predicates, session_tz=session_tz, io=self.io, root=self.root,
+            with_deltas=with_deltas,
         )
-        cond = None
-        for col, op, value in predicates:
+        df = self._read_state(snap, plan.files)
+        cond = None  # the residual filter, with the planner's tz rule
+        for col, op, value in normalize_pred_tz(predicates, session_tz):
             e = _pred_column_expr(col, op, value)
             cond = e if cond is None else cond & e
         return df if cond is None else df.filter(cond)
 
-    def _bloom_file_filter(self, fingerprints: list[int]):
-        """Shared sidecar probe (``bloom.sidecar_file_filter``) bound to
-        this table's ``FileIO`` + root."""
-        from .bloom import sidecar_file_filter
-
-        return sidecar_file_filter(self.io, self.root, fingerprints)
-
     def _read_state(
-        self,
-        snap: Snapshot,
-        proj: Snapshot,
-        buckets: set[int] | None = None,
-        with_deltas: bool = True,
-        predicates: list[tuple[str, str, object]] | None = None,
-        file_filter=None,
-        with_lsn: bool = False,
+        self, proj: Snapshot, files: list[DataFile], with_lsn: bool = False
     ) -> DataFrame:
-        """``snap``'s row state projected onto ``proj``'s schema (the
-        field-id mapper reads any file under any historical schema, so
-        ``proj`` may be a *newer* snapshot than ``snap`` — the cross-
-        schema-epoch read ``changes()`` uses). ``proj.schema_history``
-        must cover every file's schema_version; any later snapshot does
-        (history accumulates monotonically).
+        """The row state of a planned file set (``plan_state_files``, or
+        one side of ``plan_changes``) projected onto ``proj``'s schema.
+        The field-id mapper reads any file under any historical schema,
+        so ``proj`` may be *newer* than the snapshot the files come from
+        — the cross-schema-epoch read ``changes()`` uses.
+        ``proj.schema_history`` must cover every file's schema_version;
+        any later snapshot does (history accumulates monotonically).
 
         Every file carries its rows' ``__op``/``__lsn`` (format 3: the
         winner's op and LSN for merge output, the event's for deltas,
@@ -906,14 +919,9 @@ class LakeTable:
         ``with_lsn=True`` (internal: the merge's resident read and the
         maintenance rewrites) keeps them and appends ``__op``/``__lsn``
         to the output so rewrites preserve both."""
-        files = snap.files if buckets is None else snap.files_in_buckets(buckets)
-        if predicates:
-            files = _prune_files_for_state(proj, files, predicates)
-        if file_filter is not None:
-            files = [f for f in files if file_filter(f)]
         delta_files = [f for f in files if f.kind == "delta"]
         state = self._read_mapped(proj, [f for f in files if f.kind == "base"])
-        if delta_files and with_deltas:
+        if delta_files:
             keys = proj.key_cols
             payload = [c for c in proj.schema.names if c not in keys]
             state = lww_fold(
@@ -1492,11 +1500,9 @@ class LakeTable:
         the exact pruning set for a change-feed scan (covers merges,
         MOR deltas, appends; a compaction rewrites files without
         changing rows, so it lands in the set but diffs to zero)."""
-        snap_from = self.log.read_version(from_version)
-        snap_to = (
-            self.snapshot if to_version is None else self.log.read_version(to_version)
+        return snapshot_changed_buckets(
+            self.log.resolve(from_version), self.log.resolve(to_version)
         )
-        return snapshot_changed_buckets(snap_from, snap_to)
 
     def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Change feed between two snapshots (the engine as a CDC
@@ -1506,8 +1512,9 @@ class LakeTable:
         (``IS NOT DISTINCT FROM``): a NULL key value is a value, so an
         update of a NULL-keyed row is a U, not a D+I pair. The I/U/D
         rule itself lives in ``lakehouse/feed.py`` (``classify_changes``,
-        shared with the data source's Arrow twin); this method only
-        picks the two sides.
+        shared with the data source's Arrow twin), and ``plan_changes``
+        (shared with the data source's feeds) picks the two sides; this
+        method only reads them.
 
         Schema epochs: when the two snapshots carry different schema
         versions, both sides are projected onto the **newer** schema via
@@ -1528,20 +1535,23 @@ class LakeTable:
         tombstones and stored LSNs: the NEW state is never
         reconstructed, and the join shrinks from full-outer of two
         O(touched-bucket) states to O(range events) winners. Any other
-        range takes the state diff (``_changes_diff``); both produce the
-        same rows (parity-tested with ``_changes_diff`` as the
-        reference)."""
-        snap = self.snapshot if to_version is None else self.log.read_version(to_version)
-        snap_from = self.log.read_version(from_version)
-        removed, added = snapshot_file_delta(snap_from, snap)
-        if not is_delta_append_range(removed, added):
-            return self._changes_diff(snap_from, snap)
-        proj = newer_schema(snap_from, snap)
+        range diffs the two states of the changed buckets; both produce
+        the same rows (parity-tested against ``_changes_diff``, an
+        independent state diff)."""
+        proj, mor, rows = plan_changes(
+            self.log.resolve(from_version), self.log.resolve(to_version)
+        )
+        old = [f for _b, files, _new in rows for f in files]
+        new = [f for _b, _old, files in rows for f in files]
         keys = proj.key_cols
+        if not mor:
+            return classify_changes(
+                self._read_state(proj, old), self._read_state(proj, new), keys
+            )
         payload = [c for c in proj.schema.names if c not in keys]
-        winners = lww_fold(self._read_mapped(proj, added), keys, payload)
-        old = self._read_state(snap_from, proj, {f.bucket for f in added}, with_lsn=True)
-        return classify_changes(old, winners, keys, range_winners=True)
+        winners = lww_fold(self._read_mapped(proj, new), keys, payload)
+        old_state = self._read_state(proj, old, with_lsn=True)
+        return classify_changes(old_state, winners, keys, range_winners=True)
 
     def _changes_diff(self, snap_from: Snapshot, snap: Snapshot) -> DataFrame:
         """changes() as a state diff: the two states, pruned to the
@@ -1552,8 +1562,8 @@ class LakeTable:
         proj = newer_schema(snap_from, snap)
         touched = snapshot_changed_buckets(snap_from, snap)
         return classify_changes(
-            self._read_state(snap_from, proj, touched),
-            self._read_state(snap, proj, touched),
+            self._read_state(proj, snap_from.files_in_buckets(touched)),
+            self._read_state(proj, snap.files_in_buckets(touched)),
             proj.key_cols,
         )
 
@@ -1702,8 +1712,7 @@ class LakeTable:
 
         if not name or "/" in name or name != name.strip():
             raise ValueError(f"invalid tag name {name!r}")
-        v = self.snapshot.version if version is None else version
-        self.log.read_version(v)  # raises if expired/nonexistent
+        v = self.log.resolve(version).version  # raises if expired/nonexistent
         refs = self.refs()
         refs[name] = v
         self.io.write_text(self.log.refs_path, json.dumps(refs, indent=1))
@@ -1890,12 +1899,9 @@ class LakeTable:
         columns without a declared type stay string (NULLIF semantics).
         The reference's ``create_datalake_view`` analogue
         (``panorama_datalake.py:372-415``)."""
-        from ..functions.typed_view import typed_view_columns
+        from ..functions.typed_view import typed_view
 
-        snap = self.snapshot
-        declared = snap.properties.get("field_types") or {}
-        field_types = {c: declared.get(c, "string") for c in snap.schema.names}
-        self.read().select(typed_view_columns(field_types)).createOrReplaceTempView(name)
+        typed_view(self.snapshot, self.read()).createOrReplaceTempView(name)
 
     def drop_view(self, name: str) -> bool:
         """K6: drop a registered view (ref ``panorama_datalake.py``
@@ -1917,17 +1923,9 @@ class LakeTable:
         cur = self.snapshot.version
         pinned = set(self.refs().values())
         removed = 0
-        for name in self.io.list_dir(self.log.meta_dir):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            try:
-                v = int(name[1:-5])
-            except ValueError:
-                continue
-            if v in pinned:
-                continue
-            if v <= cur - keep_last:
-                self.io.delete(os.path.join(self.log.meta_dir, name))
+        for v in self.log.versions():
+            if v not in pinned and v <= cur - keep_last:
+                self.io.delete(self.log._version_path(v))
                 removed += 1
         return removed
 
@@ -1941,13 +1939,7 @@ class LakeTable:
         and time travel to every *retained* version keeps working.
         Returns number of files removed."""
         live: set[str] = set()
-        for name in self.io.list_dir(self.log.meta_dir):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            try:
-                v = int(name[1:-5])
-            except ValueError:
-                continue
+        for v in self.log.versions():
             snap = self.log.read_version(v)
             live |= {os.path.join(self.root, f.path) for f in snap.files}
             live |= {os.path.join(self.root, p) for p in snap.lineage_files}

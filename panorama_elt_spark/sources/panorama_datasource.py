@@ -16,15 +16,20 @@ This is the reference's Athena-side read path re-expressed
 catalog resolves files at query time; here the snapshot log is the
 catalog and the source resolves it).
 
-Three read surfaces share one bucket-local Arrow kernel:
+Every read is planned in ``lakehouse/`` — ``SnapshotLog.resolve``
+names the snapshot, ``plan_state_files`` (``table.py``) the files of a
+state read, ``plan_changes`` (``snapshot.py``) the two sides of each
+changed bucket — by the same planners ``LakeTable.read``/``read_where``/
+``changes`` run in the JVM. This module only executes those plans in
+Arrow. Three read surfaces share one bucket-local Arrow kernel:
 
 * **state read** — ``spark.read.format("panorama").load(root)``
   (+ ``.option("version", N)`` time travel,
   ``.option("with_deltas", "false")`` raw base state);
 * **batch change feed** — ``.option("changes_from", v)`` (+ optional
   ``changes_to``): the I/U/D rows between two snapshots, byte-equal to
-  ``LakeTable.changes`` (parity-tested), including its merge-on-read
-  fast path and newer-schema projection rule;
+  ``LakeTable.changes`` (parity-tested): the same plan, with its
+  merge-on-read fast path and newer-schema projection rule;
 * **streaming change feed** — ``spark.readStream.format("panorama")
   .option("change_feed", "true").load(root)``: offsets are snapshot
   versions, each micro-batch emits ``changes(start, end)``; resumes
@@ -58,13 +63,14 @@ Scale design:
 * LWW folds and change diffs run inside each bucket partition
   (bucketing co-locates every key's rows), so MOR reads and change
   feeds need **zero shuffle** — Spark sees a plain scan;
-* key-equality filters prune buckets before any file IO via the
-  driver-side Murmur3 (``functions/murmur.py``) — a point lookup reads
-  one bucket's files only (Spark still re-applies the predicate, the
-  pushdown is pruning-only so it can never change results);
+* pushed filters prune on metadata before any file IO
+  (``plan_state_files``: key buckets via the driver-side Murmur3, zone
+  maps, key blooms) — a point lookup reads one bucket's files only
+  (Spark still re-applies the predicate, the pushdown is pruning-only
+  so it can never change results);
 * change-feed planning prunes at two metadata levels before touching
   data: manifest-list compare → changed-bucket file-set diff
-  (``snapshot.py`` ``diff_candidate_buckets``/``snapshot_changed_buckets``);
+  (``plan_changes``);
 * file bytes move as Arrow record batches (pyarrow parquet reader →
   Spark's Arrow ingest), never per-row Python.
 
@@ -78,6 +84,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field as dc_field
+from functools import cached_property
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -110,14 +117,7 @@ from ..lakehouse.fold import (
     lww_winners,
     target_fields as _target_fields,
 )
-from ..lakehouse.snapshot import (
-    Snapshot,
-    SnapshotLog,
-    is_delta_append_range,
-    newer_schema,
-    snapshot_changed_buckets,
-    snapshot_file_delta,
-)
+from ..lakehouse.snapshot import Snapshot, SnapshotLog, newer_schema, plan_changes
 
 FORMAT_NAME = "panorama"
 
@@ -259,41 +259,28 @@ def _plan_changes(
     snap_to: Snapshot,
     include_version: bool = False,
 ) -> list[ChangesPartition]:
-    """Metadata-only plan of a change-feed scan: manifest-list compare →
-    changed buckets → per-bucket (old, new-or-delta) file groups.
-    Mirrors ``LakeTable.changes``'s pruning and its merge-on-read fast
-    path (pure delta-append range ⇒ classify range winners against the
-    old state; anything rewritten ⇒ full state diff)."""
-    proj = newer_schema(snap_from, snap_to)
+    """``plan_changes``'s rows (the plan ``LakeTable.changes`` executes
+    too) as one change-feed partition per changed bucket."""
+    proj, mor, rows = plan_changes(snap_from, snap_to)
     # histories accumulate monotonically: the LATER snapshot covers all
     # schema versions either side's files can carry
     later = max(snap_from, snap_to, key=lambda s: s.version)
     target = _target_fields(proj.schema)
     histories = history_fields(later.schema_history)
-    keys = list(proj.key_cols)
-    removed, added = snapshot_file_delta(snap_from, snap_to)
-    mor = is_delta_append_range(removed, added)
-    new_by_bucket: dict[int, list] = {}
-    if mor:
-        for f in added:
-            new_by_bucket.setdefault(f.bucket, []).append(f)
-    else:
-        for b in snapshot_changed_buckets(snap_from, snap_to):
-            new_by_bucket[b] = snap_to.files_in_buckets({b})
     # a scan needs one partition: an empty range plans one empty bucket
     return [
         ChangesPartition(
             bucket=b,
-            old_files=_pack_files(snap_from.files_in_buckets({b})),
-            new_files=_pack_files(fs),
+            old_files=_pack_files(old),
+            new_files=_pack_files(new),
             mor=mor,
             root=root,
             target_fields=target,
             histories=histories,
-            key_cols=keys,
+            key_cols=list(proj.key_cols),
             version=snap_to.version if include_version else None,
         )
-        for b, fs in sorted(new_by_bucket.items() or [(-1, [])])
+        for b, old, new in rows or [(-1, [], [])]
     ]
 
 
@@ -302,16 +289,17 @@ def _plan_changes(
 # ---------------------------------------------------------------------------
 
 
-def _resolve_version_option(log: SnapshotLog, options) -> int | None:
-    """``version`` (numeric) or ``ref`` (a tag name in ``_meta/refs.json``,
-    ``LakeTable.tag``) → snapshot version; None = current."""
-    version = options.get("version")
-    ref = options.get("ref")
-    if ref is not None:
-        if version is not None:
-            raise ValueError("pass version or ref, not both")
-        return log.resolve_ref(ref)
-    return None if version is None else int(version)
+# pushed filter class -> ``(column, op, value)`` predicate op
+_PUSHED_OPS = {
+    EqualTo: "eq",
+    GreaterThan: "gt",
+    GreaterThanOrEqual: "ge",
+    LessThan: "lt",
+    LessThanOrEqual: "le",
+    In: "in",
+    IsNull: "isnull",
+    IsNotNull: "notnull",
+}
 
 
 class PanoramaReader(DataSourceReader):
@@ -320,17 +308,9 @@ class PanoramaReader(DataSourceReader):
     def __init__(self, root: str, options):
         self.root = root
         log = SnapshotLog(root)
-        if not log.exists():
-            raise FileNotFoundError(f"no lake table at {root}")
         self._io = log.io  # planning-time metadata IO (bloom sidecars)
-        version = _resolve_version_option(log, options)
-        self.snap = (
-            log.read_current() if version is None else log.read_version(int(version))
-        )
-        assert self.snap is not None
+        self.snap = log.resolve(options.get("version"), options.get("ref"))
         self.with_deltas = str(options.get("with_deltas", "true")).lower() != "false"
-        self._allowed_buckets: set[int] | None = None
-        self._key_fingerprints: list[int] | None = None
         self._preds: list[tuple[str, str, object]] = []
         try:  # session tz for naive-datetime predicate coercion
             from pyspark.sql import SparkSession
@@ -345,88 +325,55 @@ class PanoramaReader(DataSourceReader):
     # ------------------------------------------------------------ pruning
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Two metadata-level prunes from pushed predicates, both
-        planning-only (every filter returns *unhandled*, Spark re-applies
-        the full predicate, so pruning can never change results):
-
-        * **bucket pruning** — when every key column is pinned to a
-          finite value set (``EqualTo`` / ``In``), the Murmur3 bucket of
-          each combination is computed driver-side and the scan keeps
-          only those buckets' partitions — a point lookup touches one
-          bucket's files (a key's rows live only in its hash bucket,
-          the merge writes with the identical hash,
-          ``table.bucket_expr``);
-        * **zone-map file skipping** — comparison/null predicates
-          translate to ``lakehouse/filestats`` containment checks
-          against each file's manifest-stored [min,max,nulls] stats
-          (``_prune_files_for_state`` carries the merge-on-read safety
-          rule: payload predicates prune base files only).
-        """
+        """Collect pushed predicates as ``(column, op, value)`` rows for
+        ``plan_state_files`` (key buckets, zone maps, key blooms — the
+        planner ``LakeTable.read_where`` runs too). Every filter returns
+        *unhandled*: Spark re-applies the full predicate, so pruning can
+        never change results."""
         for f in filters:
-            if len(f.attribute) != 1:
+            op = _PUSHED_OPS.get(type(f))
+            if op is None or len(f.attribute) != 1:
                 continue
-            col = f.attribute[0]
-            if isinstance(f, EqualTo):
-                self._preds.append((col, "eq", f.value))
-            elif isinstance(f, GreaterThan):
-                self._preds.append((col, "gt", f.value))
-            elif isinstance(f, GreaterThanOrEqual):
-                self._preds.append((col, "ge", f.value))
-            elif isinstance(f, LessThan):
-                self._preds.append((col, "lt", f.value))
-            elif isinstance(f, LessThanOrEqual):
-                self._preds.append((col, "le", f.value))
-            elif isinstance(f, In):
-                self._preds.append((col, "in", list(f.value)))
-            elif isinstance(f, IsNull):
-                self._preds.append((col, "isnull", None))
-            elif isinstance(f, IsNotNull):
-                self._preds.append((col, "notnull", None))
-        # bucket set + bloom fingerprints (LakeTable.read_where parity);
-        # a naive timestamp normalizes with the session tz, or disables
-        # key-hash pruning rather than plan the wrong bucket
-        from ..lakehouse.table import key_hash_pruning
-
-        pruning = key_hash_pruning(self.snap, self._preds, self._session_tz)
-        if pruning is not None:
-            self._allowed_buckets, self._key_fingerprints = pruning
+            value = getattr(f, "value", None)
+            self._preds.append((f.attribute[0], op, list(value) if op == "in" else value))
         return iter(filters)  # pruning-only: Spark re-applies everything
 
     # --------------------------------------------------------- planning
 
+    def _plan(self):
+        # a naive timestamp normalizes with the session tz, or disables
+        # key-hash pruning rather than plan the wrong bucket
+        from ..lakehouse.table import plan_state_files
+
+        return plan_state_files(
+            self.snap,
+            self._preds,
+            session_tz=self._session_tz,
+            io=self._io,
+            root=self.root,
+            with_deltas=self.with_deltas,
+        )
+
+    @property
+    def _allowed_buckets(self) -> set[int] | None:
+        """The buckets the pushed key predicates pin (``None``: all)."""
+        return self._plan().key_buckets
+
     def partitions(self) -> list[InputPartition]:
         snap = self.snap
-        files = (
-            snap.files
-            if self._allowed_buckets is None
-            else snap.files_in_buckets(self._allowed_buckets)
-        )
-        if self._preds:
-            from ..lakehouse.table import _prune_files_for_state, normalize_pred_tz
-
-            files = _prune_files_for_state(
-                snap, files, normalize_pred_tz(self._preds, self._session_tz)
-            )
-        if self._key_fingerprints:
-            # bloom sidecar probe: plan only files that can hold one of
-            # the pinned keys (the SAME probe implementation
-            # LakeTable.read_where uses, routed through the FileIO seam —
-            # a bare open() would silently lose bloom pruning on any
-            # non-POSIX backend; no false negatives, a missing/unreadable
-            # sidecar keeps its file)
-            from ..lakehouse.bloom import sidecar_file_filter
-
-            keep = sidecar_file_filter(self._io, self.root, self._key_fingerprints)
-            files = [f for f in files if keep(f)]
         by_bucket: dict[int, list[tuple[str, int, str]]] = {}
-        for f in files:
-            if f.kind == "delta" and not self.with_deltas:
-                continue  # raw base state, like read(with_deltas=False)
+        for f in self._plan().files:
             by_bucket.setdefault(f.bucket, []).append(
                 (f.path, f.schema_version, f.kind)
             )
         target = _target_fields(snap.schema)
         histories = history_fields(snap.schema_history)
+
+        def part(bucket: int, files: list[tuple[str, int, str]]) -> BucketPartition:
+            return BucketPartition(
+                bucket, files, self.root, target, histories, list(snap.key_cols)
+            )
+
         # Partition grain (the 100 TB read-path scale rule): a bucket
         # needs to stay ONE partition only while it holds merge-on-read
         # deltas — the LWW fold requires every row of a key in one task.
@@ -438,40 +385,11 @@ class PanoramaReader(DataSourceReader):
         parts: list[InputPartition] = []
         for b, fs in sorted(by_bucket.items()):
             if any(kind == "delta" for _path, _sv, kind in fs):
-                parts.append(
-                    BucketPartition(
-                        bucket=b,
-                        files=fs,
-                        root=self.root,
-                        target_fields=target,
-                        histories=histories,
-                        key_cols=list(snap.key_cols),
-                    )
-                )
+                parts.append(part(b, fs))
             else:
-                parts.extend(
-                    BucketPartition(
-                        bucket=b,
-                        files=[f],
-                        root=self.root,
-                        target_fields=target,
-                        histories=histories,
-                        key_cols=list(snap.key_cols),
-                    )
-                    for f in fs
-                )
-        if not parts:  # empty table still needs one (empty) partition
-            parts = [
-                BucketPartition(
-                    bucket=-1,
-                    files=[],
-                    root=self.root,
-                    target_fields=target,
-                    histories=histories,
-                    key_cols=list(snap.key_cols),
-                )
-            ]
-        return parts
+                parts.extend(part(b, [f]) for f in fs)
+        # an empty table still needs one (empty) partition
+        return parts or [part(-1, [])]
 
     def __getstate__(self):
         # the reader is pickled to every task; read() consumes only the
@@ -508,13 +426,8 @@ class PanoramaChangesReader(DataSourceReader):
     def __init__(self, root: str, options):
         self.root = root
         log = SnapshotLog(root)
-        if not log.exists():
-            raise FileNotFoundError(f"no lake table at {root}")
-        self.snap_from = log.read_version(int(options.get("changes_from")))
-        to_v = options.get("changes_to")
-        self.snap_to = (
-            log.read_current() if to_v is None else log.read_version(int(to_v))
-        )
+        self.snap_from = log.resolve(options.get("changes_from"))
+        self.snap_to = log.resolve(options.get("changes_to"))
         self.include_version = (
             str(options.get("include_version", "false")).lower() == "true"
         )
@@ -564,8 +477,8 @@ class PanoramaStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         v0, v1 = int(start["version"]), int(end["version"])
-        snap_to = self.log.read_version(v1)
-        snap_from = snap_to if v0 >= v1 else self.log.read_version(v0)
+        snap_to = self.log.resolve(v1)
+        snap_from = snap_to if v0 >= v1 else self.log.resolve(v0)
         return _plan_changes(self.root, snap_from, snap_to, self.include_version)
 
     def read(self, partition: ChangesPartition):
@@ -811,7 +724,8 @@ class PanoramaStreamSink(DataSourceStreamArrowWriter):
     streaming change feed this closes the loop: lake → readStream →
     transform → writeStream → lake is end-to-end exactly-once in pure
     ``spark.readStream/writeStream`` API. Spark commits and aborts on a
-    fresh ``streamWriter()`` instance, so both trust only the messages."""
+    fresh ``streamWriter()`` instance, so both trust only the root and
+    the messages."""
 
     def __init__(self, root: str, options, overwrite: bool, input_names: list[str]):
         if overwrite:
@@ -819,19 +733,33 @@ class PanoramaStreamSink(DataSourceStreamArrowWriter):
                 "the panorama streaming sink is append/upsert-only "
                 "(outputMode('append')); complete mode is not supported"
             )
+        self.root = root
         self.sink_id = options.get("sink_id", "default")
-        self.plan = _writer_plan(root, input_names, delta=True, options=options)
+        self._plan_args = (input_names, options)
+
+    @cached_property
+    def plan(self) -> dict:
+        """Made (and the input columns checked against the table) on
+        first use: by the instance Spark ships to the write tasks
+        (``__getstate__``), never by the commit and abort instances,
+        which an ALTER since the tasks ran would otherwise fail."""
+        input_names, options = self._plan_args
+        return _writer_plan(self.root, input_names, delta=True, options=options)
+
+    def __getstate__(self):
+        # the tasks get a plan checked on the driver before any file is written
+        return {**self.__dict__, "plan": self.plan}
 
     def write(self, iterator):
         return _write_task(self.plan, iterator)
 
     def commit(self, messages, batchId: int) -> None:
         _commit_messages(
-            self.plan["root"], messages, batch_id=f"pansink:{self.sink_id}:{batchId}"
+            self.root, messages, batch_id=f"pansink:{self.sink_id}:{batchId}"
         )
 
     def abort(self, messages, batchId: int) -> None:
-        _abort_cleanup(self.plan["root"], messages)
+        _abort_cleanup(self.root, messages)
 
 
 # ---------------------------------------------------------------------------
@@ -876,12 +804,7 @@ class PanoramaDataSource(DataSource):
 
     def schema(self) -> StructType:
         log = SnapshotLog(self._root())
-        version = _resolve_version_option(log, self.options)
-        snap = (
-            log.read_current() if version is None else log.read_version(int(version))
-        )
-        if snap is None:
-            raise FileNotFoundError(f"no lake table at {self._root()}")
+        snap = log.resolve(self.options.get("version"), self.options.get("ref"))
         if self._is_feed():
             # the batch feed projects onto the newer of its two ends, as
             # _plan_changes does; the stream pins the current schema
@@ -889,8 +812,8 @@ class PanoramaDataSource(DataSource):
             proj = snap
             if from_v is not None:
                 to_v = self.options.get("changes_to")
-                snap_to = snap if to_v is None else log.read_version(int(to_v))
-                proj = newer_schema(log.read_version(int(from_v)), snap_to)
+                snap_to = snap if to_v is None else log.resolve(to_v)
+                proj = newer_schema(log.resolve(from_v), snap_to)
             keys = list(proj.key_cols)
             struct = proj.schema.to_struct()
             version_field = (

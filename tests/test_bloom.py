@@ -16,6 +16,7 @@ from panorama_elt_spark.lakehouse.bloom import (
     deserialize,
     might_contain,
     serialize,
+    sidecar_file_filter,
 )
 
 SCHEMA = TableSchema(
@@ -72,7 +73,7 @@ def test_sidecars_written_and_pruning_bites(spark, tmp_path):
     )
     # driver-side probe: a single key keeps ~1 file of its bucket
     fp = murmur3_hash([1234], ["bigint"])
-    keep = t._bloom_file_filter([fp])
+    keep = sidecar_file_filter(t.io, t.root, [fp])
     from panorama_elt_spark.functions.murmur import bucket_of
 
     b = bucket_of([1234], ["bigint"], snap.n_buckets)

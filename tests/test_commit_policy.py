@@ -115,6 +115,38 @@ def test_sink_epoch_never_moves_the_checkpoint_backwards(spark, tmp_path):
     assert _state(t) == [(1, 1.0), (2, 2.0), (3, 3.0)]
 
 
+def test_sink_epoch_commits_and_aborts_after_an_alter(spark, tmp_path):
+    """Spark commits and aborts each epoch on a fresh ``streamWriter()``
+    built with the query's columns. An ALTER that adds a column after
+    the epoch's tasks ran must stop neither: the files are valid under
+    the schema version their message carries. A write with the old
+    columns still fails before it writes a file."""
+    root = str(tmp_path / "t")
+    t = LakeTable.create(spark, root, SCHEMA, ["id"], n_buckets=4)
+    sink = _sink(root)
+    kept = sink.write(_rows([1, 2], lsn=1))
+    dropped = sink.write(_rows([3], lsn=5))
+    t.alter_schema(
+        TableSchema(SCHEMA.fields + [Field(4, "stars", "bigint")], schema_version=2)
+    )
+    _sink(root).commit([kept], batchId=0)
+    snap = t.snapshot
+    assert snap.schema.schema_version == 2 and "pansink:default:0" in snap.committed_batches
+    assert {f.schema_version for f in snap.files} == {1}
+    assert sorted((r["id"], r["val"], r["stars"]) for r in t.read().collect()) == [
+        (1, 1.0, None),
+        (2, 2.0, None),
+    ]
+    _sink(root).abort([dropped], batchId=1)
+    assert dropped.files and not any(
+        os.path.exists(os.path.join(root, path)) for path, *_ in dropped.files
+    )
+    assert t.snapshot.version == snap.version
+    with pytest.raises(ValueError, match="write schema mismatch"):
+        _sink(root).write(_rows([4], lsn=9))
+    assert {f.path for f in t.snapshot.files} == {f.path for f in snap.files}
+
+
 def test_sink_epoch_racing_a_compaction_rebases(spark, tmp_path, monkeypatch):
     """A compaction lands between the epoch commit's snapshot read and
     its CAS: the epoch's delta files re-target the compacted snapshot

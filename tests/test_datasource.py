@@ -7,7 +7,9 @@ the key's bucket without changing results. The driver-side Murmur3 that
 powers the pruning is pinned bit-for-bit against ``F.hash``.
 """
 
+import ast
 import datetime
+import os
 import random
 
 import pytest
@@ -31,6 +33,9 @@ SCHEMA = TableSchema(
     ],
     schema_version=1,
 )
+
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "panorama_elt_spark")
 
 
 @pytest.fixture()
@@ -233,3 +238,56 @@ def test_read_parity_schema_evolution_and_time_travel(registered, spark, tmp_pat
     old = spark.read.format("panorama").option("version", v_before).load(t.root)
     assert old.schema == v1.to_struct()
     assert _sorted(old) == _sorted(t.read(version=v_before))
+
+
+# ------------------------------------------------------- planning guard
+
+
+def _called(node) -> set[str]:
+    return {
+        c.func.id if isinstance(c.func, ast.Name) else getattr(c.func, "attr", None)
+        for c in ast.walk(node)
+        if isinstance(c, ast.Call)
+    }
+
+
+def test_reads_are_planned_only_in_lakehouse():
+    """The data source executes the plans ``SnapshotLog.resolve``,
+    ``plan_state_files`` and ``plan_changes`` make; ``LakeTable`` runs
+    the same ones. A pruning or snapshot-resolution call in the source
+    would be a second planner that drifts. Its writer resolves the
+    current snapshot it writes under (``_writer_plan``)."""
+    planning = {
+        "files_in_buckets", "_prune_files_for_state", "key_hash_pruning",
+        "sidecar_file_filter", "snapshot_file_delta", "is_delta_append_range",
+        "snapshot_changed_buckets", "resolve_ref", "read_version", "read_current",
+    }
+    with open(os.path.join(PKG, "sources", "panorama_datasource.py")) as fh:
+        tree = ast.parse(fh.read())
+    sites = set()
+    for fn in ast.walk(tree):
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            sites |= {(fn.name, name) for name in _called(fn) & planning}
+    assert sites == {("_writer_plan", "read_current")}
+
+    def resolves_current(node) -> bool:
+        return "read_current" in _called(node) or any(
+            isinstance(n, ast.Attribute) and n.attr == "snapshot" for n in ast.walk(node)
+        )
+
+    ternaries = []
+    for dirpath, _dirs, names in os.walk(PKG):
+        for name in names:
+            if name.endswith(".py"):
+                with open(os.path.join(dirpath, name)) as fh:
+                    tree = ast.parse(fh.read())
+                ternaries += [
+                    ast.unparse(n)
+                    for n in ast.walk(tree)
+                    if isinstance(n, ast.IfExp)
+                    and any(
+                        "read_version" in _called(one) and resolves_current(other)
+                        for one, other in ((n.body, n.orelse), (n.orelse, n.body))
+                    )
+                ]
+    assert ternaries == []

@@ -330,3 +330,35 @@ def test_datasource_zone_skip_and_parity(spark, tmp_path):
         .count()
     )
     assert got == 500
+
+    # one planner: read_where scans exactly the files the source plans,
+    # with merge-on-read deltas in one bucket
+    from urllib.parse import urlparse
+
+    from pyspark.sql.datasource import EqualTo, In
+
+    from panorama_elt_spark.cdc.merge import merge_batch
+
+    ev = _frame(spark, 40).select(
+        F.lit(30).cast("long").alias("lsn"), F.lit("U").alias("op"), "id", "ts",
+        (F.col("val") + 1e6).alias("val"), "name",
+    )
+    merge_batch(t, ev.filter("id % 2 = 0"), batch_id="b1", strategy="append_delta")
+    assert t.snapshot.delta_buckets()
+    n_files = len(t.snapshot.files)
+    naive = datetime.datetime(2026, 1, 1, 1, 0)
+    cases = [
+        ([("id", "eq", 4)], [EqualTo(("id",), 4)], {}),
+        ([("id", "in", [4, 7, 9000])], [In(("id",), (4, 7, 9000))], {}),
+        ([("val", "lt", 20.0)], [LessThan(("val",), 20.0)], {}),
+        ([("ts", "lt", naive)], [LessThan(("ts",), naive)], {}),
+        ([("id", "lt", 600)], [LessThan(("id",), 600)], {"with_deltas": "false"}),
+    ]
+    for preds, filters, options in cases:
+        df = t.read_where(preds, with_deltas=options.get("with_deltas") != "false")
+        jvm = {urlparse(p).path for p in df.inputFiles()}
+        reader = PanoramaReader(root, options)
+        list(reader.pushFilters(filters))
+        ds = {f"{root}/{path}" for p in reader.partitions() for path, _sv, _k in p.files}
+        assert jvm == ds, preds
+        assert 0 < len(ds) < n_files, preds
