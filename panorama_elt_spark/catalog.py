@@ -123,15 +123,17 @@ def attach_catalog(
     views: list[str] = []
     for root in roots:
         name = os.path.basename(root.rstrip("/"))
-        table = LakeTable.load(spark, root, io)
+        # one snapshot resolution per table: both views see the same
+        # commit (the data source is pinned to its version)
+        table = LakeTable(spark, root, io)
         if use_datasource:
             register_data_source(spark)
-            raw = spark.read.format("panorama").load(root)
+            snap = table.snapshot
+            raw = spark.read.format("panorama").option("version", snap.version).load(root)
             raw.createOrReplaceTempView(f"{name}_raw")
-            typed_view(table.snapshot, raw).createOrReplaceTempView(name)
+            typed_view(snap, raw).createOrReplaceTempView(name)
         else:
-            table.register_view(f"{name}_raw")
-            table.register_typed_view(name)
+            table.register_typed_view(name, raw_name=f"{name}_raw")
         views += [f"{name}_raw", name]
     for vname, sql in (doc or {}).get("views", {}).items():
         spark.sql(f"CREATE OR REPLACE TEMP VIEW {vname} AS {sql}")

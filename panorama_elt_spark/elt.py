@@ -272,9 +272,7 @@ def create_views(spark: SparkSession, base_dir: str) -> list[str]:
     views: list[str] = []
     for root in list_tables(base_dir):
         name = os.path.basename(root.rstrip("/"))
-        table = LakeTable.load(spark, root)
-        table.register_view(f"{name}_raw")
-        table.register_typed_view(name)
+        LakeTable(spark, root).register_typed_view(name, raw_name=f"{name}_raw")
         views.append(name)
     return views
 
@@ -314,8 +312,7 @@ def extract_and_load(
                     n_buckets=settings.n_buckets,
                     field_types=field_types,
                 )
-                table.register_view(f"{name}_raw")
-                table.register_typed_view(name)
+                table.register_typed_view(name, raw_name=f"{name}_raw")
                 res.root = table.root
                 res.rows = rows
                 res.view = name

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import os
 import threading as _threading
+from collections import OrderedDict
 from contextlib import contextmanager
 from typing import NamedTuple
 
@@ -59,6 +60,9 @@ BUCKET_COL = "__bucket"
 # (cache materialisation, broadcast, Python-worker spawn) outweighs a
 # saving that scales with rows.
 SMALL_BATCH_ROWS = 100_000
+# data files the read-plan memo (``_PlanMemo``) may reference in total:
+# every memoized plan holds its relations' file listings on the driver
+PLAN_MEMO_FILES = 20_000
 # Arrow batch rows for the task writer (why: ``write_bucket_files``)
 ARROW_WRITE_BATCH = 131_072
 # buckets per manifest file: bounds a bucket rewrite's collateral
@@ -83,6 +87,66 @@ def _session_conf_lock(spark):
     # own arrow-batch pinning re-enters the same lock on the same thread
     with _CONF_LOCKS_GUARD:
         return _CONF_LOCKS.setdefault(id(spark), _threading.RLock())
+
+
+class _PlanMemo:
+    """Analyzed read plans of immutable file sets, one LRU per process.
+
+    Building a read's DataFrame is fixed JVM work per ``Dataset`` (tens
+    of ms per parquet relation), paid again on every read of a snapshot
+    that has not changed. A key names only immutable facts: the session
+    itself, the root, the projection's schema version, the planned
+    paths, and the session confs that casts bake in at analysis. Data
+    files are never rewritten in place and their paths carry a
+    per-attempt uuid, so a commit, compaction or rebucket changes the
+    key by itself; snapshot versions never enter it (``drop()`` then
+    ``create()`` restarts them). A key with no file at all is not
+    memoized, since only paths tell two tables at one root apart.
+
+    A hit returns a fresh ``Dataset`` over the stored analyzed plan, so
+    every read still optimizes, plans and executes anew: results and
+    physical plans are never shared. Bounded by ``PLAN_MEMO_FILES``
+    total referenced files, not by entry count."""
+
+    def __init__(self) -> None:
+        self._lock = _threading.Lock()
+        self._entries: OrderedDict[tuple, tuple[object, int]] = OrderedDict()
+        self.files = 0
+
+    def frame(self, spark, key: tuple, n_files: int, build) -> DataFrame:
+        with self._lock:
+            hit = self._entries.get(key)
+            if hit is not None:
+                self._entries.move_to_end(key)
+        if hit is not None:
+            jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                spark._jsparkSession, hit[0]
+            )
+            return DataFrame(jds, spark)
+        df = build()
+        if 0 < n_files <= PLAN_MEMO_FILES:
+            plan = df._jdf.queryExecution().analyzed()
+            evicted = []
+            with self._lock:
+                if key not in self._entries:
+                    self._entries[key] = (plan, n_files)
+                    self.files += n_files
+                while self.files > PLAN_MEMO_FILES:
+                    evicted.append(self._entries.popitem(last=False))
+                    self.files -= evicted[-1][1][1]
+            del evicted  # releases the JVM plans outside the lock
+        return df
+
+
+_PLAN_MEMO = _PlanMemo()
+
+
+def _side_paths(files: list[DataFile]) -> tuple:
+    """One planned side as a ``_PLAN_MEMO`` fact: its sorted base and
+    delta paths (``_state_frame`` reads the two kinds differently)."""
+    return tuple(
+        tuple(sorted(f.path for f in files if f.kind == kind)) for kind in ("base", "delta")
+    )
 
 
 @contextmanager
@@ -859,7 +923,18 @@ class LakeTable:
         ``lww_fold`` resolves the winner per key, tombstones drop. A
         compacted table (no deltas) reads with zero shuffle.
         ``ref`` names a tag (``refs()``) instead of a numeric version."""
-        snap = self.log.resolve(version, ref)
+        return self._read_snapshot(
+            self.log.resolve(version, ref), buckets, with_deltas, with_lsn
+        )
+
+    def _read_snapshot(
+        self,
+        snap: Snapshot,
+        buckets: set[int] | None = None,
+        with_deltas: bool = True,
+        with_lsn: bool = False,
+    ) -> DataFrame:
+        """``read`` of an already resolved snapshot."""
         plan = plan_state_files(
             snap, [], session_tz=None, io=self.io, root=self.root,
             buckets=buckets, with_deltas=with_deltas,
@@ -898,7 +973,30 @@ class LakeTable:
             cond = e if cond is None else cond & e
         return df if cond is None else df.filter(cond)
 
+    def _plan_key(self, proj: Snapshot, *facts) -> tuple:
+        """A ``_PLAN_MEMO`` key: ``facts`` (the read kind, its planned
+        paths and output flags) plus what every read plan depends on —
+        the casts of ``_read_mapped`` bake in the session time zone and
+        ANSI mode at analysis."""
+        conf = self.spark.conf
+        return (
+            self.spark, self.root, proj.schema.schema_version, *facts,
+            conf.get("spark.sql.session.timeZone"), conf.get("spark.sql.ansi.enabled"),
+        )
+
     def _read_state(
+        self, proj: Snapshot, files: list[DataFile], with_lsn: bool = False
+    ) -> DataFrame:
+        """``_state_frame``, built once per session for an immutable file
+        set (``_PLAN_MEMO``)."""
+        return _PLAN_MEMO.frame(
+            self.spark,
+            self._plan_key(proj, "state", _side_paths(files), with_lsn),
+            len(files),
+            lambda: self._state_frame(proj, files, with_lsn),
+        )
+
+    def _state_frame(
         self, proj: Snapshot, files: list[DataFile], with_lsn: bool = False
     ) -> DataFrame:
         """The row state of a planned file set (``plan_state_files``, or
@@ -1544,14 +1642,19 @@ class LakeTable:
         old = [f for _b, files, _new in rows for f in files]
         new = [f for _b, _old, files in rows for f in files]
         keys = proj.key_cols
-        if not mor:
-            return classify_changes(
-                self._read_state(proj, old), self._read_state(proj, new), keys
-            )
-        payload = [c for c in proj.schema.names if c not in keys]
-        winners = lww_fold(self._read_mapped(proj, new), keys, payload)
-        old_state = self._read_state(proj, old, with_lsn=True)
-        return classify_changes(old_state, winners, keys, range_winners=True)
+
+        def build() -> DataFrame:
+            if not mor:
+                return classify_changes(
+                    self._state_frame(proj, old), self._state_frame(proj, new), keys
+                )
+            payload = [c for c in proj.schema.names if c not in keys]
+            winners = lww_fold(self._read_mapped(proj, new), keys, payload)
+            old_state = self._state_frame(proj, old, with_lsn=True)
+            return classify_changes(old_state, winners, keys, range_winners=True)
+
+        key = self._plan_key(proj, "changes", _side_paths(old), _side_paths(new), mor)
+        return _PLAN_MEMO.frame(self.spark, key, len(old) + len(new), build)
 
     def _changes_diff(self, snap_from: Snapshot, snap: Snapshot) -> DataFrame:
         """changes() as a state diff: the two states, pruned to the
@@ -1562,8 +1665,8 @@ class LakeTable:
         proj = newer_schema(snap_from, snap)
         touched = snapshot_changed_buckets(snap_from, snap)
         return classify_changes(
-            self._read_state(proj, snap_from.files_in_buckets(touched)),
-            self._read_state(proj, snap.files_in_buckets(touched)),
+            self._state_frame(proj, snap_from.files_in_buckets(touched)),
+            self._state_frame(proj, snap.files_in_buckets(touched)),
             proj.key_cols,
         )
 
@@ -1892,16 +1995,23 @@ class LakeTable:
         reference's raw-layer table registration)."""
         self.read().createOrReplaceTempView(name)
 
-    def register_typed_view(self, name: str) -> None:
+    def register_typed_view(self, name: str, raw_name: str | None = None) -> None:
         """K5: register the typed (silver) view — per-column TRY-class
         conversions over the all-string raw layer, driven by the declared
         field-type map stored in the snapshot (set by extract-and-load);
         columns without a declared type stay string (NULLIF semantics).
         The reference's ``create_datalake_view`` analogue
-        (``panorama_datalake.py:372-415``)."""
+        (``panorama_datalake.py:372-415``). ``raw_name`` also registers
+        the raw frame the typed view is built over: both views come from
+        one snapshot resolution, so a commit between them cannot pair
+        one schema's typed columns with another snapshot's rows."""
         from ..functions.typed_view import typed_view
 
-        typed_view(self.snapshot, self.read()).createOrReplaceTempView(name)
+        snap = self.snapshot
+        raw = self._read_snapshot(snap)
+        if raw_name is not None:
+            raw.createOrReplaceTempView(raw_name)
+        typed_view(snap, raw).createOrReplaceTempView(name)
 
     def drop_view(self, name: str) -> bool:
         """K6: drop a registered view (ref ``panorama_datalake.py``

@@ -227,63 +227,6 @@ def minhash_lsh_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_cols: list[str],
-    *,
-    shingle_k: int = 3,
-    threshold: float = 0.1,
-) -> DataFrame:
-    """Exact n-gram (word-shingle) Jaccard near-dup pairs, blocked.
-
-    The all-pairs comparison is bounded by a conjunctive blocking key
-    (`block_cols`) — the classic block-then-verify shape: at 100 TB the
-    blocks come from a cheap first stage (LSH bucket, simhash prefix,
-    source partition) and the quadratic verify runs only inside blocks.
-    Returns (doc_a, doc_b, jaccard) with jaccard >= threshold.
-    """
-    # materialize the shingle index before the self-join: without the
-    # barrier Catalyst collapses the projection into the join condition
-    # and re-tokenizes the document once per candidate PAIR, not per row.
-    # Shingles are hashed to bigints so the per-pair intersect compares
-    # fixed-width ints, not strings; |A∪B| = |A|+|B|−|A∩B| avoids
-    # building union arrays.
-    sh = (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            *[F.col(c) for c in block_cols],
-            F.transform(
-                F.array_distinct(word_shingles(F.col(text_col), shingle_k)),
-                lambda s: md5hash56(s),
-            ).alias("sh"),
-        )
-        .filter(F.size("sh") > 0)
-    )
-    sh = track_persist(sh)
-    a, b = sh.alias("a"), sh.alias("b")
-    cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
-    cond.append(F.col("a.doc_id") < F.col("b.doc_id"))
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    pairs = (
-        a.join(b, on=cond)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            inter.alias("n_inter"),
-            (F.size(F.col("a.sh")) + F.size(F.col("b.sh"))).alias("n_sum"),
-        )
-    )
-    jac = F.round(
-        F.col("n_inter").cast("double") / (F.col("n_sum") - F.col("n_inter")), 6
-    ).alias("jaccard")
-    return (
-        pairs.select("doc_a", "doc_b", jac)
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def ngram_jaccard_pairs_lsh(
     df: DataFrame,
     id_col: str,

@@ -4,9 +4,9 @@ reference's pymysql datasource (``mysql_datasource.py``).
 The reference's duck-typed datasource protocol (``panorama_elt.py:77-98``:
 ``test_connections / get_tables / get_fields / extract_and_load``)
 becomes a thin class whose scans are ``spark.read.jdbc`` DataFrames:
-projection (P1), the incremental interval predicate (P4), partition
-equality (P5), and DISTINCT partition discovery (P6) are all pushed to
-the database by Catalyst instead of being string-formatted into SQL.
+projection (P1), the incremental interval predicate (P4) and partition
+equality (P5) are pushed to the database by Catalyst instead of being
+string-formatted into SQL.
 
 No JDBC driver jar ships in this sandbox, so ``connect``-time failures
 surface as ``JdbcUnavailable`` — the query-construction surface is fully
@@ -104,14 +104,4 @@ class JdbcSource:
         df = self.read_table(table, **kwargs)
         return df.filter(
             F.col(ts_col) >= F.current_timestamp() - F.expr(f"INTERVAL {lookback}")
-        )
-
-    def changed_partitions(
-        self, table: str, ts_col: str, lookback: str, partition_cols: list[str], **kwargs
-    ) -> DataFrame:
-        """P6: DISTINCT changed partition keys (mysql_datasource.py:271)."""
-        return (
-            self.incremental_scan(table, ts_col, lookback, **kwargs)
-            .select(*partition_cols)
-            .distinct()
         )

@@ -144,3 +144,27 @@ spark.stop()
     )
     assert r.returncode == 0, (r.stdout[-800:], r.stderr[-800:])
     assert "XSESSION views=4 rows=[('a', 1), ('b', None)]" in r.stdout
+
+
+@pytest.mark.parametrize("use_datasource", [False, True])
+def test_attach_resolves_each_table_once(spark, lake, monkeypatch, use_datasource):
+    """The raw and typed views of a table come from one snapshot
+    resolution: a commit between two resolutions could pair one
+    schema's typed columns with another snapshot's rows."""
+    from panorama_elt_spark.lakehouse.snapshot import SnapshotLog
+
+    persist_catalog(lake)
+    calls = []
+    orig = SnapshotLog.resolve
+
+    def counting(self, *args, **kw):
+        calls.append(self.root)
+        return orig(self, *args, **kw)
+
+    monkeypatch.setattr(SnapshotLog, "resolve", counting)
+    views = attach_catalog(spark, lake, use_datasource=use_datasource)
+    monkeypatch.setattr(SnapshotLog, "resolve", orig)
+    assert sorted(os.path.basename(r) for r in calls) == ["commits", "repos"]
+    typed = {tuple(r) for r in spark.table("commits").collect()}
+    assert {t[0]: t[1] for t in typed} == {"a": 1, "b": None}
+    assert set(views) == {"commits", "commits_raw", "repos", "repos_raw"}
