@@ -451,6 +451,7 @@ def merge_batch(
                     deduped.schema,
                 )
                 new_files = table.write_bucket_files(
+                    snap,
                     merged,
                     new_version,
                     pre_partitioned=True,

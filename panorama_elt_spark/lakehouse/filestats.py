@@ -191,12 +191,3 @@ def file_may_match(
                 return False
     return True
 
-
-def prune_files(files, preds, types_by_key) -> list:
-    """The planner entry point: the subset of ``files`` (DataFile-likes
-    with ``.stats``/``.rows``) that may hold rows matching ``preds``."""
-    if not preds:
-        return list(files)
-    return [
-        f for f in files if file_may_match(f.stats, f.rows, preds, types_by_key)
-    ]

@@ -16,9 +16,15 @@ It exists in exactly two forms, one per engine:
   partition before the exchange.
 * ``lww_winners`` — the Arrow form, for executor-side kernels that hold a
   whole bucket (bucketing co-locates every row of a key): the data
-  source's reads and change feeds and the bucket-local merge. Its input
-  comes from ``load_projected``, which maps every file onto the current
-  schema by field id.
+  source's reads and change feeds and the bucket-local merge. One stable
+  sort by ``__lsn`` and one order-keeping group-by pick each key's first
+  row, all in Arrow. Its input comes from ``load_projected``, which maps
+  every file onto the current schema by field id.
+
+Each engine reads a planned file set the same way: read every file
+(base and delta alike, at their stored system columns), fold only if the
+set holds a delta, then drop tombstones unless the caller keeps
+``__op``/``__lsn``.
 
 LSNs are unique per key by contract; a duplicated ``(key, lsn)`` is an
 at-least-once redelivery with an identical payload, so any of its rows
@@ -122,48 +128,17 @@ def lww_winners(tbl, key_cols: list[str]):
     """One winner row per key by max ``__lsn`` (keeps ``__op``) — the
     Arrow twin of ``lww_fold``, run inside one bucket.
 
-    The equality join against the per-key max matches one row per key
-    unless a ``(key, lsn)`` pair repeats; then one row per key is kept.
-
-    NULL keys: Arrow joins never match null keys, so rows with a NULL
-    key column would silently vanish from the join while ``lww_fold``
-    groups nulls and keeps them. Null-keyed rows are split off and
-    folded group-wise in pandas (sort by ``__lsn`` desc +
-    ``drop_duplicates``, which treats nulls as equal — Spark's groupBy
-    semantics), then concatenated back — parity at zero cost on the
-    no-null hot path.
-    """
-    import pyarrow as pa
+    A stable descending sort on ``__lsn`` puts each key's winner first;
+    a single-threaded group-by keeps the first row index per key, and
+    one ``take`` gathers the winners. Arrow groups NULL key values like
+    any other value (``lww_fold``'s ``groupBy`` semantics), and a
+    duplicated ``(key, lsn)`` keeps one row. ``skip_nulls=False`` pins
+    ``first`` to the first row in sort order."""
     import pyarrow.compute as pc
 
-    null_mask = None
-    for k in key_cols:
-        m = pc.is_null(tbl[k])
-        null_mask = m if null_mask is None else pc.or_(null_mask, m)
-    null_part = None
-    if null_mask is not None and pc.any(null_mask).as_py():
-        import pandas as pd
-
-        df = tbl.filter(null_mask).to_pandas(types_mapper=pd.ArrowDtype)
-        df = df.sort_values("__lsn", ascending=False, kind="stable").drop_duplicates(
-            subset=key_cols
-        )
-        null_part = pa.Table.from_pandas(df, preserve_index=False).select(
-            tbl.column_names
-        ).cast(tbl.schema)
-        tbl = tbl.filter(pc.invert(null_mask))
-    agg = tbl.group_by(key_cols).aggregate([("__lsn", "max")])
-    joined = tbl.join(agg, keys=key_cols, join_type="inner")
-    winners = joined.filter(pc.equal(joined["__lsn"], joined["__lsn_max"]))
-    if len(winners) > len(agg):  # (key, lsn) tie — keep one row per key
-        import pandas as pd
-
-        df = winners.to_pandas(types_mapper=pd.ArrowDtype)
-        winners = pa.Table.from_pandas(
-            df.drop_duplicates(subset=key_cols), preserve_index=False
-        )
-    if null_part is not None and len(null_part):
-        winners = pa.concat_tables(
-            [winners.select(tbl.column_names).cast(tbl.schema), null_part]
-        )
-    return winners
+    order = pc.sort_indices(tbl, [("__lsn", "descending")])
+    ranked = tbl.select(key_cols).take(order).append_column("__i", order)
+    first = ranked.group_by(key_cols, use_threads=False).aggregate(
+        [("__i", "first", pc.ScalarAggregateOptions(skip_nulls=False))]
+    )
+    return tbl.take(first["__i_first"])

@@ -142,11 +142,9 @@ _PLAN_MEMO = _PlanMemo()
 
 
 def _side_paths(files: list[DataFile]) -> tuple:
-    """One planned side as a ``_PLAN_MEMO`` fact: its sorted base and
-    delta paths (``_state_frame`` reads the two kinds differently)."""
-    return tuple(
-        tuple(sorted(f.path for f in files if f.kind == kind)) for kind in ("base", "delta")
-    )
+    """One planned side as a ``_PLAN_MEMO`` fact: its sorted paths (a
+    path's kind never changes — each file is registered once)."""
+    return tuple(sorted(f.path for f in files))
 
 
 @contextmanager
@@ -224,7 +222,7 @@ def _stat_columns(snap: "Snapshot", df_columns: list[str]) -> list[tuple[str, st
 def _prune_files_for_state(
     snap: "Snapshot", files: list["DataFile"], predicates: list[tuple[str, str, object]]
 ) -> list["DataFile"]:
-    """Zone-map file skipping for a state read: ``filestats.prune_files``
+    """Zone-map file skipping for a state read: ``filestats.file_may_match``
     containment plus the merge-on-read safety rule. Key-column
     predicates prune ANY file — a key's value is identical in every row
     and file that holds the key, so a file whose key window excludes the
@@ -1017,14 +1015,11 @@ class LakeTable:
         ``with_lsn=True`` (internal: the merge's resident read and the
         maintenance rewrites) keeps them and appends ``__op``/``__lsn``
         to the output so rewrites preserve both."""
-        delta_files = [f for f in files if f.kind == "delta"]
-        state = self._read_mapped(proj, [f for f in files if f.kind == "base"])
-        if delta_files:
+        state = self._read_mapped(proj, files)
+        if any(f.kind == "delta" for f in files):
             keys = proj.key_cols
             payload = [c for c in proj.schema.names if c not in keys]
-            state = lww_fold(
-                state.unionByName(self._read_mapped(proj, delta_files)), keys, payload
-            )
+            state = lww_fold(state, keys, payload)
         if with_lsn:
             return state
         return state.filter(F.col("__op") != "D").drop("__op", "__lsn")
@@ -1080,21 +1075,22 @@ class LakeTable:
 
     def write_bucket_files(
         self,
+        snap: Snapshot,
         df: DataFrame,
         new_version: int,
         *,
         pre_partitioned: bool = False,
         kind: str = "base",
         size_hint_rows: int | None = None,
-        sort_within: list[str] | None = None,
         sort_exprs: list | None = None,
         max_rows_per_file: int | None = None,
         n_buckets_override: int | None = None,
     ) -> list[DataFile]:
-        """Write ``df`` (current-schema columns plus the ``__op``/``__lsn``
+        """Write ``df`` (``snap``'s schema columns plus the ``__op``/``__lsn``
         system columns every file carries) hash-partitioned by bucket
         into a per-attempt unique directory ``data/s{version}-{attempt}/``;
-        returns the DataFile entries.
+        returns the DataFile entries. ``snap`` is the parent the commit
+        names, so the files carry its schema version and bucket layout.
 
         Unique-per-attempt dirs close the concurrent same-version race:
         two writers retrying the same batch can never observe (or
@@ -1124,7 +1120,6 @@ class LakeTable:
         roll a file at ``max_rows_per_file`` rows (the JVM writer via
         ``maxRecordsPerFile``), so a sorted rewrite's files carry
         disjoint zone-map windows either way."""
-        snap = self.snapshot
         import uuid
 
         if not {"__op", "__lsn"} <= set(df.columns):
@@ -1136,14 +1131,13 @@ class LakeTable:
         out = df.withColumn(BUCKET_COL, bucket_expr(snap.key_cols, n_buckets))
         if not pre_partitioned:
             out = out.repartition(min(n_buckets, 64), F.col(BUCKET_COL))
-        if sort_within or sort_exprs:
+        if sort_exprs:
             # cluster rows inside each bucket partition (one Tungsten
             # sort, no extra exchange) so the rolled files' zone maps
             # carry disjoint (or narrow, for a z-order key) windows on
             # the sort columns; ``sort_exprs`` are evaluated for the
             # sort only, never materialized into the files
-            keys = sort_exprs or [F.col(c) for c in sort_within]
-            out = out.sortWithinPartitions(F.col(BUCKET_COL), *keys)
+            out = out.sortWithinPartitions(F.col(BUCKET_COL), *sort_exprs)
         schema_version = snap.schema.schema_version
         task_write = root_is_shared_posix(self.root) and (
             size_hint_rows is None or size_hint_rows >= SMALL_BATCH_ROWS
@@ -1263,7 +1257,7 @@ class LakeTable:
         file-roll and bucket-count options)."""
         if events is None and all(f.kind == "base" for f in files):
             return self.write_bucket_files(
-                self._read_mapped(snap, files), new_version, **write_kw
+                snap, self._read_mapped(snap, files), new_version, **write_kw
             )
         rows = self._read_mapped(snap, files) if files else None
         if events is not None:
@@ -1273,6 +1267,7 @@ class LakeTable:
         n_buckets = write_kw.get("n_buckets_override") or snap.n_buckets
         with _pinned_shuffle(self.spark, n_buckets):
             return self.write_bucket_files(
+                snap,
                 lww_fold(rows, keys, payload),
                 new_version,
                 pre_partitioned=True,
@@ -1282,7 +1277,9 @@ class LakeTable:
     def append(self, df: DataFrame) -> Snapshot:
         """Plain append (initial load path)."""
         snap = self.snapshot
-        new_files = self.write_bucket_files(_appended_rows(df, snap), snap.version + 1)
+        new_files = self.write_bucket_files(
+            snap, _appended_rows(df, snap), snap.version + 1
+        )
         return self._commit_attempt(snap, set(), new_files)
 
     def overwrite(self, df: DataFrame, *, properties: dict | None = None) -> Snapshot:
@@ -1294,7 +1291,9 @@ class LakeTable:
         Replacing every bucket reads no parent manifest.
         """
         snap = self.snapshot
-        new_files = self.write_bucket_files(_appended_rows(df, snap), snap.version + 1)
+        new_files = self.write_bucket_files(
+            snap, _appended_rows(df, snap), snap.version + 1
+        )
         return self._commit_attempt(
             snap, set(range(snap.n_buckets)), new_files, properties=properties
         )
@@ -1644,14 +1643,12 @@ class LakeTable:
         keys = proj.key_cols
 
         def build() -> DataFrame:
-            if not mor:
-                return classify_changes(
-                    self._state_frame(proj, old), self._state_frame(proj, new), keys
-                )
-            payload = [c for c in proj.schema.names if c not in keys]
-            winners = lww_fold(self._read_mapped(proj, new), keys, payload)
-            old_state = self._state_frame(proj, old, with_lsn=True)
-            return classify_changes(old_state, winners, keys, range_winners=True)
+            return classify_changes(
+                self._state_frame(proj, old, with_lsn=mor),
+                self._state_frame(proj, new, with_lsn=mor),
+                keys,
+                range_winners=mor,
+            )
 
         key = self._plan_key(proj, "changes", _side_paths(old), _side_paths(new), mor)
         return _PLAN_MEMO.frame(self.spark, key, len(old) + len(new), build)
@@ -1874,7 +1871,7 @@ class LakeTable:
             snap,
             snap.files,
             snap.version + 1,
-            sort_within=sort_by,
+            sort_exprs=[F.col(c) for c in sort_by] if sort_by else None,
             max_rows_per_file=max_rows_per_file,
             n_buckets_override=n_buckets,
         )
@@ -1969,8 +1966,9 @@ class LakeTable:
             sort_exprs = [zorder_key(sort_by, types, bounds)]
         elif layout != "linear":
             raise ValueError(f"unknown layout {layout!r}")
+        elif sort_by:
+            sort_exprs = [F.col(c) for c in sort_by]
         write_kw = dict(
-            sort_within=None if sort_exprs else sort_by,
             sort_exprs=sort_exprs,
             max_rows_per_file=max_rows_per_file,
             size_hint_rows=sum(f.rows for f in files) if sort_by is None else None,

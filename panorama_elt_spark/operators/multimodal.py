@@ -5,16 +5,10 @@ struct; decode / feature-extraction runs as Arrow-batched pandas
 functions over ``mapInPandas`` — the real Spark-side plumbing (schema,
 batching, partitioning) with the codec itself stubbed, because no
 image/audio libraries exist in this environment.
-
-The stub is explicit: ``decode_image`` raises ``NotImplementedError``
-unless given the deterministic fake codec, which derives features from
-the bytes alone (length, sha256, a fake 8-dim "embedding") so the
-pipeline is fully testable and oracle-checkable.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -41,28 +35,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("fake_dim0", T.DoubleType()),
     ]
 )
-
-
-def decode_image(payload: bytes) -> object:
-    """Real codec hook — not available in this environment."""
-    raise NotImplementedError(
-        "image decoding requires a codec library (PIL/opencv) not present; "
-        "use fake_features for deterministic testing"
-    )
-
-
-def fake_features(payload_series: pd.Series) -> pd.DataFrame:
-    """Deterministic stand-in for decode+extract: vectorized over the
-    Arrow batch (pandas ops, no Spark-side row loop)."""
-    digests = payload_series.map(lambda b: hashlib.sha256(b).hexdigest())
-    return pd.DataFrame(
-        {
-            "byte_len": payload_series.map(len).astype("int64"),
-            "digest": digests,
-            # first 8 hex chars as a fake scalar feature, scaled to [0,1)
-            "fake_dim0": digests.str.slice(0, 8).map(lambda h: int(h, 16) / 16**8),
-        }
-    )
 
 
 def documents_as_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

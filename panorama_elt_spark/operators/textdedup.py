@@ -290,44 +290,11 @@ def ngram_jaccard_pairs_lsh(
     return pairs.select("doc_a", "doc_b", jac).filter(F.col("jaccard") >= threshold)
 
 
-def simhash16(text: Column) -> Column:
-    """16-bit SimHash over word tokens: bit b is set iff the sum of
-    (+1/-1) votes from each token's hash bit b is positive.
-
-    Single pass: one ``aggregate`` folds the token-hash array into an
-    array of 16 vote counters (a per-bit ``aggregate`` would re-evaluate
-    the tokenize+md5 array 16 times — Catalyst does not CSE across
-    higher-order functions)."""
-    tokens = word_tokens(text)
-    th = F.transform(tokens, lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("int"))
-    votes = F.aggregate(
-        th,
-        F.array_repeat(F.lit(0), 16),
-        lambda acc, h: F.array(
-            *[
-                acc[b]
-                + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-                for b in range(16)
-            ]
-        ),
-    )
-    # single-reference chain (th → votes → weights → sum): referencing
-    # `votes[b]` 16 times would inline — and re-evaluate — the whole
-    # aggregate per bit, since HOFs are outside codegen CSE
-    weights = F.zip_with(
-        votes,
-        F.sequence(F.lit(0), F.lit(15)),
-        lambda v, b: F.when(v > 0, F.pow(F.lit(2.0), b.cast("double"))).otherwise(F.lit(0.0)),
-    )
-    return F.aggregate(weights, F.lit(0.0), lambda a, x: a + x).cast("int")
-
-
 def simhash_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, simhash) via explode + codegen'd hash aggregate — the
     fast physical shape (same as MinHash): tokens explode to rows, each
     md5 runs once, the 16 per-bit vote sums get map-side partial
-    aggregation, and no interpreted higher-order function ever runs.
-    Same values as ``simhash16``."""
+    aggregation, and no interpreted higher-order function ever runs."""
     ex = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode_outer(word_tokens(F.col(text_col))).alias("__t"),

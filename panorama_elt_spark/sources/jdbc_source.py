@@ -4,9 +4,8 @@ reference's pymysql datasource (``mysql_datasource.py``).
 The reference's duck-typed datasource protocol (``panorama_elt.py:77-98``:
 ``test_connections / get_tables / get_fields / extract_and_load``)
 becomes a thin class whose scans are ``spark.read.jdbc`` DataFrames:
-projection (P1), the incremental interval predicate (P4) and partition
-equality (P5) are pushed to the database by Catalyst instead of being
-string-formatted into SQL.
+projection (P1) and partition equality (P5) are pushed to the database
+by Catalyst instead of being string-formatted into SQL.
 
 No JDBC driver jar ships in this sandbox, so ``connect``-time failures
 surface as ``JdbcUnavailable`` — the query-construction surface is fully
@@ -17,7 +16,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 class JdbcUnavailable(RuntimeError):
@@ -95,13 +94,3 @@ class JdbcSource:
         driver jar)."""
         df = self.read_table(self.current_schema_query())
         return sorted(r[0] for r in df.collect())
-
-    def incremental_scan(
-        self, table: str, ts_col: str, lookback: str, **kwargs
-    ) -> DataFrame:
-        """P4: rows modified within the lookback interval; the filter is
-        pushed down into the database query by Catalyst."""
-        df = self.read_table(table, **kwargs)
-        return df.filter(
-            F.col(ts_col) >= F.current_timestamp() - F.expr(f"INTERVAL {lookback}")
-        )

@@ -354,11 +354,6 @@ class PanoramaReader(DataSourceReader):
             with_deltas=self.with_deltas,
         )
 
-    @property
-    def _allowed_buckets(self) -> set[int] | None:
-        """The buckets the pushed key predicates pin (``None``: all)."""
-        return self._plan().key_buckets
-
     def partitions(self) -> list[InputPartition]:
         snap = self.snap
         by_bucket: dict[int, list[tuple[str, int, str]]] = {}

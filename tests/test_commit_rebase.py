@@ -68,7 +68,7 @@ def test_compaction_rebases_over_concurrent_delta_append(spark, tmp_path):
     target = snap.delta_buckets()
     assert target
     folded = t.read(buckets=target, with_lsn=True)
-    new_files = t.write_bucket_files(folded, snap.version + 1)
+    new_files = t.write_bucket_files(snap, folded, snap.version + 1)
 
     # --- a delta batch lands BEFORE compaction commits ---
     b2 = spark.createDataFrame(
@@ -153,11 +153,11 @@ def test_rebase_refuses_rival_bucket_rewrite(spark, tmp_path):
     stale = t.snapshot
     buckets = {f.bucket for f in stale.files}
     rewritten = t.write_bucket_files(
-        t.read(buckets=buckets, with_lsn=True), stale.version + 1
+        stale, t.read(buckets=buckets, with_lsn=True), stale.version + 1
     )
     t.commit_replace_buckets(stale, buckets, rewritten)  # rival wins
     ours = t.write_bucket_files(
-        t.read(buckets=buckets, with_lsn=True).limit(0), stale.version + 1
+        stale, t.read(buckets=buckets, with_lsn=True).limit(0), stale.version + 1
     )
     with pytest.raises(CommitConflict):
         t.commit_replace_buckets(stale, buckets, ours, retry_on_conflict=True)

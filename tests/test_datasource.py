@@ -154,12 +154,13 @@ def test_point_lookup_prunes_buckets(registered, spark, tmp_path):
     # reader-level: the filter set pins both key cols -> one bucket
     r = PanoramaReader(t.root, {})
     r.pushFilters([EqualTo(("repo",), "o/r2"), EqualTo(("path",), "f7.py")])
-    assert r._allowed_buckets == {bucket_of(["o/r2", "f7.py"], ["string", "string"], 8)}
+    assert r._plan().key_buckets == {bucket_of(["o/r2", "f7.py"], ["string", "string"], 8)}
     assert len(r.partitions()) == 1
     # and an In() filter covers the union of its combos' buckets
     r2 = PanoramaReader(t.root, {})
     r2.pushFilters([EqualTo(("repo",), "o/r2"), In(("path",), ("f7.py", "f12.py"))])
-    assert r2._allowed_buckets is not None and 1 <= len(r2._allowed_buckets) <= 2
+    pinned = r2._plan().key_buckets
+    assert pinned is not None and 1 <= len(pinned) <= 2
     # end-to-end: pruned read returns exactly the matching row
     df = spark.read.format("panorama").load(t.root)
     got = df.filter((F.col("repo") == "o/r2") & (F.col("path") == "f7.py")).collect()
@@ -171,7 +172,7 @@ def test_partial_key_filter_does_not_prune(registered, spark, tmp_path):
     t.append(spark.createDataFrame(_rows(40), SCHEMA.to_struct()))
     r = PanoramaReader(t.root, {})
     r.pushFilters([EqualTo(("repo",), "o/r2")])  # path unconstrained
-    assert r._allowed_buckets is None
+    assert r._plan().key_buckets is None
 
 
 # --------------------------------------------------- merge-on-read fold

@@ -69,20 +69,27 @@ def test_jvm_and_arrow_folds_agree(spark, tmp_path):
     keys, payload = ["repo", "path"], ["body", "stars"]
     cols = keys + payload + ["__op", "__lsn"]
 
-    jvm = lww_fold(t._read_mapped(snap, files), keys, payload)
-    jvm_rows = {tuple(r[c] for c in cols) for r in jvm.collect()}
-    arrow = lww_winners(
-        load_projected(
+    def projected(file_set):
+        return load_projected(
             root,
-            [(f.path, f.schema_version, f.kind) for f in files],
+            [(f.path, f.schema_version, f.kind) for f in file_set],
             history_fields(snap.schema_history),
             target_fields(snap.schema),
-        ),
-        keys,
-    )
-    arrow_rows = {tuple(r[c] for c in cols) for r in arrow.to_pylist()}
+        )
 
-    assert jvm_rows == arrow_rows == {
+    def jvm_rows(file_set):
+        jvm = lww_fold(t._read_mapped(snap, file_set), keys, payload)
+        return {tuple(r[c] for c in cols) for r in jvm.collect()}
+
+    def arrow_rows(tbl):
+        return {tuple(r[c] for c in cols) for r in lww_winners(tbl, keys).to_pylist()}
+
+    both = projected(files)
+    # one chunk per row: the concatenated shape the bucket-local merge passes
+    chunked = pa.concat_tables([both.slice(i, 1) for i in range(len(both))])
+    assert chunked.column("__lsn").num_chunks == len(both)
+    assert jvm_rows([]) == arrow_rows(projected([])) == set()
+    assert jvm_rows(files) == arrow_rows(both) == arrow_rows(chunked) == {
         (None, "n.py", "n1", 0, "U", 4),  # NULL key groups like any value
         ("o", "k1.py", None, None, "D", 5),  # tombstone newer than an update
         ("o", "k2.py", "b2", 8, "U", 6),  # update newer than a tombstone
@@ -107,3 +114,18 @@ def test_struct_packed_fold_lives_only_in_fold_module():
                     if n:
                         hits[os.path.relpath(path, PKG)] = n
     assert hits == {os.path.join("lakehouse", "fold.py"): 1}
+
+
+def test_lakehouse_modules_do_not_import_pandas():
+    """The folds, feeds and writers stay in Arrow and the JVM; a pandas
+    hop in the lakehouse package would convert every batch twice."""
+    pattern = re.compile(r"^\s*(import pandas|from pandas\b)", re.MULTILINE)
+    root = os.path.join(PKG, "lakehouse")
+    hits = []
+    for dirpath, _dirs, names in os.walk(root):
+        for name in names:
+            if name.endswith(".py"):
+                with open(os.path.join(dirpath, name)) as fh:
+                    if pattern.search(fh.read()):
+                        hits.append(name)
+    assert hits == []

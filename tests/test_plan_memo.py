@@ -122,6 +122,47 @@ def test_unchanged_snapshot_builds_no_new_relation(spark, tmp_path, memo, relati
     assert _state(spark.table("t_raw")) == model.state()
 
 
+def test_each_side_is_one_relation_per_schema_version(spark, tmp_path, memo, relations):
+    """A planned file set is read as one parquet relation per schema
+    version, base and delta files together: a delta-holding read builds
+    one relation, and each ``changes()`` side builds one."""
+    model = Model()
+    t, _v0 = _table(spark, str(tmp_path / "t"), model)
+    v1 = t.snapshot.version
+    _merge(
+        spark, t, model, [(300 + i, "U", i, f"x{i}") for i in range(5)], "d2",
+        strategy="append_delta",
+    )
+    v2 = t.snapshot.version
+    t.compact()
+    v3 = t.snapshot.version
+    snap = t.log.resolve(v2)
+    assert len({f.schema_version for f in snap.files}) == 1
+    point = [("id", "eq", 3)]
+    planned = table_mod.plan_state_files(
+        snap, point, session_tz=spark.conf.get("spark.sql.session.timeZone"),
+        io=t.io, root=t.root,
+    )
+    assert {f.kind for f in planned.files} == {"base", "delta"}
+
+    def built(read):
+        n = len(relations)
+        df = read()
+        return len(relations) - n, df
+
+    n, df = built(lambda: t.read(version=v2))
+    assert n == 1 and _state(df) == model.state()
+    n, df = built(lambda: t.read_where(point, version=v2))
+    assert n == 1 and _state(df) == [(3, "x3")]
+    # a merge-on-read range whose old side holds base and delta files
+    assert t.log.resolve(v1).delta_buckets()
+    n, _df = built(lambda: t.changes(v1, v2))
+    assert n == 2
+    # a diff range (the compaction removed files)
+    n, _df = built(lambda: t.changes(v1, v3))
+    assert n == 2
+
+
 def test_merge_between_reads_returns_new_rows(spark, tmp_path, memo):
     model = Model()
     t, _v0 = _table(spark, str(tmp_path / "t"), model)
@@ -201,7 +242,7 @@ def test_memo_is_bounded_by_referenced_files(spark, tmp_path, memo, relations, m
     built = len(relations)
     t.read()
     t.read()
-    assert len(relations) == built + 2 * len({f.kind for f in t.snapshot.files})
+    assert len(relations) == built + 2 * len({f.schema_version for f in t.snapshot.files})
     assert memo.files <= table_mod.PLAN_MEMO_FILES
 
 

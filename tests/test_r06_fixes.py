@@ -92,21 +92,21 @@ def test_timestamp_key_point_lookup_non_utc_session(spark, tmp_path):
     reader = PanoramaReader(root, {})
     reader._session_tz = None  # the planning worker has no session
     reader.pushFilters([EqualTo(("ts",), ts_utc)])
-    assert reader._allowed_buckets == {bucket_of([ts_utc], ["timestamp"], 32)}
+    assert reader._plan().key_buckets == {bucket_of([ts_utc], ["timestamp"], 32)}
 
     # naive value + unknown tz: pruning disabled, never a wrong bucket
     naive = datetime.datetime(2024, 5, 6, 12, 0, 0)
     reader2 = PanoramaReader(root, {})
     reader2._session_tz = None
     reader2.pushFilters([EqualTo(("ts",), naive)])
-    assert reader2._allowed_buckets is None
+    assert reader2._plan().key_buckets is None
 
     # naive value + known session tz: normalized to that tz's instant
     reader3 = PanoramaReader(root, {})
     reader3._session_tz = "America/New_York"
     local_naive = datetime.datetime(2024, 5, 6, 8, 0, 0)  # == 12:00Z in EDT
     reader3.pushFilters([EqualTo(("ts",), local_naive)])
-    assert reader3._allowed_buckets == {bucket_of([ts_utc], ["timestamp"], 32)}
+    assert reader3._plan().key_buckets == {bucket_of([ts_utc], ["timestamp"], 32)}
 
     # end-to-end through a non-UTC session: pruned read still finds the row
     old_tz = spark.conf.get("spark.sql.session.timeZone")

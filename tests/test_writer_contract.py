@@ -192,4 +192,23 @@ def test_writer_rejects_rows_without_system_columns(spark, tmp_path):
     contract (e.g. a rewrite that read state without ``with_lsn``)."""
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["id"], n_buckets=4)
     with pytest.raises(ValueError, match="__op/__lsn"):
-        t.write_bucket_files(_frame(spark), 1)
+        t.write_bucket_files(t.snapshot, _frame(spark), 1)
+
+
+def test_merge_writes_under_the_parent_it_resolved(spark, tmp_path, monkeypatch):
+    """The writer takes the caller's parent snapshot: one ``auto`` merge
+    resolves the table once, so its files carry the schema version and
+    bucket count of the parent its commit names."""
+    from panorama_elt_spark.lakehouse.snapshot import SnapshotLog
+
+    t = _seeded(spark, str(tmp_path / "t"))
+    calls = []
+    resolve = SnapshotLog.resolve
+
+    def counting(self, *args, **kwargs):
+        calls.append(args)
+        return resolve(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotLog, "resolve", counting)
+    merge_batch(t, _events(spark), "b0")
+    assert len(calls) == 1
